@@ -78,12 +78,14 @@ final case class FetchConfig(
   * redirect back to the login page) it re-runs the login once and
   * retries. 404 is NOT retried — error pages are real pages the parser
   * classifies (P4/P5). A `politenessMs` floor between requests gives
-  * distributed politeness: with N fetch partitions the site sees at most
-  * N/politeness requests per ms.
+  * distributed politeness: with N open sessions the site sees at most N
+  * requests per `politenessMs`.
   *
-  * One instance per partition (see [[ProcedurePipeline.extract]]): the
-  * cookie jar and rate-limit clock are partition-local, mirroring the
-  * reference's one-browser-per-process model at executor scale.
+  * One session per non-empty fetch partition (see
+  * [[ProcedurePipeline.extract]]): `open()` logs in once per such
+  * partition, and the cookie jar and `politenessMs` clock are
+  * partition-local, mirroring the reference's one-browser-per-process
+  * model at executor scale.
   *
   * ==Contract limit — JS-rendered pages (VERDICT r16 #7)==
   * The reference drives a real headless Chrome

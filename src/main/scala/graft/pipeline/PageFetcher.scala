@@ -4,17 +4,21 @@ package graft.pipeline
   *
   * The reference drives one logged-in Selenium session sequentially
   * (`login.py:12-89`, `procedure_code.py:728,754-755` — E21/E22). Here a
-  * fetcher is instantiated *per partition* inside `mapPartitions`, so N
-  * partitions fetch in parallel with one session each; the returned HTML
-  * must already contain every tab pane the parser needs (the reference's
-  * tab clicks happen inside the fetch implementation).
+  * fetcher is deserialized *per partition* inside `mapPartitions`, so N
+  * non-empty partitions fetch in parallel with one session each; the
+  * returned HTML must already contain every tab pane the parser needs
+  * (the reference's tab clicks happen inside the fetch implementation).
+  * Pacing between requests belongs to the fetcher (e.g.
+  * `FetchConfig.politenessMs`, per session); the pipeline computes no
+  * schedule for it.
   *
   * Implementations must be Serializable-constructible on executors —
   * session state itself (cookies, driver handles) is created lazily in
   * `open()` on the executor, never serialized from the driver.
   */
 trait PageFetcher extends Serializable {
-  /** Called once per partition before any fetch — login, warmup (E22). */
+  /** Called once per non-empty partition before its first fetch — login,
+    * warmup (E22). Empty partitions never call it. */
   def open(): Unit = ()
 
   /** Fetch the fully-expanded page HTML for one code; null/None on 404
@@ -24,7 +28,8 @@ trait PageFetcher extends Serializable {
     */
   def fetch(code: String): String
 
-  /** Called once per partition after the last fetch — teardown. */
+  /** Called once for every `open()`, at task completion — teardown. Runs
+    * also when a fetch throws. */
   def close(): Unit = ()
 }
 

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,14 +42,17 @@ final case class ParsedPage(
 /** The reference main pipeline (`procedure_code.py:677-815`) restated
   * Spark-first, SURVEY §3.1/§7.1 step 6:
   *
-  *   codes -> clean (P1/P2) -> fetch (mapPartitions, per-partition
-  *   session) -> parse (E20 composite, pure) -> three projections
-  *   (code row / explode(modifiers) / explode(ndc)) -> snapshot
-  *   anti-join dedup (J1/J2) -> append sinks with empty guards (K1/P7).
+  *   codes -> clean (P1/P2) -> frontier (canonical dedup, fetch order)
+  *   -> fetch (mapPartitions, one session per non-empty partition,
+  *   paced by `politenessMs`) -> parse (E20 composite, pure) -> three
+  *   projections (code row / explode(modifiers) / explode(ndc)) ->
+  *   snapshot anti-join dedup (J1/J2) -> append sinks with empty
+  *   guards (K1/P7).
   *
   * Differences from the reference, by design:
-  *  - fetch parallelism is per-partition instead of one global browser
-  *    (the reference's single-session bottleneck, SURVEY §4);
+  *  - fetch parallelism is per host partition instead of one global
+  *    browser: distinct hosts fetch concurrently, while one host's codes
+  *    share one session, as the reference's single browser did (SURVEY §4);
   *  - the three outputs are projections of ONE parsed dataset, so the
   *    per-code python loop and its O(n²) concat accumulator disappear;
   *  - chunked incremental durability (X1) comes from partition-level
@@ -131,52 +135,50 @@ object ProcedurePipeline {
     * code's page URL (the reference's BASE_SITE + code,
     * `procedure_code.py:541`), canonicalize + dedup on the canonical
     * form ([[CrawlOps.frontierDedup]] — aliasing candidates collapse
-    * BEFORE any fetch is spent on them), and attach the per-host
-    * politeness schedule ([[CrawlOps.politenessSchedule]]) in seeded
-    * hash order (the dp31 deterministic-order convention).
+    * BEFORE any fetch is spent on them), and attach `_ord`, a seeded
+    * hash of the canonical URL that fixes the fetch order within a host
+    * (the dp31 deterministic-order convention). No schedule column is
+    * computed: pacing is the fetcher's own per-session
+    * `FetchConfig.politenessMs`. The plan is lazy; building it runs no job.
     *
-    * @return [code, canonical_url, host, seq, fetch_at_ms]
+    * @return [code, canonical_url, host, _ord]
     */
-  def frontierSchedule(codes: DataFrame, baseSite: String,
-      delayMs: Long = 1000L): DataFrame = {
+  def frontierSchedule(codes: DataFrame, baseSite: String): DataFrame = {
     val withUrl = CleanOps.cleanCodes(codes).select(col("code"))
       .withColumn("url", concat(lit(baseSite), col("code")))
-    val deduped = CrawlOps.frontierDedup(withUrl, "url", "code")
-      .withColumnRenamed("first_key", "code")
-      // numeric within-host order key for the two-phase rank (the
-      // prefix sum buckets on div): seeded hash of the canonical URL
-      .withColumn("_ord", expr("xxhash64(canonical_url) & 9223372036854775807"))
-    CrawlOps.politenessSchedule(deduped, "host", "_ord", delayMs)
-      .select(col("code"), col("canonical_url"), col("host"),
-        col("seq"), col("fetch_at_ms"))
+    CrawlOps.frontierDedup(withUrl, "url", "code")
+      .select(col("first_key").as("code"), col("canonical_url"), col("host"),
+        expr("xxhash64(canonical_url) & 9223372036854775807").as("_ord"))
   }
 
-  /** clean -> frontier (canonical dedup + politeness order) -> fetch ->
-    * parse. The fetch is the only side-effecting, nondeterministic
-    * stage; it lives in one mapPartitions with a per-partition session
-    * (E22 semantics). `fetchPartitions` bounds the number of concurrent
+  /** clean -> frontier (canonical dedup + fetch order) -> fetch -> parse.
+    * The fetch is the only side-effecting, nondeterministic stage; it
+    * lives in one mapPartitions with a per-partition session (E22
+    * semantics). `fetchPartitions` bounds the number of concurrent
     * sessions, and the frontier's host rides the repartition key with
-    * codes sorted by schedule slot within each partition — one
-    * partition's session visits a host serially, in schedule order
-    * (distributed politeness, SURVEY §7.3; the reference's
-    * between-request sleeps, `procedure_code.py:256-263`, become the
-    * schedule's fetch_at_ms column).
+    * codes sorted by `(host, _ord)` within each partition — one
+    * partition's session visits a host serially, in frontier order. The
+    * reference's between-request sleeps (`procedure_code.py:256-263`)
+    * are the fetcher's `politenessMs` per session.
+    *
+    * `open()` runs once per non-empty partition, so partitions that the
+    * host key leaves empty log in nowhere; `close()` runs at task
+    * completion, also when a fetch throws.
     */
   def extract(spark: SparkSession, codes: DataFrame, fetcher: PageFetcher,
       fetchPartitions: Int = 8,
       baseSite: String = "https://codes.example/"): Dataset[ParsedPage] = {
     import spark.implicits._
-    val ordered = frontierSchedule(codes, baseSite)
+    frontierSchedule(codes, baseSite)
       .repartition(fetchPartitions, col("host"))
-      .sortWithinPartitions(col("host"), col("seq"))
+      .sortWithinPartitions(col("host"), col("_ord"))
       .select("code").as[String]
-    ordered
       .mapPartitions { it =>
-        fetcher.open()
-        val out = it.map(code => (code, fetcher.fetch(code)))
-        new Iterator[(String, String)] {
-          def hasNext: Boolean = { val h = out.hasNext; if (!h) fetcher.close(); h }
-          def next(): (String, String) = out.next()
+        if (!it.hasNext) Iterator.empty
+        else {
+          fetcher.open()
+          TaskContext.get().addTaskCompletionListener[Unit](_ => fetcher.close())
+          it.map(code => (code, fetcher.fetch(code)))
         }
       }
       .flatMap { case (code, html) => parsePage(code, html) }
@@ -209,9 +211,9 @@ object ProcedurePipeline {
       // counts ride the writes as observed metrics — one pass per sink,
       // not a write plus a second counting scan
       PipelineResult(
-        ParquetSink.writeDatasetCounted(codeRows, codesOut, mode = "append"),
-        ParquetSink.writeDatasetCounted(newModifiers, modifiersOut, mode = "append"),
-        ParquetSink.writeDatasetCounted(newNdc, ndcOut, mode = "append"))
+        ParquetSink.writeDataset(codeRows, codesOut, mode = "append"),
+        ParquetSink.writeDataset(newModifiers, modifiersOut, mode = "append"),
+        ParquetSink.writeDataset(newNdc, ndcOut, mode = "append"))
     } finally parsed.unpersist()
   }
 }

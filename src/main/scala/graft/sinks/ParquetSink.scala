@@ -1,6 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Parquet sinks — reference ops K1/K2/K3 rebuilt on Spark's writer
   * (`/root/reference/crawler/src/utils/s3.py:37-63`).
@@ -20,34 +21,23 @@ object ParquetSink {
     * and the reference's skip-empty guard (`s3.py:40`). Registers the
     * table in the session catalog when `tableName` is given (the Glue
     * analog), else writes path-only.
+    *
+    * Returns the rows written, or 0 when the guard skips the write. The
+    * count rides the write itself via an [[Observation]] metric instead
+    * of a second full `count()` scan over the input. The empty guard is
+    * a limit-1 probe on the unobserved plan (so it cannot satisfy the
+    * observation early); with a cached parent it reads one row at most.
     */
   def writeDataset(df: DataFrame, path: String, mode: String = "overwrite",
-      partitionCols: Seq[String] = Nil, tableName: Option[String] = None): Boolean = {
-    if (df.isEmpty) return false // reference: "No data to load" no-op
-    var w = df.write.mode(mode).format("parquet")
+      partitionCols: Seq[String] = Nil, tableName: Option[String] = None): Long = {
+    if (df.isEmpty) return 0L // reference: "No data to load" no-op
+    val obs = Observation()
+    var w = df.observe(obs, count(lit(1)).as("n")).write.mode(mode).format("parquet")
     if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
     tableName match {
       case Some(t) => w.option("path", path).saveAsTable(t)
       case None    => w.save(path)
     }
-    true
-  }
-
-  /** K1 + row count in ONE pass: the row count rides the write itself via
-    * an [[org.apache.spark.sql.Observation]] metric instead of a second
-    * full `count()` scan over the input. The empty guard stays a limit-1
-    * probe on the unobserved plan (so it cannot satisfy the observation
-    * early); with a cached parent it reads one row at most.
-    */
-  def writeDatasetCounted(df: DataFrame, path: String, mode: String = "overwrite",
-      partitionCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.Observation
-    import org.apache.spark.sql.functions.{count, lit}
-    if (df.isEmpty) return 0L // reference: "No data to load" no-op
-    val obs = Observation()
-    var w = df.observe(obs, count(lit(1)).as("n")).write.mode(mode).format("parquet")
-    if (partitionCols.nonEmpty) w = w.partitionBy(partitionCols: _*)
-    w.save(path)
     obs.get("n").asInstanceOf[Long]
   }
 

@@ -78,10 +78,13 @@ class CrawlOpsSpec extends AnyFunSuite {
     val sched = graft.pipeline.ProcedurePipeline
       .frontierSchedule(codes, "https://site.test/codes/")
       .collect()
-    // duplicates collapse before any fetch; one host, distinct slots
+    // duplicates collapse before any fetch; one host, distinct order keys
     assert(sched.length === 2)
+    assert(sched.head.schema.fieldNames.toSeq ===
+      Seq("code", "canonical_url", "host", "_ord"))
+    assert(sched.map(_.getAs[String]("code")).sorted.toSeq === Seq("0001U", "99213"))
     assert(sched.map(_.getAs[String]("host")).distinct.toSeq === Seq("site.test"))
-    assert(sched.map(_.getAs[Long]("seq")).sorted.toSeq === Seq(1L, 2L))
-    assert(sched.map(_.getAs[Long]("fetch_at_ms")).sorted.toSeq === Seq(0L, 1000L))
+    val ords = sched.map(_.getAs[Long]("_ord"))
+    assert(ords.distinct.length === 2 && ords.forall(_ >= 0L))
   }
 }

@@ -1,8 +1,30 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+
+/** Fetcher lifecycle counters. Each task deserializes its own fetcher
+  * copy, so the counts live in this JVM-wide object (local mode runs
+  * every task in the test JVM).
+  */
+object CountingFetcher {
+  val opens = new AtomicInteger
+  val closes = new AtomicInteger
+  def reset(): Unit = { opens.set(0); closes.set(0) }
+}
+
+/** Fixture fetcher that counts `open`/`close` and throws on `failOn`. */
+final class CountingFetcher(pages: Map[String, String], failOn: Set[String] = Set.empty)
+    extends PageFetcher {
+  private val fixtures = new FixtureFetcher(pages)
+  override def open(): Unit = { CountingFetcher.opens.incrementAndGet(); () }
+  override def fetch(code: String): String =
+    if (failOn(code)) throw new IllegalStateException(s"fetch $code")
+    else fixtures.fetch(code)
+  override def close(): Unit = { CountingFetcher.closes.incrementAndGet(); () }
+}
 
 /** Golden end-to-end pipeline run over offline fixture pages
   * (SURVEY §5 test plan items 2 and 5 — no network).
@@ -46,10 +68,11 @@ class ProcedurePipelineSpec extends AnyFunSuite {
     </div>
     </body></html>"""
 
-  val fetcher = new FixtureFetcher(Map(
+  val pages = Map(
     "0042T" -> fullPage,
-    "D0001" -> deletedPage))
+    "D0001" -> deletedPage)
     // "GONE1" falls through to the fetcher's canned 404
+  val fetcher = new FixtureFetcher(pages)
 
   test("E20 parse: full page populates all three relations") {
     val parsed = ProcedurePipeline.parsePage("0042T", fullPage).get
@@ -115,6 +138,48 @@ class ProcedurePipelineSpec extends AnyFunSuite {
         p.modifier_rows.size, p.ndc_rows.size)).toSet
     assert(parse(1) == parse(4))
     assert(parse(1).map(_._1) == Set("0042T", "D0001"))
+  }
+
+  test("building extract runs no Spark job") {
+    val sc = spark.sparkContext
+    val group = s"extract-plan-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    sc.setJobGroup(group, "build extract")
+    try ProcedurePipeline.extract(spark,
+      Seq("0042T", "D0001", "GONE1").toDF("code"), fetcher, 4)
+    finally sc.clearJobGroup()
+    // job events reach the status store in order: once a later marker
+    // job is visible, any job the build started would be too
+    sc.setJobGroup(marker, "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(marker).nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty)
+  }
+
+  test("a one-host batch at fetchPartitions = 4 opens one session") {
+    CountingFetcher.reset()
+    val base = Files.createTempDirectory("graft_pipe").toString
+    val res = ProcedurePipeline.run(spark,
+      Seq("0042T", "D0001", "GONE1").toDF("code"), new CountingFetcher(pages),
+      Seq.empty[String].toDF("modifier"), Seq.empty[String].toDF("ndc_alternate_id"),
+      s"$base/codes", s"$base/modifiers", s"$base/ndc", fetchPartitions = 4)
+    assert(res == ProcedurePipeline.PipelineResult(2, 2, 2))
+    assert(CountingFetcher.opens.get == 1)
+    assert(CountingFetcher.closes.get == 1)
+  }
+
+  test("close runs once for every open when a fetch throws") {
+    CountingFetcher.reset()
+    val err = intercept[Exception] {
+      ProcedurePipeline.extract(spark, Seq("0042T", "BOOM1", "D0001").toDF("code"),
+        new CountingFetcher(pages, failOn = Set("BOOM1")), 4).collect()
+    }
+    assert(err.getMessage.contains("fetch BOOM1"))
+    assert(CountingFetcher.opens.get >= 1)
+    assert(CountingFetcher.closes.get == CountingFetcher.opens.get)
   }
 
   test("error channel swallows its own failures and records the row") {

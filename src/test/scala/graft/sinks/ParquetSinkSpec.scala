@@ -11,13 +11,22 @@ class ParquetSinkSpec extends AnyFunSuite {
   test("K1: write + append roundtrip, empty-guard skips") {
     val dir = Files.createTempDirectory("graft_sink").toString + "/t1"
     val df = Seq((1, "a"), (2, "b")).toDF("k", "v")
-    assert(ParquetSink.writeDataset(df, dir, mode = "overwrite"))
-    assert(ParquetSink.writeDataset(df, dir, mode = "append"))
+    assert(ParquetSink.writeDataset(df, dir, mode = "overwrite") == 2L)
+    assert(ParquetSink.writeDataset(df, dir, mode = "append") == 2L)
     assert(spark.read.parquet(dir).count() == 4)
     // reference `s3.py:40`: empty frame -> no write, no error
     val empty = Seq.empty[(Int, String)].toDF("k", "v")
-    assert(!ParquetSink.writeDataset(empty, dir, mode = "append"))
+    assert(ParquetSink.writeDataset(empty, dir, mode = "append") == 0L)
     assert(spark.read.parquet(dir).count() == 4)
+  }
+
+  test("K1: tableName registers the table and returns the row count") {
+    val dir = Files.createTempDirectory("graft_sink").toString + "/t5"
+    val df = Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
+    try {
+      assert(ParquetSink.writeDataset(df, dir, tableName = Some("graft_sink_k1")) == 3L)
+      assert(spark.table("graft_sink_k1").count() == 3)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_sink_k1")
   }
 
   test("K1: partitioned write lands partition directories") {
