@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every catalog query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (the driver's contract). The same line is also
@@ -27,27 +26,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle/DISK_ONLY scratch on the fastest local medium (tmpfs when
-    // available — round-18 thread dumps showed shuffle-commit file I/O
-    // on ext4 /tmp blocking 19/32 executor threads; see
-    // GraftSession.scratchDir)
-    val spark = GraftSession.withEngineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // size-scaled initial partitions, the GraftSession default
-      // promoted engine-wide (VERDICT r17 #3): derived from the measured
-      // corpus's bytes, AQE coalesces the small stages back down.
-      // SPARK_GRAFT_INITPART overrides for config A/B adjudication runs
-      // (the same diagnostic family as SPARK_GRAFT_QUERIES/_ORDER).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.get("SPARK_GRAFT_INITPART")
-          .filter(v => v.nonEmpty && v.forall(_.isDigit))
-          .getOrElse(GraftSession.initialPartitions(cpus.toInt,
-            GraftSession.dirBytes(sfDir)).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the engine session, initial partitions sized to the measured
+    // corpus's bytes (AQE coalesces the small stages back down)
+    val spark = GraftSession.local(cpus.toInt, GraftSession.dirBytes(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
     // Diagnostic knobs (VERDICT r16 #1 — attribute the local[32] drift
     // with data, not narrative): SPARK_GRAFT_QUERIES restricts BOTH the
@@ -81,8 +62,12 @@ object Bench {
     // warmup_sec, and the per-query loop below measures WARM numbers
     // ("mode":"warm" in the artifact) that are stable run-to-run.
     val tw = System.nanoTime()
-    selected.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    selected.foreach { case (name, fn) =>
+      try fn(spark, sfDir).count() catch { case e: Throwable =>
+        // stderr only: stdout carries the one JSON line
+        System.err.println(
+          s"[bench] warmup $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
     }
     val warmupSec = (System.nanoTime() - tw) / 1e9
     // Shared-artifact cost attribution (VERDICT r16 #5): the ann family

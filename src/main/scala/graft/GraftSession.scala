@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the configuration this engine assumes.
+/** Session factory with the configuration this engine assumes. It is the
+  * only caller of `SparkSession.builder` under src/main (GraftSessionSpec
+  * checks this), so the mains, the tools, the tests and perfbench all
+  * run on the same settings.
   *
   * Design notes (100 TB target):
   *  - AQE on: runtime re-planning (skew-join splitting, dynamic shuffle
@@ -65,8 +69,8 @@ object GraftSession {
     * shuffle dirs — the shuffle scratch space must be the fastest local
     * medium, and on this sandbox that is RAM-backed /dev/shm (126 GB —
     * bench-scale shuffle + DISK_ONLY footprints are ≤ a few GB; a real
-    * deployment sets spark.local.dir to its fast disks explicitly and
-    * this default never applies under spark-submit). Override with
+    * deployment sets spark.local.dir to its fast disks explicitly, and
+    * [[submitted]] keeps that value over this default). Override with
     * SPARK_GRAFT_LOCAL_DIR; empty value disables the tmpfs default.
     */
   def scratchDir: Option[String] =
@@ -135,24 +139,17 @@ object GraftSession {
   def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder = {
     val withScratch = scratchDir.fold(b)(d => b.config("spark.local.dir", d))
     withScratch.config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      // round 19, measured BOTH ways with full-catalog benches: with this
-      // TRUE, consumers of a cached relation must plan its partitioning
-      // as unknown and AQE repairs the plan per query stage at runtime —
-      // on this catalog that read total 307.9 s with the artifact-heavy
-      // families blown up 2–4× (ann16 2.5 → 8.5 s, ann18 5.9 → 11.9 s,
-      // dd06/dd13/dd23 +2–4 s each); with it FALSE (Spark's default) the
-      // InMemoryRelation exposes its partitioning STATICALLY, so the
-      // keyed materializations (Exec.materializeForSelfJoinBy /
-      // materializeLargeBy) feed same-keyed joins/aggs with no Exchange
-      // at plan time — total 245.2 s vs the 268.8 s round-start
-      // baseline, and the regressed families recovered. Kept explicit
-      // (not just Spark's default) with an env override because the
-      // keyed-handle design DEPENDS on this staying false; the
-      // partition-count adaptivity the true setting would have provided
-      // lives in Exec.materializeForSelfJoinBy's measured-size
-      // repartition instead.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
+      // Kept explicit (not just Spark's default) because the keyed-handle
+      // design depends on it: with it false the InMemoryRelation exposes
+      // its partitioning statically, so the keyed materializations
+      // (Exec.materializeForSelfJoinBy / materializeLargeBy) feed
+      // same-keyed joins/aggs with no Exchange at plan time. Measured
+      // both ways with full-catalog benches: false read 245.2 s, true
+      // read 307.9 s (consumers must plan a cached relation's
+      // partitioning as unknown; ann16 2.5 → 8.5 s, ann18 5.9 → 11.9 s).
+      // Partition-count adaptivity lives in
+      // Exec.materializeForSelfJoinBy's measured-size repartition.
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "false")
   }
 
   /** Total bytes under `path` (recursive) — the input-size probe feeding
@@ -167,6 +164,17 @@ object GraftSession {
         .mapToLong(java.nio.file.Files.size(_)).sum()
       finally s.close()
     }
+  }
+
+  /** Session for a run whose master is already set (spark-submit): the
+    * engine defaults under the submitted conf. Values the submission sets
+    * itself (`--master`, `--conf`, spark-defaults.conf; spark-submit
+    * passes them as `spark.*` system properties) win over the defaults.
+    */
+  def submitted(): SparkSession = {
+    val b = withEngineDefaults(SparkSession.builder()).appName("graft")
+    new SparkConf().getAll.foreach { case (k, v) => b.config(k, v) }
+    b.getOrCreate()
   }
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),

@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * java -cp target/scala-2.13/classes:/opt/spark/jars/'*' \
   *   <the build.sbt --add-opens list> \
   *   graft.Run <query-name> --data /path/to/tables [--out DIR] [--show N]
+  * java -cp ... graft.Run <query-name> --data DIR --explain   # plan dump
   * java -cp ... graft.Run list [pattern]     # catalog inventory
   * java -cp ... graft.Run entry              # flagship smoke query
   * }}}
@@ -22,7 +23,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The same entry point works under spark-submit on a real cluster:
   * `spark-submit --class graft.Run <jar> <query> --data s3://... --out
-  * s3://...` — GraftSession.local is only used when no master is set.
+  * s3://...` — GraftSession.local is only used when no master is set;
+  * otherwise GraftSession.submitted adds the engine defaults to the
+  * submitted conf.
   */
 object Run {
 
@@ -60,11 +63,12 @@ object Run {
     """usage: graft.Run <query-name> [--data DIR] [--out DIR] [--show N] [--explain]
       |       graft.Run list [pattern]   — print catalog query names
       |       graft.Run entry            — flagship smoke query
-      |--explain prints the optimized physical plan (explain "formatted":
-      |scan pushdowns, join strategies, whole-stage codegen spans) instead
-      |of executing. Query names: see `graft.Run list`; data dir must hold
-      |the standard parquet tables (region nation customer supplier part
-      |orders lineitem events documents embeddings).""".stripMargin
+      |--explain is the single-query plan dump: it prints the optimized
+      |physical plan (explain "formatted": scan pushdowns, join strategies,
+      |whole-stage codegen spans) instead of executing. Query names: see
+      |`graft.Run list`; data dir must hold the standard parquet tables
+      |(region nation customer supplier part orders lineitem events
+      |documents embeddings).""".stripMargin
 
   /** Testable core: resolves and executes, returns the result frame
     * (None for `list`). Session lifecycle stays in main.
@@ -102,8 +106,7 @@ object Run {
       // under spark-submit the master is already set — defer to it;
       // standalone, build the tuned local session sized to the input
       val spark =
-        if (sys.props.contains("spark.master"))
-          SparkSession.builder().appName("graft").getOrCreate()
+        if (sys.props.contains("spark.master")) GraftSession.submitted()
         else GraftSession.local(inputBytes = GraftSession.dirBytes(a.data))
       try execute(spark, a).foreach { df =>
         (a.explain, a.out) match {

@@ -40,7 +40,7 @@ object Exec {
     * input is repartitioned by `keys` and persisted, and the cached
     * handle RETAINS that partitioning (`InMemoryRelation` exposes the
     * cached plan's outputPartitioning; a `localCheckpoint` handle does
-    * NOT — measured round 19 with graft.tools.PartProbe: the
+    * NOT — ExecSpec's "forced keying co-partitions" test pins it: the
     * checkpointed side replans as a bare `Scan ExistingRDD` and
     * EnsureRequirements re-inserts the Exchange, while the persisted
     * side feeds a join/aggregate on the same key with no Exchange at

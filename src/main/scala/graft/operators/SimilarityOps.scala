@@ -139,21 +139,6 @@ object SimilarityOps {
       .where(col("sim") >= threshold)
   }
 
-  /** Diagnostic (ScaleProbe): how many same-bucket candidate pairs the
-    * near-dup join verifies at this corpus size's bucket width — the
-    * number that must grow ~linearly with n for the operator to survive
-    * a 100× scale-up.
-    */
-  def nearDupCandidateCount(df: DataFrame, targetBucket: Int = 32): Long = {
-    val ax = 0 until scaledAxisCount(df.count(), targetBucket)
-    df.select(signBucket(col("vec"), ax).as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("c"))
-      // coalesce: sum() is NULL on an empty corpus (ADVICE r9)
-      .select(coalesce(sum((col("c") * (col("c") - 1) / 2).cast("long")), lit(0L))
-        .as("pairs"))
-      .collect()(0).getLong(0)
-  }
-
   /** Per-cell mean embedding — the k-means M-step that re-estimates IVF
     * centroids from assigned vectors. One explode + one hash aggregation
     * on (cell, dim): fully partial-aggregatable, no collect, no window —

@@ -42,13 +42,6 @@ object TextOps {
     when(size(toks) === 0, lit(0d)).otherwise(nStop.cast("double") / size(toks).cast("double"))
   }
 
-  /** Mean word length (chars of non-space content / token count). */
-  def meanWordLen(text: Column): Column = {
-    val tc = tokenCount(text)
-    when(tc === 0, lit(0d)).otherwise(
-      length(regexp_replace(trim(text), "\\s+", "")).cast("double") / tc.cast("double"))
-  }
-
   /** Composite quality score in [0,1]-ish: rewards moderate length and
     * stopword presence, penalises punctuation soup. Weights are arbitrary
     * but fixed; the point is the deterministic, pushdown-friendly shape.

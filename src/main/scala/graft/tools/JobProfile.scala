@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler (round 18): run one catalog query and attribute its wall
   * time to Spark JOBS vs the DRIVER GAPS between them (planning,
@@ -18,16 +17,8 @@ object JobProfile {
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.withEngineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.GraftSession.initialPartitions(cpus.toInt,
-          graft.GraftSession.dirBytes(sfDir)).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus.toInt,
+      graft.GraftSession.dirBytes(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class Job(id: Int, start: Long, var end: Long = -1L,

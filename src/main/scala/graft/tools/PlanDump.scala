@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool (round-18 optimization evidence): dump `.explain("formatted")`
@@ -10,9 +9,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...|all>
   * }}}
   *
-  * Writes `<outDir>/<query>_<suffix>.txt`. The session mirrors Bench's
-  * configuration (same master/core/partition policy) so the captured
-  * plans are the ones the bench actually runs.
+  * Writes `<outDir>/<query>_<suffix>.txt`. The session comes from
+  * `GraftSession.local` at the same cores and corpus as graft.Bench, so
+  * the captured plans are the ones the bench runs by construction.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -24,16 +23,8 @@ object PlanDump {
       if (args.length < 3 || args(2) == "all")
         graft.SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").filter(_.nonEmpty).toSeq
-    val spark = graft.GraftSession.withEngineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        graft.GraftSession.initialPartitions(cpus.toInt,
-          graft.GraftSession.dirBytes(sfDir)).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus.toInt,
+      graft.GraftSession.dirBytes(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // SPARK_GRAFT_PLANDUMP_EXEC=1: execute each query through the noop

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool (VERDICT r3 stretch): extend the ScaleProbe curve one decade
+/** Dev tool (VERDICT r3 stretch): extend the recorded scale sweep one decade
   * past the driver-generated corpus for the five heaviest operators
   * (dd06, dp01, tx06, q51, q66) — the first point where per-row compute
   * should clear the fixed-overhead floor, turning "flat wall time" into
@@ -150,15 +150,10 @@ object Sf1Probe {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.withEngineDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val sf01 = "/root/testdata/sf0.1"
+    val spark = graft.GraftSession.local(cpus.toInt,
+      graft.GraftSession.dirBytes(sf01))
+    spark.sparkContext.setLogLevel("ERROR")
     val sf1 = "/tmp/graft_sf1"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(sf1))
     println("[sf1probe] building sf1 corpus (10x sf0.1) ...")

@@ -13,7 +13,7 @@ import graft.TestSpark
   *  - the integer k formula and its clamps (the oracle's kp CTE mirror);
   *  - the sub-bucket CASE ladder;
   *  - ~linear candidate-pair growth with corpus size (the dd05
-  *    ScaleProbe pattern applied to semantic dedup);
+  *    bucket-scaling pattern applied to semantic dedup);
   *  - the pinned per-partition bound: one dense, skewed cell cannot go
   *    quadratic because its own population drives the split;
   *  - the assignment plan: partial (map-side-combinable) argmax before

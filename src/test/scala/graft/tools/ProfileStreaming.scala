@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 
@@ -18,13 +17,8 @@ object ProfileStreaming {
                 else Seq("q51_stream_join")
     val iters = if (args.length > 2) args(2).toInt else 4
     val shufflePartitions = if (args.length > 3) args(3) else "32"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(32)
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
     spark.sparkContext.setLogLevel("ERROR")
 
     spark.streams.addListener(new StreamingQueryListener {
