@@ -74,12 +74,12 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object CosineSimilarity {
   private val FuncName = "graft_cosine_similarity"
 
-  /** Register once per session (idempotent), exposing the expression to
-    * both the Column DSL (via [[cosineNative]]) and `spark.sql`.
+  /** Register once per session, exposing the expression to both the
+    * Column DSL (via [[cosineNative]]) and `spark.sql`; a name the session
+    * already has is left as it is.
     */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FuncName, exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
+    registerOnce(spark, FuncName)(exprs => CosineSimilarity(exprs(0), exprs(1)))
 
   /** Column API over the native expression; inputs cast float→double
     * (exact) so both `array<float>` and `array<double>` embeddings work.

@@ -136,14 +136,10 @@ object HashSketches {
   }
 
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_signature",
-      exprs => MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_pack",
-      exprs => SimHashPack(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "scala_udf")
+    registerOnce(spark, "graft_minhash_signature")(exprs => MinHashSignature(
+      exprs(0), exprs(1).eval().asInstanceOf[Number].intValue()))
+    registerOnce(spark, "graft_simhash_pack")(exprs => SimHashPack(
+      exprs(0), exprs(1).eval().asInstanceOf[Number].intValue()))
   }
 
   def minhashSignature(spark: SparkSession, shingles: Column, numHashes: Int): Column = {

@@ -75,12 +75,12 @@ case class LongDotProduct(left: Expression, right: Expression)
 object LongDotProduct {
   private val FuncName = "graft_long_dot"
 
-  /** Register once per session (idempotent), exposing the expression to
-    * both the Column DSL (via [[dotNative]]) and `spark.sql`.
+  /** Register once per session, exposing the expression to both the
+    * Column DSL (via [[dotNative]]) and `spark.sql`; a name the session
+    * already has is left as it is.
     */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FuncName, exprs => LongDotProduct(exprs(0), exprs(1)), "scala_udf")
+    registerOnce(spark, FuncName)(exprs => LongDotProduct(exprs(0), exprs(1)))
 
   /** Column API over the native expression. */
   def dotNative(spark: SparkSession, a: Column, b: Column): Column = {

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * TakeOrderedAndProject (limit 1); the merge applies as a pure
   * higher-order fold over each word's symbol array, with the winning pair
   * broadcast-joined in (no driver collect in the loop). Round state is
-  * localCheckpointed (the loop discipline) so plans don't grow.
+  * localCheckpointed per round so plans don't grow.
   *
   * Determinism contract (oracle-replayable): the merge rule is the
   * textbook leftmost-greedy fold — walking a word's symbols, the current

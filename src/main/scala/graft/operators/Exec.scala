@@ -134,16 +134,8 @@ object Exec {
     materializeLarge(df.repartition(keys: _*))
 
   /** Free the pinned blocks of a [[materializeForSelfJoin]] handle that
-    * no live plan references anymore.
-    *
-    * Iterative operators (pagerank, connected components, Lloyd's
-    * rounds) checkpoint their loop state every round; without an
-    * explicit release, every superseded round's blocks stay pinned in
-    * executor storage until session end. Harmless at spec scale, but at
-    * production scale a 25-round label table leaks 25 corpus-sized
-    * copies — evicting useful cache and forcing shuffle spill, and (as a
-    * second-order effect) widening run-to-run variance under memory
-    * pressure (the q68 sf1 probe's noise signature).
+    * no live plan references anymore — without it a superseded loop
+    * round stays pinned until session end (see [[iterate]]).
     *
     * Only a DataFrame whose plan IS the checkpoint handle (root =
     * `LogicalRDD`, exactly what `localCheckpoint` returns) is released;
@@ -165,6 +157,29 @@ object Exec {
         // so projections/joins DERIVED from a handle still no-op here)
         if (df.storageLevel != StorageLevel.NONE)
           df.unpersist(blocking = false)
+    }
+
+  /** The single-state loop driver: `rounds` applications of `step`,
+    * where `step(state, r)` builds round r from round r − 1's state.
+    *
+    * Loop-state contract (the iterative operators cite it): each round
+    * is materialized with [[materializeForSelfJoin]], so plans stay one
+    * round deep and lineage is cut; only AFTER the successor is
+    * materialized is the state it replaces passed to
+    * [[releaseMaterialized]]. Without that release a 25-round label
+    * table pins 25 copies until session end, evicting useful cache and
+    * widening run-to-run variance under memory pressure. `init` is
+    * released like any other round — a no-op when it is a view derived
+    * from a caller's handle, which therefore stays pinned. With
+    * `rounds = 0` `init` comes back untouched. The caller owns the
+    * returned handle and the loop-invariant tables `step` reads.
+    */
+  def iterate(init: DataFrame, rounds: Int)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(init) { (state, r) =>
+      val next = materializeForSelfJoin(step(state, r))
+      releaseMaterialized(state)
+      next
     }
 
   /** Materialize an O(corpus)-sized table (exploded tokens, shingles)

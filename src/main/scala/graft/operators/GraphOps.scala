@@ -1,12 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** One-shot distributed graph analytics, complementing the engine's
-  * iterative graph ops (q68's damped pagerank power iterations, dd06's
-  * hash-min connected components): structural measures computed in a
-  * fixed number of joins, no convergence loop.
+/** Distributed graph analytics: structural measures computed in a
+  * fixed number of joins (triangles) and bounded-round iterations
+  * (BFS, shortest paths, label propagation, k-core, integer PageRank,
+  * HITS) — every loop runs a fixed round count, never a convergence
+  * test (dd06's connected components has the one convergence loop).
   */
 object GraphOps {
 
@@ -82,9 +83,9 @@ object GraphOps {
     * (re-expanding a visited node can only re-reach visited nodes).
     * Every round is a fixed number of shuffles on the node key — no
     * per-seed sequential state, so a million seeds batch through the
-    * same `maxRounds` joins. Loop state is fixed-width [node, dist] →
-    * localCheckpoint per round, superseded handles released (the
-    * connectedComponents memory contract).
+    * same `maxRounds` joins. Loop state is two fixed-width tables
+    * (visited, frontier), materialized and released per round as
+    * [[Exec.iterate]] does for one.
     *
     * Input edges are undirected `[uCol, vCol]`; seeds any DataFrame with
     * `seedCol`. Output: `[node, dist]`, dist 0 for seeds, one row per
@@ -135,9 +136,8 @@ object GraphOps {
     * one edge equi-join + one min-aggregation per round — the textbook
     * Bellman–Ford invariant (after r rounds, cost = cheapest over paths
     * of ≤ r edges) that an oracle replays as r unrolled UNION/min CTEs.
-    * Loop state is fixed-width [node, cost], localCheckpointed per
-    * round with superseded handles released (the connectedComponents
-    * memory contract). Costs must be non-negative integers; the caller
+    * Loop state is fixed-width [node, cost], run by [[Exec.iterate]].
+    * Costs must be non-negative integers; the caller
     * keeps cost · maxRounds inside a Long (integer micro-unit costs and
     * ≤ 16 rounds leave 2^44 headroom).
     */
@@ -153,16 +153,12 @@ object GraphOps {
       e.select(col("u").as("src"), col("v").as("dst"), col("c"))
         .unionByName(e.select(col("v").as("src"), col("u").as("dst"), col("c"))),
       col("src"))
-    var dist = Exec.materializeForSelfJoin(
+    val dist = Exec.iterate(Exec.materializeForSelfJoin(
       seeds.select(col(seedCol).cast("long").as("node")).distinct()
-        .withColumn("cost", lit(0L)))
-    for (_ <- 1 to maxRounds) {
+        .withColumn("cost", lit(0L))), maxRounds) { (dist, _) =>
       val relaxed = dist.join(und, dist("node") === und("src"))
         .select(und("dst").as("node"), (dist("cost") + und("c")).as("cost"))
-      val next = Exec.materializeForSelfJoin(
-        dist.unionByName(relaxed).groupBy("node").agg(min("cost").as("cost")))
-      Exec.releaseMaterialized(dist)
-      dist = next
+      dist.unionByName(relaxed).groupBy("node").agg(min("cost").as("cost"))
     }
     Exec.releaseMaterialized(und)
     dist
@@ -182,8 +178,7 @@ object GraphOps {
     * a map-side-combinable (node, label) count, and a per-node
     * row_number over that node's distinct neighbor labels — bounded by
     * degree, never corpus-wide. Loop state is fixed-width [node, label],
-    * localCheckpointed per round with superseded handles released (the
-    * connectedComponents memory contract).
+    * run by [[Exec.iterate]].
     *
     * Input: undirected `[uCol, vCol]` edges (deduped, u < v). Output:
     * `[node, label]`, one row per node with ≥ 1 edge.
@@ -200,20 +195,16 @@ object GraphOps {
       e.select(col("u").as("s"), col("v").as("t"))
         .unionByName(e.select(col("v").as("s"), col("u").as("t")))
         .distinct(), col("t"))
-    var labels = Exec.materializeForSelfJoin(
-      und.select(col("s").as("node")).distinct()
-        .withColumn("label", col("node")))
     val w = Window.partitionBy("node").orderBy(col("_cnt").desc, col("label").asc)
-    for (_ <- 1 to rounds) {
-      val next = Exec.materializeForSelfJoin(
-        und.join(labels.withColumnRenamed("node", "t"), Seq("t"))
-          .groupBy(col("s").as("node"), col("label"))
-          .agg(count(lit(1)).as("_cnt"))
-          .withColumn("_rk", row_number().over(w))
-          .where(col("_rk") === 1)
-          .select("node", "label"))
-      Exec.releaseMaterialized(labels)
-      labels = next
+    val labels = Exec.iterate(Exec.materializeForSelfJoin(
+      und.select(col("s").as("node")).distinct()
+        .withColumn("label", col("node"))), rounds) { (labels, _) =>
+      und.join(labels.withColumnRenamed("node", "t"), Seq("t"))
+        .groupBy(col("s").as("node"), col("label"))
+        .agg(count(lit(1)).as("_cnt"))
+        .withColumn("_rk", row_number().over(w))
+        .where(col("_rk") === 1)
+        .select("node", "label")
     }
     Exec.releaseMaterialized(und)
     labels
@@ -233,8 +224,8 @@ object GraphOps {
     *
     * Scale shape per round: one degree hash-agg over surviving edges +
     * two semi-joins (u-side, v-side keep filters) — edge-key shuffles
-    * only, no windows, loop state is the edge set itself
-    * (localCheckpointed, superseded handles released).
+    * only, no windows, loop state is the edge set itself, run by
+    * [[Exec.iterate]].
     *
     * @return [node, degree] — nodes surviving all rounds with their
     *         residual degree
@@ -242,22 +233,52 @@ object GraphOps {
   def kCore(edges: DataFrame, uCol: String, vCol: String, k: Int,
       rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 16)
-    var e = Exec.materializeForSelfJoin(
-      edges.select(col(uCol).cast("long").as("u"), col(vCol).cast("long").as("v")))
-    for (_ <- 1 to rounds) {
+    val e = Exec.iterate(Exec.materializeForSelfJoin(
+      edges.select(col(uCol).cast("long").as("u"), col(vCol).cast("long").as("v"))),
+      rounds) { (e, _) =>
       val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("d"))
       val keep = deg.where(col("d") >= k).select("n")
-      val next = Exec.materializeForSelfJoin(
-        e.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
-          .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
-          .select("u", "v"))
-      Exec.releaseMaterialized(e)
-      e = next
+      e.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
+        .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
+        .select("u", "v")
     }
-    val out = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
+    e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).cast("long").as("degree"))
-    out
+  }
+
+  /** Integer power-iteration PageRank, the one recurrence behind q68,
+    * q87 (personalized: teleport only to seeds) and tx29 (TextRank).
+    * Every value is an exact long (micro-units of a 10^12 mass), so any
+    * aggregation order and any truncating integer division (Spark `div`,
+    * DuckDB `//`) give the same ranks. init = 10^12 div max(1,
+    * |teleport nodes|), collected once; round 0 is pr = teleport ? init
+    * : 0; each [[Exec.iterate]] round computes contrib(v) =
+    * Σ_{u→v} (pr(u)·w) div deg(u), then pr = (teleport ? (15·init) div
+    * 100 : 0) + (85·contrib) div 100, with contrib 0 for a node no edge
+    * reaches. Dangling mass and remainders are dropped. The caller stages and owns both inputs
+    * (keyed on `src` / `node` where the scale warrants) and passes unit
+    * weights as `lit(1L)` over its handle.
+    *
+    * @param edgesDeg [src, dst, w, deg] — deg is src's (weighted) out-degree
+    * @param nodes    [node, teleport: boolean]
+    * @return [node, pr]
+    */
+  def intPageRank(edgesDeg: DataFrame, nodes: DataFrame,
+      rounds: Int): DataFrame = {
+    val init = nodes.agg(expr(
+      "1000000000000 div greatest(1, count_if(teleport))")).head().getLong(0)
+    def teleport(share: Long): Column =
+      when(col("teleport"), lit(share)).otherwise(lit(0L))
+    Exec.iterate(nodes.select(col("node"), teleport(init).as("pr")), rounds) {
+      (ranks, _) =>
+        val contribs = ranks.join(edgesDeg, col("node") === col("src"))
+          .select(col("dst"), expr("(pr * w) div deg").as("c"))
+          .groupBy("dst").agg(sum("c").as("contrib"))
+        nodes.join(contribs, col("node") === col("dst"), "left")
+          .select(col("node"), (teleport((15L * init) / 100L)
+            + expr("(85 * coalesce(contrib, 0)) div 100")).as("pr"))
+    }
   }
 
   /** HITS hubs and authorities (Kleinberg 1999) over a directed edge
@@ -276,8 +297,8 @@ object GraphOps {
     * far above any real web/bipartite corpus after the usual top-domain
     * capping. Each round is one equi-join + one hash aggregation per
     * direction over the deduplicated edge list (no windows, no driver
-    * data); rounds materialize via localCheckpoint and release their
-    * predecessor, the q68/kCore loop discipline.
+    * data); the two alternating states follow [[Exec.iterate]]'s
+    * materialize-then-release contract by hand.
     *
     * Returns (side 'hub'|'auth', node, score) for every node that holds
     * nonzero mass after the final round.

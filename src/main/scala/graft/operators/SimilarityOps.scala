@@ -462,8 +462,8 @@ object SimilarityOps {
     * partial-aggregatable argmax keyed by vec_id + one
     * partial-aggregatable explode-agg — no all-pairs stage, no window
     * shuffle of n×k scored rows, no driver loop over data. The tiny
-    * centroid table is checkpointed per round (loop discipline: lineage
-    * cut, like dd06/q68).
+    * centroid table is checkpointed per round under [[Exec.iterate]]'s
+    * loop-state contract, kept by hand for the M-step.
     *
     * @return long-form centroids after `iters` rounds over the training
     *         set: (cell, dim, n_vectors, mean) — cell is the seed
@@ -1625,9 +1625,9 @@ object SimilarityOps {
     * pick conditions the next), so the operator is k bounded passes,
     * each ONE broadcast-1-row distance update + min fold over the
     * corpus — never a pairwise join; the min-distance state is
-    * fixed-width [id, md], localCheckpointed per round with superseded
-    * handles released (the connectedComponents memory contract). The
-    * argmax is a global TakeOrderedAndProject (every task keeps 1 row).
+    * fixed-width [id, md], kept by hand under [[Exec.iterate]]'s
+    * loop-state contract alongside the selected set and the last pick.
+    * The argmax is a global TakeOrderedAndProject (every task keeps 1 row).
     *
     * @return [round (0-based pick order), vec id, dist2 (squared
     *         quantized L2 to the prior set; 0 for the seed)]
@@ -1709,8 +1709,7 @@ object SimilarityOps {
     * ann01 convention) and broadcast; the ONE corpus-sized pass is the
     * pool scoring. Everything after — the poolK×poolK pairwise table
     * and k greedy rounds of anti-join + max-aggregation + 1-row argmax
-    * — runs on queries×poolK rows, materialized per round in the
-    * k-center loop discipline.
+    * — runs on queries×poolK rows, one [[Exec.iterate]] round per pick.
     *
     * @return [query_id, neighbor_id, pick (1-based selection order),
     *          rel_nano, score_nano]
@@ -1749,12 +1748,11 @@ object SimilarityOps {
     Exec.releaseMaterialized(pool)
     val pickW = Window.partitionBy("query_id")
       .orderBy(col("score_nano").desc, col("neighbor_id").asc)
-    var sel = Exec.materializeForSelfJoin(
+    val sel = Exec.iterate(Exec.materializeForSelfJoin(
       slim.withColumn("score_nano", col("rel_nano") * lambdaTenths)
         .withColumn("_rn", row_number().over(pickW)).where(col("_rn") === 1)
         .select(col("query_id"), col("neighbor_id"), lit(1).as("pick"),
-          col("rel_nano"), col("score_nano")))
-    for (p <- 2 to k) {
+          col("rel_nano"), col("score_nano"))), k - 1) { (sel, r) =>
       val rem = slim.join(sel.select(col("query_id"), col("neighbor_id")),
         Seq("query_id", "neighbor_id"), "left_anti")
       val red = rem
@@ -1763,14 +1761,12 @@ object SimilarityOps {
           Seq("query_id", "_b"))
         .groupBy("query_id", "neighbor_id", "rel_nano")
         .agg(max("_s").as("_red"))
-      val prev = sel
-      sel = Exec.materializeForSelfJoin(prev.unionByName(
+      sel.unionByName(
         red.withColumn("score_nano",
             col("rel_nano") * lambdaTenths - col("_red") * (10 - lambdaTenths))
           .withColumn("_rn", row_number().over(pickW)).where(col("_rn") === 1)
-          .select(col("query_id"), col("neighbor_id"), lit(p).as("pick"),
-            col("rel_nano"), col("score_nano"))))
-      Exec.releaseMaterialized(prev)
+          .select(col("query_id"), col("neighbor_id"), lit(r + 1).as("pick"),
+            col("rel_nano"), col("score_nano")))
     }
     Exec.releaseMaterialized(pw)
     Exec.releaseMaterialized(slim)

@@ -309,10 +309,10 @@ object TextOps {
     * ranker): nodes are words of length ≥ `minLen` (the stand-in for
     * the paper's POS filter), edges connect words co-occurring within a
     * window of 2 (undirected, weight = co-occurrence count, self-pairs
-    * dropped), and `rounds` synchronous weighted-PageRank rounds run
-    * q68's PURE-INTEGER discipline — init = 1e12 div |nodes|,
-    * contribution = (pr·w) div wdeg, 15/85 damping in integer div — so
-    * both engines agree bit-for-bit with no float anywhere.
+    * dropped), and `rounds` synchronous weighted-PageRank rounds of
+    * [[GraphOps.intPageRank]] — init = 1e12 div |nodes|, contribution
+    * = (pr·w) div wdeg, 15/85 damping in integer div — so both engines
+    * agree bit-for-bit with no float anywhere.
     *
     * 100 TB shape: ONE corpus pass builds the pair table (two HOF
     * window explodes, no self-join); every round runs on the
@@ -344,30 +344,13 @@ object TextOps {
       .unionByName(pairs.select(col("v").as("u"), col("u").as("v"), col("w")))
     val wdeg = sym.groupBy("u").agg(sum("w").as("wdeg"))
     // weighted degree joined onto the edge list ONCE, outside the loop
-    // (the q68 move); loop state localCheckpointed + released per round
+    // (the q68 move)
     val edges = Exec.materializeForSelfJoin(sym.join(wdeg, "u"))
     val nodes = Exec.materializeForSelfJoin(wdeg.select(col("u").as("node")))
-    // greatest(·, 1): an empty graph must yield an empty result, not an
-    // ANSI DIVIDE_BY_ZERO from the init literal (identical on any
-    // non-empty graph, so the oracle needs no mirror)
-    val meta = Exec.materializeForSelfJoin(
-      nodes.agg(expr("1000000000000 div greatest(count(*), 1)").as("init")))
-    var ranks = nodes.crossJoin(broadcast(meta))
-      .select(col("node"), col("init").as("pr"))
-    for (_ <- 1 to rounds) {
-      val contribs = ranks.join(edges, col("node") === col("u"))
-        .select(col("v"), expr("(pr * w) div wdeg").as("c"))
-        .groupBy("v").agg(sum("c").as("contrib"))
-      val prev = ranks
-      ranks = Exec.materializeForSelfJoin(
-        nodes.join(contribs, col("node") === col("v"), "left")
-          .crossJoin(broadcast(meta))
-          .select(col("node"),
-            (expr("(15 * init) div 100")
-              + expr("(85 * coalesce(contrib, 0)) div 100")).as("pr")))
-      Exec.releaseMaterialized(prev)
-    }
-    ranks.select(col("node").as("word"), col("pr"))
+    GraphOps.intPageRank(edges.select(col("u").as("src"), col("v").as("dst"),
+        col("w"), col("wdeg").as("deg")),
+      nodes.select(col("node"), lit(true).as("teleport")), rounds)
+      .select(col("node").as("word"), col("pr"))
       .orderBy(col("pr").desc, col("word")).limit(topK)
       .orderBy(col("pr").desc, col("word"))
   }
@@ -759,8 +742,8 @@ object TextOps {
     * Scale shape per round: one broadcast join of the (dims+1)-row
     * weight table onto the docs×nonzero-dims feature rows, a per-doc
     * hash agg (the logit), a per-dim hash agg (the gradient) — all
-    * map-side combinable; the loop state is the weight table only,
-    * materialized and released round to round.
+    * map-side combinable; the loop state is the weight table only, run
+    * by [[Exec.iterate]].
     *
     * @return [dim, w_micro] — dims+1 rows, dim −1 = bias
     */
@@ -787,12 +770,10 @@ object TextOps {
         .unionByName(labels.select(col("doc_id"), lit(-1L).as("dim"),
           lit(1L).as("val"))),
       col("doc_id"))
-    val spark = df.sparkSession
-    var w = Exec.materializeForSelfJoin(
-      spark.range(-1L, dims.toLong)
-        .select(col("id").as("dim"), lit(0L).as("w_micro")))
     val d = 10L * nDocs // lr = 0.1: grad / (10 n)
-    for (_ <- 1 to rounds) {
+    val w = Exec.iterate(Exec.materializeForSelfJoin(
+      df.sparkSession.range(-1L, dims.toLong)
+        .select(col("id").as("dim"), lit(0L).as("w_micro"))), rounds) { (w, _) =>
       val z = feats.join(broadcast(w), "dim")
         .groupBy("doc_id")
         .agg(sum(col("w_micro") * col("val")).as("_z"))
@@ -801,12 +782,9 @@ object TextOps {
           "cast(round((_y - 1.0 / (1.0 + exp(-(_z / 1000000.0)))) " +
             "* val * 1000000.0) as bigint)").as("_t"))
         .groupBy("dim").agg(sum("_t").as("_g"))
-      val prev = w
-      w = Exec.materializeForSelfJoin(
-        prev.join(g, Seq("dim"), "left")
-          .select(col("dim"),
-            (col("w_micro") + expr(s"coalesce(_g div $d, 0)")).as("w_micro")))
-      Exec.releaseMaterialized(prev)
+      w.join(g, Seq("dim"), "left")
+        .select(col("dim"),
+          (col("w_micro") + expr(s"coalesce(_g div $d, 0)")).as("w_micro"))
     }
     Exec.releaseMaterialized(labels)
     w

@@ -176,8 +176,8 @@ object UnigramOps {
           .join(viterbiCounts(words, pieces, maxLen), Seq("piece"), "left")
           .select(col("piece"), coalesce(col("cnt"), lit(0L)).as("cnt")))
       // the previous round's state fed this round's (now-materialized)
-      // counts and nothing else — release its pinned blocks (the
-      // GraphOps loop discipline)
+      // counts and nothing else — release its pinned blocks
+      // ([[Exec.iterate]]'s contract, kept by hand for the prune)
       if (prevAll != null) Exec.releaseMaterialized(prevAll)
       prevAll = all
       // prune threshold: 0.2-discrete-quantile of MULTI-char counts

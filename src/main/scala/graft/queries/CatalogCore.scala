@@ -1680,11 +1680,6 @@ private[queries] trait CatalogCore extends CatalogShared {
       val nodes = Exec.materializeForSelfJoinBy(
         edges.select(col("src").as("node"))
           .union(edges.select(col("dst").as("node"))).distinct(), col("node"))
-      // the teleport share is ONE scalar — collected once (a 1-row
-      // driver read, the q104/dp19 scalar convention) instead of a
-      // 1-row crossJoin(broadcast(...)) re-collected every round
-      val init = nodes.agg(expr("1000000000000 div greatest(1, count(*))")
-        .as("init")).head().getLong(0)
       // out-degree is joined onto the edge list ONCE, outside the loop —
       // each iteration then needs a single equi-join + one aggregation
       // instead of re-joining deg every round
@@ -1693,25 +1688,10 @@ private[queries] trait CatalogCore extends CatalogShared {
         col("src"))
       // edges fed nodes and edgesDeg, both materialized — free its blocks
       Exec.releaseMaterialized(edges)
-      var ranks = nodes.select(col("node"), lit(init).as("pr"))
-      for (_ <- 1 to 5) {
-        val contribs = ranks.join(edgesDeg, col("node") === col("src"))
-          .select(col("dst"), expr("pr div deg").as("c"))
-          .groupBy("dst").agg(sum("c").as("contrib"))
-        // materialize per iteration: keeps every stage's plan shallow
-        // (a 5-deep join chain costs seconds of Catalyst planning +
-        // codegen) and cuts lineage, the same discipline as
-        // connectedComponents' loop; the superseded round's blocks are
-        // released once the new round is materialized
-        val prev = ranks
-        ranks = Exec.materializeForSelfJoin(
-          nodes.join(contribs, col("node") === col("dst"), "left")
-            .select(col("node"),
-              (lit((15L * init) / 100L)
-                + expr("(85 * coalesce(contrib, 0)) div 100")).as("pr")))
-        Exec.releaseMaterialized(prev)
-      }
-      ranks.orderBy(col("pr").desc, col("node")).limit(100)
+      GraphOps.intPageRank(edgesDeg.select(col("src"), col("dst"),
+          lit(1L).as("w"), col("deg")),
+        nodes.select(col("node"), lit(true).as("teleport")), rounds = 5)
+        .orderBy(col("pr").desc, col("node")).limit(100)
         .orderBy(col("pr").desc, col("node"))
     })
 
@@ -2173,9 +2153,9 @@ private[queries] trait CatalogCore extends CatalogShared {
   // and diffuses over the SYMMETRIZED customer-supplier graph, so
   // supplier mass flows back to co-purchasing customers — 4 power
   // iterations localize the walk around the seed segment (bipartite
-  // collaborative filtering). Same integer micro-unit arithmetic,
-  // per-round materialization, and release discipline as q68; the
-  // oracle replays every round via pprIterSql.
+  // collaborative filtering). Same GraphOps.intPageRank recurrence as
+  // q68, with the seed predicate as the teleport flag; the oracle
+  // replays every round via pprIterSql.
   private val q87 = Q("q87_personalized_pagerank", Some(s"""
     WITH e AS (
       SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst
@@ -2203,7 +2183,7 @@ private[queries] trait CatalogCore extends CatalogShared {
       // state + shuffle) crowding executor memory (VERDICT r15 #3) —
       // DISK_ONLY keeps the edge copies off-heap and keeps lineage, so
       // a lost block recomputes instead of failing. Loop state (ranks,
-      // O(nodes) ≪ O(edges)) stays on the checkpoint discipline.
+      // O(nodes) ≪ O(edges)) is checkpointed per round by intPageRank.
       val e = Exec.materializeLarge(
         T(s, d, "orders").join(T(s, d, "lineitem"),
             col("l_orderkey") === col("o_orderkey"))
@@ -2216,17 +2196,10 @@ private[queries] trait CatalogCore extends CatalogShared {
       e.unpersist(false)
       // loop-invariant node table keyed by the rank-rebuild join key
       // (guide §2.4); the seed flag is a ROW-LOCAL predicate on the node
-      // id, so it rides a projection over the keyed handle instead of
-      // the former per-round nodes⋈seeds left join — each iteration
-      // drops from 2 joins + a 1-row broadcast re-collect to 1 join
+      // id, so it rides a projection over the keyed handle as the
+      // teleport flag instead of a per-round nodes⋈seeds left join
       val nodes = Exec.materializeForSelfJoinBy(
         eu.select(col("src").as("node")).distinct(), col("node"))
-      val nodesSeed = nodes.withColumn("_seed",
-        when(col("node") < 10000000L && col("node") % 50 === 0, lit(1)))
-      // teleport share: ONE scalar, collected once (the q68 convention)
-      val sinit = nodesSeed
-        .agg(expr("1000000000000 div greatest(1, count(_seed))").as("sinit"))
-        .head().getLong(0)
       // degrees ride the edge rows (q68's one-join-per-round move),
       // keyed by the contribution join's key so the corpus-sized edge
       // table never re-shuffles inside the loop
@@ -2234,23 +2207,12 @@ private[queries] trait CatalogCore extends CatalogShared {
         eu.join(eu.groupBy("src").agg(count(lit(1)).as("deg")), "src"),
         col("src"))
       eu.unpersist(false)
-      def teleport(c: Column): Column =
-        when(col("_seed") === 1, c).otherwise(lit(0L))
-      var ranks = nodesSeed
-        .select(col("node"), teleport(lit(sinit)).as("pr"))
-      for (_ <- 1 to 4) {
-        val contribs = ranks.join(euDeg, col("node") === col("src"))
-          .select(col("dst"), expr("pr div deg").as("c"))
-          .groupBy("dst").agg(sum("c").as("contrib"))
-        val prev = ranks
-        ranks = Exec.materializeForSelfJoin(
-          nodesSeed.join(contribs, col("node") === col("dst"), "left")
-            .select(col("node"),
-              (teleport(lit((15L * sinit) / 100L))
-                + expr("(85 * coalesce(contrib, 0)) div 100")).as("pr")))
-        Exec.releaseMaterialized(prev)
-      }
-      ranks.where(col("pr") > 0)
+      GraphOps.intPageRank(euDeg.select(col("src"), col("dst"),
+          lit(1L).as("w"), col("deg")),
+        nodes.select(col("node"),
+          (col("node") < 10000000L && col("node") % 50 === 0).as("teleport")),
+        rounds = 4)
+        .where(col("pr") > 0)
         .orderBy(col("pr").desc, col("node")).limit(100)
         .orderBy(col("pr").desc, col("node"))
     })

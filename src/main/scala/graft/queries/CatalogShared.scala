@@ -310,7 +310,7 @@ private[queries] trait CatalogShared {
   // their previous centroid. Every step is deterministic, so the oracle
   // replays both iterations CTE-by-CTE and the final long-form centroid
   // table hash-matches exactly. The per-iteration plans run eagerly
-  // behind localCheckpoint (loop discipline, like q68), so the k-row
+  // behind localCheckpoint (SimilarityOps.kmeansFit's loop), so the k-row
   // centroid broadcast stays out of the final audited plan.
   protected val km16Cos = """round(list_sum(list_transform(generate_series(1, 16), i -> %s.e[i] * %s.ce[i]))
           / (sqrt(list_sum(list_transform(generate_series(1, 16), i -> %s.e[i] * %s.e[i])))
@@ -480,11 +480,6 @@ private[queries] trait CatalogShared {
         GROUP BY e.dst) c ON c.node = n.node"""
 
 
-  /** One personalized-pagerank power iteration (q87's oracle): teleport
-    * mass returns ONLY to the seed set (q68's uniform `init` becomes a
-    * seed-conditional `sinit`), random-walk mass flows over the
-    * symmetrized edge set `eu` with its degrees `degu`.
-    */
   /** One synchronous label-propagation round (q92's oracle): each node
     * adopts the most frequent label among its neighbors in `$prev`,
     * ties to the smaller label — mirrored op-for-op by
@@ -501,6 +496,11 @@ private[queries] trait CatalogShared {
       WHERE rk = 1"""
 
 
+  /** One personalized-pagerank power iteration (q87's oracle): teleport
+    * mass returns ONLY to the seed set (q68's uniform `init` becomes a
+    * seed-conditional `sinit`), random-walk mass flows over the
+    * symmetrized edge set `eu` with its degrees `degu`.
+    */
   protected def pprIterSql(prev: String): String = s"""
       SELECT n.node,
         (CASE WHEN s.node IS NOT NULL

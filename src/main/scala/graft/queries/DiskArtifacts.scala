@@ -5,6 +5,8 @@ import java.nio.file.StandardOpenOption.{CREATE, WRITE}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The on-disk half of the trained-artifact store (VERDICT r13 #3 — "the
@@ -173,8 +175,8 @@ object DiskArtifacts {
         Files.writeString(vdir.resolve("_GRAFT_SCHEMA"), built.schema.toDDL)
         Files.writeString(vdir.resolve("_GRAFT_BUCKETS"), s"$bucketCol:$nBuckets")
         Files.writeString(vdir.resolve("_GRAFT_ADONE"), stamp)
-        try graft.operators.Exec.releaseMaterialized(built)
-        catch { case _: Throwable => () }
+        releaseOrWarn(s"$tag ${vdir.getFileName}")(
+          graft.operators.Exec.releaseMaterialized(built))
         // COMMIT: replace the single pointer object. Write-temp + rename
         // of ONE FILE (atomic on every POSIX fs; on an object store this
         // step is a single PUT of the pointer key).
@@ -186,6 +188,19 @@ object DiskArtifacts {
       } finally lock.release()
     } finally ch.close()
   }
+
+  /** Run an artifact release (unpersist / checkpoint release). A
+    * non-fatal failure is reported on stderr as
+    * `[artifacts] release <key> failed: <class>: <message>` and does not
+    * stop the caller; fatal errors propagate.
+    */
+  private[queries] def releaseOrWarn(key: String)(release: => Unit): Unit =
+    try release
+    catch {
+      case NonFatal(e) =>
+        System.err.println(
+          s"[artifacts] release $key failed: ${e.getClass.getName}: ${e.getMessage}")
+    }
 
   /** Delete superseded / never-committed version dirs once they are a
     * grace period old — new builds never delete the version a concurrent

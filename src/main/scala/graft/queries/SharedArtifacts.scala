@@ -113,8 +113,7 @@ object SharedArtifacts {
       val prev = cache.putIfAbsent(key, built)
       if (prev == null) built
       else {
-        try graft.operators.Exec.releaseMaterialized(built)
-        catch { case _: Throwable => () }
+        DiskArtifacts.releaseOrWarn(key)(Exec.releaseMaterialized(built))
         prev
       }
     }
@@ -130,14 +129,12 @@ object SharedArtifacts {
     * ratios (the q77 17× in-run artifact, BASELINE round 13).
     */
   def clear(): Unit = {
-    cache.values.forEach { df =>
-      try graft.operators.Exec.releaseMaterialized(df)
-      catch { case _: Throwable => () }
+    cache.forEach { (key, df) =>
+      DiskArtifacts.releaseOrWarn(key)(Exec.releaseMaterialized(df))
     }
     cache.clear()
-    largeCache.values.forEach { df =>
-      try df.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+    largeCache.forEach { (key, df) =>
+      DiskArtifacts.releaseOrWarn(key)(df.unpersist(blocking = false))
     }
     largeCache.clear()
   }
@@ -199,8 +196,7 @@ object SharedArtifacts {
       val prev = largeCache.putIfAbsent(key, built)
       if (prev == null) built
       else {
-        try built.unpersist(blocking = false)
-        catch { case _: Throwable => () }
+        DiskArtifacts.releaseOrWarn(key)(built.unpersist(blocking = false))
         prev
       }
     }

@@ -32,6 +32,20 @@ class FunctionsSpec extends AnyFunSuite {
     assert(v == 1.0)
   }
 
+  test("native functions register once per session: a second use keeps the entry") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val id = FunctionIdentifier("graft_cosine_similarity")
+    val df = Seq((Seq(1.0, 0.0), Seq(1.0, 0.0))).toDF("a", "b")
+    df.select(CosineSimilarity.cosineNative(spark, col("a"), col("b"))).collect()
+    val first = spark.sessionState.functionRegistry.lookupFunction(id)
+    assert(first.isDefined)
+    // replacing the entry would build a new ExpressionInfo (and log a
+    // "replaced a previously registered function" warning)
+    CosineSimilarity.cosineNative(spark, col("a"), col("b"))
+    val second = spark.sessionState.functionRegistry.lookupFunction(id)
+    assert(second.exists(_ eq first.get))
+  }
+
   test("native long dot product matches the HOF composition; empty is 0") {
     val rows = Seq(
       (Seq(3L, -1L, 4L, 127L), Seq(2L, 5L, -6L, 127L)),

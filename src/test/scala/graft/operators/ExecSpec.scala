@@ -98,10 +98,70 @@ class ExecSpec extends AnyFunSuite {
     def now = spark.sparkContext.getPersistentRDDs.size
     while (now > before + 4 && System.currentTimeMillis() < deadline)
       Thread.sleep(100)
-    // live at exit: nodes, meta, edgesDeg, final ranks (edges + the 4
-    // superseded rank rounds are released)
+    // live at exit: nodes, edgesDeg and the final ranks (edges and the
+    // 4 superseded rank rounds are released; round 0 is a projection
+    // over nodes, so Exec.iterate's release of it is a no-op)
     assert(now <= before + 4,
       s"q68 left ${now - before} pinned RDDs; loop rounds are leaking")
+  }
+
+  private def rddIdOf(handle: org.apache.spark.sql.DataFrame): Int =
+    handle.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      case p => fail(s"expected a LogicalRDD handle, got ${p.getClass}")
+    }
+
+  /** The persistent RDDs pinned since `before`, polled until `n` are
+    * left: releases are async (blocking = false), and RDDs released by
+    * earlier tests may still be leaving `before`, so only new ids count. */
+  private def pinnedSince(before: Set[Int], n: Int): Set[Int] = {
+    def added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    val deadline = System.currentTimeMillis() + 10000
+    while (added.size != n && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    added
+  }
+
+  private def addRound(state: org.apache.spark.sql.DataFrame, r: Int) = {
+    import org.apache.spark.sql.functions._
+    state.select(col("id"), (col("v") + r).as("v"))
+  }
+
+  test("iterate: after k rounds only the returned handle stays pinned") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val init = Exec.materializeForSelfJoin(
+      (1 to 50).map(i => (i.toLong, 0L)).toDF("id", "v"))
+    val out = Exec.iterate(init, 4)(addRound)
+    assert(pinnedSince(before, 1) == Set(rddIdOf(out)),
+      "init and the 3 superseded rounds must be released")
+    // round r adds r: 1 + 2 + 3 + 4
+    assert(out.as[(Long, Long)].collect().toSet ==
+      (1 to 50).map(i => (i.toLong, 10L)).toSet)
+    Exec.releaseMaterialized(out)
+  }
+
+  test("iterate: rounds = 0 returns init and releases nothing") {
+    val init = Exec.materializeForSelfJoin((1 to 10).map(i => (i.toLong, 0L)).toDF("id", "v"))
+    val id = rddIdOf(init)
+    val out = Exec.iterate(init, 0)((_, _) => fail("step must not run"))
+    assert(out eq init)
+    Thread.sleep(200)
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    Exec.releaseMaterialized(init)
+  }
+
+  test("iterate: an init derived from a caller's handle leaves the handle pinned") {
+    import org.apache.spark.sql.functions._
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val handle = Exec.materializeForSelfJoin((1 to 20).map(_.toLong).toDF("id"))
+    val out = Exec.iterate(handle.select(col("id"), lit(0L).as("v")), 2)(addRound)
+    // handle + the final round; round 1 is released
+    assert(pinnedSince(before, 2) == Set(rddIdOf(handle), rddIdOf(out)),
+      "a view derived from the caller's handle must not release it")
+    assert(handle.count() == 20)
+    assert(out.where(col("v") =!= 3L).count() == 0)
+    Exec.releaseMaterialized(out)
+    Exec.releaseMaterialized(handle)
   }
 
   test("materializeForSelfJoinBy: small tables stay a plain checkpoint; " +

@@ -226,4 +226,47 @@ class GraphOpsSpec extends AnyFunSuite {
       assert(s > 500000000000L && s <= 2000000000000L, s"$side mass $s")
     }
   }
+
+  /** Driver-side replay of [[GraphOps.intPageRank]]'s Long recurrence. */
+  private def replayIntPageRank(edges: Seq[(Long, Long, Long)],
+      nodes: Seq[(Long, Boolean)], rounds: Int): Map[Long, Long] = {
+    val deg = edges.groupBy(_._1).map { case (src, es) => src -> es.map(_._3).sum }
+    val init = 1000000000000L / math.max(1, nodes.count(_._2))
+    var pr = nodes.map { case (n, t) => n -> (if (t) init else 0L) }.toMap
+    for (_ <- 1 to rounds) {
+      val contrib = edges.groupBy(_._2).map { case (dst, es) =>
+        dst -> es.map { case (src, _, w) => pr(src) * w / deg(src) }.sum
+      }
+      pr = nodes.map { case (n, t) =>
+        n -> ((if (t) 15L * init / 100L else 0L) + 85L * contrib.getOrElse(n, 0L) / 100L)
+      }.toMap
+    }
+    pr
+  }
+
+  test("intPageRank matches a driver-side replay of the integer recurrence") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(68)
+    val n = 30
+    // ~3 out-edges per node, no self-loops; some nodes end up dangling
+    val arcs = (0 until 90).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter { case (s, d) => s != d }.distinct
+    val weights = arcs.map(_ => 1L + rnd.nextInt(9))
+    val allTeleport = (0 until n).map(i => (i.toLong, true))
+    val cases = Seq(
+      ("all-teleport, unit weights", arcs.map { case (s, d) => (s, d, 1L) }, allTeleport),
+      ("seeded teleport", arcs.map { case (s, d) => (s, d, 1L) },
+        (0 until n).map(i => (i.toLong, i % 7 == 0))),
+      ("weighted edges", arcs.zip(weights).map { case ((s, d), w) => (s, d, w) },
+        allTeleport))
+    for ((name, edges, nodes) <- cases) {
+      val deg = edges.groupBy(_._1).map { case (src, es) => src -> es.map(_._3).sum }
+      val edgesDeg = edges.map { case (s, d, w) => (s, d, w, deg(s)) }
+        .toDF("src", "dst", "w", "deg")
+      val got = GraphOps.intPageRank(edgesDeg, nodes.toDF("node", "teleport"), rounds = 4)
+        .as[(Long, Long)].collect()
+      assert(got.length == n, name)
+      assert(got.toMap == replayIntPageRank(edges, nodes, 4), name)
+    }
+  }
 }

@@ -25,9 +25,8 @@ class PlanAuditSpec extends AnyFunSuite {
     * query's scaladoc): q29 broadcasts one scalar row, ann01/ann03
     * broadcast the query-vector set, tx06 cross-joins a 1-row doc count,
     * tx11/dp07/dp08 cross-join a 1-row corpus aggregate (total / max).
-    * (q68's equivalent 1-row cross-joins run eagerly inside its
-    * iteration loop behind localCheckpoint, so its final plan is a
-    * checkpoint scan and stays off this list.)
+    * (The integer PageRanks — q68, q87, tx29 — collect their 1-row
+    * teleport share on the driver once, so they have no such join.)
     */
   private val designedBnlj = Set(
     "q29_scalar_subq", "ann01_bruteforce_topk", "ann03_topk_aggregator",

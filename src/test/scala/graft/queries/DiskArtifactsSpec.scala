@@ -173,4 +173,17 @@ class DiskArtifactsSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(isolated))
     }
   }
+
+  test("a failed release is reported on stderr; fatal errors propagate") {
+    val buf = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    try DiskArtifacts.releaseOrWarn("cent16|sf")(throw new IllegalStateException("boom"))
+    finally System.setErr(stderr)
+    assert(buf.toString.contains(
+      "[artifacts] release cent16|sf failed: java.lang.IllegalStateException: boom"))
+    intercept[LinkageError] {
+      DiskArtifacts.releaseOrWarn("cent16|sf")(throw new LinkageError("fatal"))
+    }
+  }
 }
