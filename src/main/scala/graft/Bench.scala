@@ -8,8 +8,7 @@ package graft
   * without a re-run (VERDICT r7 #3).
   *
   * Failures are recorded EXPLICITLY: a failed query reports -1 in the
-  * queries object and its name under "errors" — and the sf1 scale probe
-  * excludes failed runs from its ratio object instead of publishing a
+  * queries object and its name under "errors" instead of publishing a
   * time-to-failure as a measurement (ADVICE r7).
   *
   * Measurement mode is WARM (and the artifact says so): a full untimed
@@ -19,8 +18,8 @@ package graft
   * warmup_sec. Per-query numbers are therefore stable across runs and
   * comparable round-to-round (VERDICT r11 #1 — cold single shots
   * attributed shared-cache builds to arbitrary queries, swinging dp*
-  * numbers 2–8x). The sf1 probe is the exception: it clearCache()s per
-  * scale so BOTH sides of each ratio pay materialization cold.
+  * numbers 2–8x). The sf0.1 → sf1 decade probe is a separate main,
+  * [[tools.Sf1Probe]].
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -30,24 +29,17 @@ object Bench {
     // corpus's bytes (AQE coalesces the small stages back down)
     val spark = GraftSession.local(cpus.toInt, GraftSession.dirBytes(sfDir))
     spark.sparkContext.setLogLevel("ERROR")
-    // Diagnostic knobs (VERDICT r16 #1 — attribute the local[32] drift
-    // with data, not narrative): SPARK_GRAFT_QUERIES restricts BOTH the
-    // warmup and the timed loop ("r11" = the frozen 143-query subset, or
-    // a comma list); SPARK_GRAFT_ORDER=reverse runs the loop backwards.
-    // A fixed subset timed alone vs inside the full catalog separates
-    // per-query cost from session-age/catalog-size overhead; order
-    // reversal shows whether a query's cost depends on its POSITION in
-    // the loop (listener/codegen-cache/LRU aging) rather than its plan.
+    // Diagnostic knob (VERDICT r16 #1): SPARK_GRAFT_QUERIES restricts
+    // BOTH the warmup and the timed loop ("r11" = the frozen 143-query
+    // subset, or a comma list). A fixed subset timed alone vs inside the
+    // full catalog separates per-query cost from session-age /
+    // catalog-size overhead.
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_QUERIES").map {
       case "r11" => R11Subset.names
       case s     => s.split(",").filter(_.nonEmpty).toSet
     }
-    val selected = {
-      val base = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.contains(n)) }
-      if (sys.env.get("SPARK_GRAFT_ORDER").contains("reverse")) base.reverse
-      else base
-    }
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
     // Warm-up pass at the MEASURED sf. Two costs would otherwise land on
     // arbitrary queries and make single-shot per-query numbers
     // uninterpretable (VERDICT r11 #1): (a) JIT + codegen compilation
@@ -75,8 +67,7 @@ object Bench {
     // index builds landed inside measured queries. Every bench phase
     // drains SharedArtifacts' L1-miss events (built-vs-served + wall ms
     // per tag) so index cost and query cost separate IN-ARTIFACT: the
-    // warmup should absorb all builds, a warm main loop drains ~nothing,
-    // and each sf1 cold pass shows exactly which probes paid a rebuild.
+    // warmup should absorb all builds and a warm main loop drains ~nothing.
     // returns (full json incl. per-tag breakdown, totals-only json for
     // the compact stdout line)
     def artJson(): (String, String) = {
@@ -106,28 +97,17 @@ object Bench {
     val heapPools = java.lang.management.ManagementFactory
       .getMemoryPoolMXBeans.asScala
       .filter(_.getType == java.lang.management.MemoryType.HEAP)
-    // process CPU time (ns): cpu_share = Δcpu / (Δwall · cores)
-    // distinguishes compute-saturated (≈1000 milli) from I/O-or-
-    // scheduling-bound (≪1000) — the adjudication axis gc/heap can't
-    // cover (this session's 25x in-bench dd20 sf1 reading carried
-    // gc_share 0.01: GC-idle, but WHY slow was only answerable by
-    // isolated re-runs; cpu_share answers it in-artifact)
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def procCpuNs(): Long = osBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
-    val nCores = Runtime.getRuntime.availableProcessors()
-    val errors = Seq.newBuilder[String]
-    // main-loop cpu_share too (VERDICT r15 #1): the sf1 section had it,
-    // the main loop didn't — so ann18's 36s main-loop reading had gc/heap
-    // but not the compute-vs-contention axis. A low cpu_share on a slow
+    // cpu_share = Δ process CPU / (Δwall · cores) distinguishes
+    // compute-saturated (≈1000 milli) from I/O-or-scheduling-bound
+    // (≪1000) — the axis gc/heap can't cover: a low cpu_share on a slow
     // reading = the JVM wasn't given the cores (host contention), high =
     // honest compute.
+    val nCores = Runtime.getRuntime.availableProcessors()
+    val errors = Seq.newBuilder[String]
     val results = selected.map { case (name, fn) =>
       heapPools.foreach(_.resetPeakUsage())
       val g0 = gcMillis()
-      val c0 = procCpuNs()
+      val c0 = processCpuNanos()
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).count(); true }
@@ -138,7 +118,7 @@ object Bench {
       val peakMb = heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
       val cpuMilli =
         if (c0 < 0 || wallNs <= 0) -1L
-        else (procCpuNs() - c0) * 1000L / (wallNs * nCores)
+        else (processCpuNanos() - c0) * 1000L / (wallNs * nCores)
       (name, sec, gcMs, peakMb, cpuMilli)
     }
     val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v }
@@ -177,312 +157,8 @@ object Bench {
     val subsetJson =
       s""""subset_r11":{"n":${subsetVals.size},"total_sec":${math.round(subsetVals.sum * 1000) / 1000.0}}"""
     val errJson = errors.result().map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Optional one-decade scale probe (VERDICT r5/r6 next-round #7): build
-    // the synthetic 10x corpus (tools.Sf1Probe — structure-preserving
-    // copies, cached across runs by a _DONE marker) and time the heaviest
-    // operators at sf0.1 and sf1, so the sub-linear-scaling claim ships as
-    // measured ratios in every BENCH artifact instead of a dev-tool
-    // printout. Disable with SPARK_GRAFT_SF1=0.
-    val sf01 = "/root/testdata/sf0.1"
-    val (sf1Json, sf1Compact) =
-      if (sys.env.getOrElse("SPARK_GRAFT_SF1", "1") != "0" && only.isEmpty
-          && java.nio.file.Files.isDirectory(java.nio.file.Paths.get(sf01))) {
-        val sf1Dir = "/tmp/graft_sf1"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(sf1Dir))
-        val tb = System.nanoTime()
-        tools.Sf1Probe.buildSf1(spark, sf01, sf1Dir, copies = 10)
-        val buildSec = (System.nanoTime() - tb) / 1e9
-        // top-by-median catalog queries (BASELINE.md round 7) so every
-        // heavy operator has a measured 10x ratio, not just the original 6;
-        // dd13 + ann08 joined in round 9 — they were the only heavies with
-        // no measured ratio, exactly where the fixed-k quadratic hid
-        // (VERDICT r8 #1/#2)
-        // round-11 additions: tx14 (linear in corpus tokens) and dd17
-        // (linear in |Q|·n BY DESIGN — the fixed 100-query exact-Jaccard
-        // truth side scales with n, so ~10x at 10x data IS its spec;
-        // sub-10x there is overhead amortization, not sub-linearity)
-        // round-12 additions: q77 (wedge fan-out bounded by degree
-        // orientation — the ratio certifies the outdeg² bound holds on
-        // 10x edges), ann14 (candidates ~ n × nProbe × cell target:
-        // linear when cells scale with n), tx18 (explode linear in
-        // tokens; the prefix-sum rank runs over the vocabulary, which
-        // grows sublinearly)
-        val probes = Seq("dd06_dup_clusters", "dp01_curation_pipeline",
-          // round-16 additions: tx36 (3 sequential GD rounds — broadcast
-          // weight join + two map-side-combinable hash aggs per round,
-          // expect ~linear), dd28 (the probes=2 multi-probe pair scan +
-          // the 50-anchor exact truth arm — candidate pairs are bounded
-          // by the primary-size sub-bucket geometry, expect ~linear with
-          // the semantic-stats snapshot as evidence)
-          "tx36_classifier_eval", "dd28_semantic_recall",
-          "tx06_tfidf", "q51_stream_join", "q66_stream_upsert",
-          "dp03_seq_packing", "q68_pagerank", "ann07_recall",
-          "dp09_decontam", "tx08_commonness", "dd12_substring_spans",
-          "dd13_semantic_dedup", "ann08_kmeans_train",
-          "tx14_bigram_lm", "dd17_lsh_recall",
-          "q77_triangle_count", "ann14_knn_graph", "tx18_zipf_slope",
-          // round-13 additions: dd20 (prefix-filtered exact join —
-          // clusters x10, sizes constant on the rotated corpus, so the
-          // candidate set scales ~linearly; isolated 3-probe 3.1-3.4x
-          // after the cold first shot), dp24 (two-phase prefix sum:
-          // 1.2-1.4x), ann16 (knn build + bounded walk — rides ann14's
-          // envelope, 2.7x warm / inflated on cold sf1 file reads)
-          "dd20_jaccard_join", "dp24_shard_manifest", "ann16_graph_search",
-          // q87 (4 fixed PPR rounds over the 10x symmetrized graph —
-          // isolated 3-probe 2.2-2.5x), q86 (BFS over the shared edge
-          // artifact — 1.1-1.5x, edge-build-bound on the first touch)
-          "q87_personalized_pagerank", "q86_graph_distance",
-          // q90 (3 Bellman-Ford whole-table relaxations over the same
-          // edge artifact: each round is one edge equi-join + one min
-          // agg, so the slope is q86's join shape without the frontier
-          // shrink — expect the edge-artifact envelope)
-          "q90_cheapest_path",
-          // round-13 late additions: tx22 (BM25 — postings build is
-          // linear in tokens, scoring is bounded by query-term df so
-          // the slope tracks the token explode), dd22 (blocked fuzzy
-          // join — per-block |dirty|x|master| Levenshtein cost: master
-          // blocks grow ~10x while the dirty side stays fixed at
-          // p_partkey<500, so ~10x candidates is the DESIGN slope),
-          // q92 (3 synchronous LPA rounds: one edge join + degree-
-          // bounded window per round over the 10x shared edge artifact
-          // — expect q86/q90's edge envelope)
-          "tx22_bm25_retrieval", "dd22_fuzzy_join", "q92_label_prop",
-          // dd23 (incremental CC: history roster + contracted batch CC
-          // over the shared edge artifact — the ratio certifies the
-          // O(batch + touched) contract), dp30 (8 sequential
-          // broadcast-1-row k-center passes — linear in n by design,
-          // the dd17 fixed-k convention)
-          "dd23_incremental_clusters", "dp30_kcenter_coreset",
-          // round-14 addition: dd24 (character-exact ExactSubstr — the
-          // gram table is one row per corpus CHARACTER by design, so the
-          // slope tracks total characters ~linearly; islands/splice run
-          // per doc)
-          "dd24_exact_substr",
-          // dd25 (winnowed fingerprints — dd24's gram build + one
-          // per-doc window min, so the slope tracks dd24's linear-in-
-          // characters envelope; the pair join runs on the 2/(w+1)
-          // sampled index)
-          "dd25_winnow_fingerprints",
-          // round-16 addition: ann18 (bounded beam search at 3 depths
-          // over the persisted kNN graph vs exact truth — r15's one
-          // weak item: 36.3s in the driver main loop vs 3.68s committed
-          // idle with no isolated probe on record; it joins the list so
-          // every BENCH artifact carries its decade ratio + telemetry)
-          "ann18_graph_depth_curve")
-        // dd06 convergence telemetry: rounds + per-round wall millis, so a
-        // super-linear sf1 ratio is attributable to iteration growth vs
-        // per-round cost vs noise (VERDICT r7 #2). Snapshotted IMMEDIATELY
-        // after the dd06 probe runs — dp01 later in the list also runs
-        // connectedComponents and would overwrite lastCcStats.
-        var ccSnapshot: String = "null"
-        def ccJson(): String =
-          graft.operators.DedupOps.lastCcStats.map { s =>
-            s"""{"rounds":${s.rounds},"round_millis":${s.roundMillis.mkString("[", ",", "]")}}"""
-          }.getOrElse("null")
-        // dd13 pair-scan telemetry (cells, candidate pairs, max partition):
-        // the spec-pinned ~linear bound ships as measured numbers at both
-        // SFs every round (VERDICT r9 #6) — same reset/snapshot discipline
-        // as dd06_cc (a failed probe publishes null, never stale stats)
-        var semSnapshot: String = "null"
-        def semJson(): String =
-          graft.operators.SimilarityOps.lastSemanticStats.map { s =>
-            s"""{"cells":${s.cells},"pairs":${s.candidatePairs},"max_partition":${s.maxPartitionRows}}"""
-          }.getOrElse("null")
-        // dd20 row-volume telemetry (VERDICT r17 #1): raw pre-distinct
-        // join rows vs distinct candidates vs verification rows at both
-        // scales — the artifact itself now settles whether the decade
-        // wall is super-linear row generation or local-mode saturation
-        var jxSnapshot: String = "null"
-        // Some(seconds) on success, None on failure — a failed probe must
-        // not publish its time-to-failure as a measurement. The cache is
-        // cleared first: persisted (DISK_ONLY) tables from the main loop
-        // are keyed by analyzed plan and would be silently reused by the
-        // sf0.1 pass but not the sf1 pass, flattering the ratio — both
-        // scales must pay their materialization cost cold. Each probe
-        // also records its gc_ms delta and peak heap (VERDICT r14 #1:
-        // the per-query telemetry stopped at the main loop, so the one
-        // place contention actually hit — the late-run sf1 section —
-        // had no in-artifact adjudication evidence; now a 20x sf1
-        // reading carries its own gc/heap signature).
-        // VERDICT r15 #2 — this section now RUNS THE ISOLATED PROTOCOL
-        // it used to contradict: every probe gets TWO shots per scale,
-        // each preceded by a full cache + artifact clear (both scales
-        // still pay their one-time materializations cold — the DISK
-        // store too, or "cold" measures a /tmp file scan instead of the
-        // build), and the SECOND shot is the measurement. Four rounds
-        // running (dd17 44.6x, dd20 23.1x, q87 14.4x in-bench where the
-        // same-session isolated 3-run protocol read 2.2-9.8x) traced to
-        // the single-shot readings folding per-probe first-touch costs —
-        // fresh codegen paths, page-cache cold sf1 files — into whichever
-        // probe hit them first; run 2-of-2 is exactly what the committed
-        // Sf1Probe envelope keeps. The cold first shot is still published
-        // (cold_sec) so the first-touch cost stays visible, adjudicated
-        // by its own gc/cpu telemetry instead of a per-round essay.
-        def timed(dir: String): Seq[(String, Option[Double], Long, Long, Long, Option[Double])] = {
-          // Size-scaled shuffle partitioning for the decade probes
-          // (round-17 dd20 finding): at shuffle.partitions = 4 the sf1
-          // verification joins (185M rows for dd20) ran in 4 oversized
-          // partitions and the in-bench decade ratio read 31x where the
-          // candidate count scales exactly 10.0x — UNDER-PARTITIONING,
-          // not algorithm. Probes run with a high AQE
-          // initialPartitionNum (AQE coalesces the small scale's stages
-          // back down), i.e. the partition policy a real deployment uses
-          // at growing scale; dd20's sf1 pass drops 156 -> 99 s under
-          // it. Since r18 the policy is the GraftSession default
-          // (input-bytes/2 MB, floor = cores); here it is
-          // re-derived PER SCALE from the probed dir's actual bytes so
-          // the sf1 pass runs the partitioning a deployment at that
-          // size would use.
-          spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            GraftSession.initialPartitions(nCores,
-              GraftSession.dirBytes(dir)).toString)
-          def clearAll(): Unit = {
-            spark.catalog.clearCache()
-            graft.queries.SharedArtifacts.clear()
-            graft.queries.DiskArtifacts.clear()
-          }
-          probes.map { n =>
-            clearAll()
-            val tc = System.nanoTime()
-            val okCold = try { SparkEntry.queries(n)(spark, dir).count(); true }
-                         catch { case _: Throwable => false }
-            val coldSec =
-              if (okCold) Some((System.nanoTime() - tc) / 1e9) else None
-            clearAll()
-            // dp01 also runs connectedComponents: clear the slot before
-            // dd06 so a dd06 failure can't republish an earlier query's
-            // telemetry under dd06_cc (ADVICE r8)
-            if (n == "dd06_dup_clusters") graft.operators.DedupOps.lastCcStats = None
-            if (n == "dd13_semantic_dedup")
-              graft.operators.SimilarityOps.lastSemanticStats = None
-            heapPools.foreach(_.resetPeakUsage())
-            val g0 = gcMillis()
-            val c0 = procCpuNs()
-            val t0 = System.nanoTime()
-            val ok = try { SparkEntry.queries(n)(spark, dir).count(); true }
-                     catch { case _: Throwable => false }
-            if (n == "dd06_dup_clusters")
-              ccSnapshot = if (ok) ccJson() else "null"
-            if (n == "dd13_semantic_dedup")
-              semSnapshot = if (ok) semJson() else "null"
-            val wallNs = System.nanoTime() - t0
-            val gcMs = gcMillis() - g0
-            val peakMb = heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
-            // milli-units: 1000 = all cores busy the whole probe
-            val cpuShareMilli =
-              if (c0 < 0 || wallNs <= 0) -1L
-              else (procCpuNs() - c0) * 1000L / (wallNs * nCores)
-            // dd20 row-volume telemetry (VERDICT r17 #1): exact counts
-            // via a dedicated execution AFTER the measured shot (warm
-            // shingle artifact reused) — never riding a timed pass.
-            // `Dataset.observe` was tried and rejected: CollectMetrics
-            // breaks whole-stage codegen on the operator's widest
-            // stages, and the catalog query's orderBy range-sampling
-            // pass double-counts every observed metric.
-            if (n == "dd20_jaccard_join")
-              jxSnapshot = if (!ok) "null" else try {
-                val (raw, cand, ver) =
-                  graft.operators.DedupOps.jaccardJoinStats(
-                    graft.sources.Tables.table(spark, dir, "documents"),
-                    "doc_id", "text", num = 1, den = 2,
-                    shingleTable =
-                      Some(graft.queries.SharedArtifacts.docShingles3(spark, dir)))
-                s"""{"raw_pairs":$raw,"cand_pairs":$cand,"verify_rows":$ver}"""
-              } catch { case _: Throwable => "null" }
-            (n, if (ok) Some(wallNs / 1e9) else None,
-              gcMs, peakMb, cpuShareMilli, coldSec)
-          }
-        }
-        // Pre-touch each scale's parquet into the page cache before its
-        // probe pass (VERDICT r16 #4): the dd2x family's in-bench
-        // decade ratios ran 13-30x vs 4-10x isolated, adjudicated every
-        // round as "cold /tmp sf1 file reads landed inside whichever
-        // probe touched them first". One sequential read per file makes
-        // the FIRST (cold) shot measure codegen + artifact builds — the
-        // documented cost — instead of disk, and the measured 2nd shot
-        // stops depending on what the 1st happened to fault in. The
-        // touch cost is published (pretouch_sec), not hidden.
-        def pretouch(dir: String): Double = {
-          val t0 = System.nanoTime()
-          val buf = new Array[Byte](1 << 20)
-          val ps = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-          try ps.filter(p => java.nio.file.Files.isRegularFile(p)).forEach { p =>
-            val in = java.nio.file.Files.newInputStream(p)
-            try { while (in.read(buf) >= 0) () } finally in.close()
-          } finally ps.close()
-          (System.nanoTime() - t0) / 1e9
-        }
-        // time BOTH scales fresh, back-to-back, in the same warmed state —
-        // reusing the main loop's timings made the ratio compare a cold
-        // first measurement against a warm one (observed ratios < 1)
-        graft.queries.SharedArtifacts.drainEvents() // scope per-scale drains
-        val touch01 = pretouch(sf01)
-        val at01 = timed(sf01); val cc01 = ccSnapshot; val sem01 = semSnapshot
-        val jx01 = jxSnapshot
-        val art01 = artJson()._1
-        val touch1 = pretouch(sf1Dir)
-        val at1 = timed(sf1Dir); val cc1 = ccSnapshot; val sem1 = semSnapshot
-        val jx1 = jxSnapshot
-        val art1 = artJson()._1
-        // restore the main-loop partition config (timed() raised it) —
-        // RESTORE, not unset: GraftSession set the size-scaled default at
-        // build time and the diag line reports it; unset dropped the key
-        // entirely and the Spark 4 typed-conf read of a "null" fallback
-        // then threw TYPE_MISMATCH after the whole run (r18 bench crash)
-        spark.conf.set(
-          "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          GraftSession.initialPartitions(nCores,
-            GraftSession.dirBytes(sfDir)).toString)
-        type PT = (String, Option[Double], Long, Long, Long, Option[Double])
-        def obj(ts: Seq[PT]) = ts.map {
-          case (k, Some(v), _, _, _, _) => s"\"" + k + "\":" + v
-          case (k, None, _, _, _, _)    => s"\"" + k + "\":\"error\""
-        }.mkString("{", ",", "}")
-        def coldObj(ts: Seq[PT]) = ts.map {
-          case (k, _, _, _, _, Some(v)) => s"\"" + k + "\":" + v
-          case (k, _, _, _, _, None)    => s"\"" + k + "\":\"error\""
-        }.mkString("{", ",", "}")
-        def gcObj(ts: Seq[PT]) = ts.map {
-          case (k, _, g, _, _, _) => s"\"" + k + "\":" + g
-        }.mkString("{", ",", "}")
-        def peakObj(ts: Seq[PT]) = ts.map {
-          case (k, _, _, p, _, _) => s"\"" + k + "\":" + p
-        }.mkString("{", ",", "}")
-        def cpuObj(ts: Seq[PT]) = ts.map {
-          case (k, _, _, _, c, _) => s"\"" + k + "\":" + c
-        }.mkString("{", ",", "}")
-        val m01 = at01.map(t => t._1 -> t._2).toMap
-        val m1 = at1.map(t => t._1 -> t._2).toMap
-        val ratios = probes.flatMap { n =>
-          for (a <- m1(n); b <- m01(n)) yield
-            s"\"" + n + "\":" + (math.round(a / math.max(1e-9, b) * 100) / 100.0)
-        }.mkString("{", ",", "}")
-        // core-normalized decade ratio: (cpu_ns sf1)/(cpu_ns sf0.1),
-        // cpu_ns ∝ cpu_share × wall (core count cancels). Separates "the
-        // work grew" from "the cores were busy elsewhere": a wall ratio
-        // of 30× with a cpu ratio of 10× is local-mode saturation, a cpu
-        // ratio of 90× is super-linear work (VERDICT r17 #1/#2).
-        val cpuM01 = at01.map(t => t._1 -> (t._2, t._5)).toMap
-        val cpuM1 = at1.map(t => t._1 -> (t._2, t._5)).toMap
-        val cpuRatios = probes.flatMap { n =>
-          (cpuM01(n), cpuM1(n)) match {
-            case ((Some(w0), c0), (Some(w1), c1)) if c0 > 0 && c1 > 0 =>
-              Some(s"\"" + n + "\":" +
-                (math.round(w1 * c1 / math.max(1e-9, w0 * c0) * 100) / 100.0))
-            case _ => None
-          }
-        }.mkString("{", ",", "}")
-        // compact variant built from the SAME Scala values — re-parsing the
-        // serialized line with a brace matcher silently truncated on any
-        // brace inside a string value (ADVICE r11)
-        val telemetry =
-          s""""ratio_vs_10x_data":$ratios,"cpu_ratio_vs_10x_data":$cpuRatios,"dd06_cc":{"sf0.1":$cc01,"sf1":$cc1},"dd13_cells":{"sf0.1":$sem01,"sf1":$sem1},"dd20_rows":{"sf0.1":$jx01,"sf1":$jx1}"""
-        (s""","sf1":{"build_sec":$buildSec,"protocol":"2-shot-isolated-keep-2nd-pretouched","pretouch_sec":{"sf0.1":${math.round(touch01 * 1000) / 1000.0},"sf1":${math.round(touch1 * 1000) / 1000.0}},"artifacts":{"sf0.1":$art01,"sf1":$art1},"sf0.1":${obj(at01)},"sf1":${obj(at1)},"cold_sec":{"sf0.1":${coldObj(at01)},"sf1":${coldObj(at1)}},"gc_ms":{"sf0.1":${gcObj(at01)},"sf1":${gcObj(at1)}},"peak_heap_mb":{"sf0.1":${peakObj(at01)},"sf1":${peakObj(at1)}},"cpu_share_milli":{"sf0.1":${cpuObj(at01)},"sf1":${cpuObj(at1)}},$telemetry}""",
-         s""","sf1":{$telemetry}""")
-      } else ("", "")
     def r3b(v: Double) = math.round(v * 1000) / 1000.0
-    // diagnostic-run provenance: a filtered/reordered artifact must say so.
+    // diagnostic-run provenance: a filtered artifact must say so.
     // The env value is user-controlled text landing inside a JSON string —
     // escape backslashes/quotes/control chars or a stray quote corrupts the
     // whole BENCH line (ADVICE r17).
@@ -495,7 +171,6 @@ object Bench {
       }
     val diagJson =
       sys.env.get("SPARK_GRAFT_QUERIES").map(v => s""","filter":"${jsonEscape(v)}"""").getOrElse("") +
-        (if (sys.env.get("SPARK_GRAFT_ORDER").contains("reverse")) s""","order":"reverse"""" else "") +
         s""","init_partitions":${spark.conf.getOption("spark.sql.adaptive.coalescePartitions.initialPartitionNum").getOrElse("null")}"""
     // post-clear storage: everything SharedArtifacts + the cache manager
     // own must actually release (the lifetime audit's second half)
@@ -503,7 +178,7 @@ object Bench {
     spark.catalog.clearCache()
     val postClearStorage = storageJson()
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","mode":"warm"$diagJson,"warmup_sec":$warmupSec,"gc_sec":${r3b(gcTotalSec)},"gc_share":${r3b(gcTotalSec / math.max(1e-9, total))},"artifacts":{"warmup":$artWarmup,"main":$artMain},"post_loop_storage":$postLoopStorage,"post_clear_storage":$postClearStorage,$subsetJson,"queries":$qs,"gc_ms":$gcJson,"peak_heap_mb":$peakJson,"cpu_share_milli":$cpuJson,"errors":$errJson,"sf":"$sfDir"$sf1Json}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","mode":"warm"$diagJson,"warmup_sec":$warmupSec,"gc_sec":${r3b(gcTotalSec)},"gc_share":${r3b(gcTotalSec / math.max(1e-9, total))},"artifacts":{"warmup":$artWarmup,"main":$artMain},"post_loop_storage":$postLoopStorage,"post_clear_storage":$postClearStorage,$subsetJson,"queries":$qs,"gc_ms":$gcJson,"peak_heap_mb":$peakJson,"cpu_share_milli":$cpuJson,"errors":$errJson,"sf":"$sfDir"}"""
     // VERDICT r15 #7 (ninth round of "What's wrong" #4): the driver's
     // per-round bench run overwrote the builder's committed BENCH_full
     // shot. The full line now ALSO lands in a timestamped file that no
@@ -525,15 +200,25 @@ object Bench {
     // The driver's artifact keeps only the LAST ~2 KB of stdout: ten rounds
     // of BENCH_r*.json carry "parsed": null because the full 133-query line
     // overflows that tail and truncates mid-object. Print a line that FITS —
-    // headline total, the top queries by wall time, error names, and the
-    // sf1 ratio/telemetry summary — and leave every per-query second in
+    // headline total, the top queries by wall time and error names — and
+    // leave every per-query second in
     // BENCH_full.json (committed each round) for the judge's diffs.
     def r3(v: Double) = math.round(v * 1000) / 1000.0
     val top = results.filter(_._2 >= 0).sortBy(-_._2).take(12)
       .map { case (k, v, _, _, _) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val compact =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","mode":"warm"$diagJson,"warmup_sec":${r3(warmupSec)},"gc_sec":${r3(gcTotalSec)},"gc_share":${r3(gcTotalSec / math.max(1e-9, total))},"artifacts":{"warmup":$artWarmupC,"main":$artMainC},"post_loop_storage":$postLoopStorage,"post_clear_storage":$postClearStorage,$subsetJson,"queries":$top,"queries_total":${results.size},"full":"$stampedName","errors":$errJson,"sf":"$sfDir"$sf1Compact}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","mode":"warm"$diagJson,"warmup_sec":${r3(warmupSec)},"gc_sec":${r3(gcTotalSec)},"gc_share":${r3(gcTotalSec / math.max(1e-9, total))},"artifacts":{"warmup":$artWarmupC,"main":$artMainC},"post_loop_storage":$postLoopStorage,"post_clear_storage":$postClearStorage,$subsetJson,"queries":$top,"queries_total":${results.size},"full":"$stampedName","errors":$errJson,"sf":"$sfDir"}"""
     println(compact)
     spark.stop()
   }
+
+  /** This JVM's total CPU time in ns across all threads, or -1 where the
+    * platform bean does not expose it. Bench's cpu_share and Sf1Probe's
+    * CPU ratio both read it around a timed action.
+    */
+  private[graft] def processCpuNanos(): Long =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
+      case _ => -1L
+    }
 }

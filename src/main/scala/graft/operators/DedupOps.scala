@@ -896,17 +896,6 @@ object DedupOps {
         (col("n_novel").cast("double") / col("n_shingles")).as("novelty_frac"))
   }
 
-  /** Convergence telemetry from the most recent [[connectedComponents]]
-    * run in this JVM: round count and per-round wall millis. Exists so
-    * the bench's scale probe can distinguish "iteration count grows with
-    * corpus structure" from "one slow round was noise" (VERDICT r7 —
-    * dd06's single-run 12.84× sf1 ratio was unexplainable without this).
-    * Diagnostic only; single-writer per run (the driver loop), volatile
-    * for cross-thread reads.
-    */
-  @volatile var lastCcStats: Option[CcStats] = None
-  final case class CcStats(rounds: Int, roundMillis: Seq[Long])
-
   /** Connected components over a near-dup candidate graph (hash-min label
     * propagation): every vertex converges to the minimum id reachable in
     * its component — the canonical "collapse duplicate clusters" step that
@@ -948,9 +937,7 @@ object DedupOps {
       vertices.select(col(idCol).as("id"), col(idCol).as("label")))
     var converged = false
     var iter = 0
-    val roundMillis = Seq.newBuilder[Long]
     while (!converged && iter < maxIterations) {
-      val tRound = System.nanoTime()
       val neighborMin = und.join(labels, und("src") === labels("id"))
         .groupBy(col("dst")).agg(min("label").as("nmin"))
       val updated = Exec.materializeForSelfJoin(
@@ -981,11 +968,9 @@ object DedupOps {
           Exec.releaseMaterialized(updated)
           jumped
         }
-      roundMillis += (System.nanoTime() - tRound) / 1000000L
       iter += 1
     }
     Exec.releaseMaterialized(und)
-    lastCcStats = Some(CcStats(iter, roundMillis.result()))
     // a silently-unconverged result is a wrong clustering; fail loudly so
     // callers raise maxIterations (or switch to large-star/small-star)
     if (!converged) throw new IllegalStateException(

@@ -98,13 +98,18 @@ object PrefixSumOps {
     * per-bucket row count ~sqrt(n) at any corpus size.
     */
   def exclusiveRunningSumAuto(df: DataFrame, partCols: Seq[String],
-      orderCol: String, valueCol: String, outCol: String): DataFrame = {
+      orderCol: String, valueCol: String, outCol: String): DataFrame =
+    exclusiveRunningSum(df, partCols, orderCol, valueCol, outCol,
+      sqrtRangeWidth(df, orderCol))
+
+  /** `bucketWidthFor` of `orderCol`'s value range, from one min/max job;
+    * 1 on empty input, where any width is correct.
+    */
+  private def sqrtRangeWidth(df: DataFrame, orderCol: String): Long = {
     val bounds = df.agg(min(col(orderCol)).cast("long").as("lo"),
       max(col(orderCol)).cast("long").as("hi")).head()
-    val width =
-      if (bounds.isNullAt(0)) 1L  // empty input: any width is correct
-      else bucketWidthFor(bounds.getLong(1) - bounds.getLong(0) + 1)
-    exclusiveRunningSum(df, partCols, orderCol, valueCol, outCol, width)
+    if (bounds.isNullAt(0)) 1L
+    else bucketWidthFor(bounds.getLong(1) - bounds.getLong(0) + 1)
   }
 
   /** Exclusive running MAX: for each row, the max of `valueCol` over all
@@ -147,14 +152,9 @@ object PrefixSumOps {
     * sqrt-range bucket width.
     */
   def exclusiveRunningMaxAuto(df: DataFrame, partCols: Seq[String],
-      orderCol: String, valueCol: String, outCol: String): DataFrame = {
-    val bounds = df.agg(min(col(orderCol)).cast("long").as("lo"),
-      max(col(orderCol)).cast("long").as("hi")).head()
-    val width =
-      if (bounds.isNullAt(0)) 1L
-      else bucketWidthFor(bounds.getLong(1) - bounds.getLong(0) + 1)
-    exclusiveRunningMax(df, partCols, orderCol, valueCol, outCol, width)
-  }
+      orderCol: String, valueCol: String, outCol: String): DataFrame =
+    exclusiveRunningMax(df, partCols, orderCol, valueCol, outCol,
+      sqrtRangeWidth(df, orderCol))
 
   /** Budget-take (data-mixture selection): keep, per group, the rows
     * first in `orderCol` order until the group's `valueCol` budget is
@@ -231,32 +231,6 @@ object PrefixSumOps {
       .drop("_pps_excl", "_pps_tot")
   }
 
-  /** GLOBAL dense position (1-based) of every row under a total order —
-    * `row_number() OVER (ORDER BY orderCol)` without the single reducer
-    * that window implies: a global sort-rank is the degenerate
-    * lowest-cardinality case (ONE group) of the prefix-sum problem, so it
-    * reuses [[exclusiveRunningSum]] with no partition columns and
-    * weight 1.
-    *
-    * '''Width for SPARSE keys.''' [[exclusiveRunningSumAuto]]'s
-    * `sqrt(range)` width balances the two phases only when the order key
-    * is dense (range ≈ n, the dp03 doc_id case). A composite key like
-    * `score·R + id` is sparse — range can be n², and `sqrt(range)` would
-    * leave a ~sqrt(range) ≥ n^1 offsets table for one phase-3 task. This
-    * takes `n` from a count and uses `width = max(sqrt(range), range /
-    * sqrt(n))`: non-empty buckets ≤ range/width ≤ sqrt(n) rows of
-    * offsets for ANY key sparsity, and per-bucket phase-4 rows ≈
-    * n·width/range = sqrt(n) for keys spread over their range (a
-    * `score·R + id` composite is id-uniform by construction; a key whose
-    * values all cluster inside one width-window degrades phase 4 toward
-    * the rows that share that window).
-    *
-    * `orderCol` must be a unique non-negative long (build composite keys
-    * as `primary·R + secondary` with R > max(secondary), both derived
-    * from data the way [[exclusiveRunningSumAuto]] derives its width).
-    * The training-data use is curriculum ordering: rank by a difficulty /
-    * quality key once, globally, then shard by `rank div shardSize`.
-    */
   /** Deterministic weighted-fair mixture interleave — the ORDERING step
     * of a training-data pipeline: given per-source integer weights,
     * produce the single global sequence in which source s's documents
@@ -309,6 +283,32 @@ object PrefixSumOps {
       .drop("_mi_key", "w", "src_idx")
   }
 
+  /** GLOBAL dense position (1-based) of every row under a total order —
+    * `row_number() OVER (ORDER BY orderCol)` without the single reducer
+    * that window implies: a global sort-rank is the degenerate
+    * lowest-cardinality case (ONE group) of the prefix-sum problem, so it
+    * reuses [[exclusiveRunningSum]] with no partition columns and
+    * weight 1.
+    *
+    * '''Width for SPARSE keys.''' [[exclusiveRunningSumAuto]]'s
+    * `sqrt(range)` width balances the two phases only when the order key
+    * is dense (range ≈ n, the dp03 doc_id case). A composite key like
+    * `score·R + id` is sparse — range can be n², and `sqrt(range)` would
+    * leave a ~sqrt(range) ≥ n^1 offsets table for one phase-3 task. This
+    * takes `n` from a count and uses `width = max(sqrt(range), range /
+    * sqrt(n))`: non-empty buckets ≤ range/width ≤ sqrt(n) rows of
+    * offsets for ANY key sparsity, and per-bucket phase-4 rows ≈
+    * n·width/range = sqrt(n) for keys spread over their range (a
+    * `score·R + id` composite is id-uniform by construction; a key whose
+    * values all cluster inside one width-window degrades phase 4 toward
+    * the rows that share that window).
+    *
+    * `orderCol` must be a unique non-negative long (build composite keys
+    * as `primary·R + secondary` with R > max(secondary), both derived
+    * from data the way [[exclusiveRunningSumAuto]] derives its width).
+    * The training-data use is curriculum ordering: rank by a difficulty /
+    * quality key once, globally, then shard by `rank div shardSize`.
+    */
   def globalRank(df: DataFrame, orderCol: String,
       outCol: String = "rank"): DataFrame = {
     val b = df.agg(min(col(orderCol)).cast("long").as("lo"),

@@ -1062,37 +1062,46 @@ object SimilarityOps {
     * @param maxSignAxes sign string is built once from the first
     *        `maxSignAxes` coordinates; each cell keeps a prefix of it
     */
-  /** Pair-scan telemetry from the most recent [[semanticNearDupPairs]]
-    * call in this JVM: trained-cell count, candidate-pair total, and the
-    * largest (cell, sub-bucket) partition the pair join sees. Exists so
-    * the bench's sf1 probe can publish the pair-scan bound as measured
-    * numbers at both scales every round (the dd06_cc pattern — VERDICT
-    * r9 #6). Computed from the already-materialized assignment table
-    * (one cheap aggregate over DISK_ONLY-cached rows). Diagnostic only;
-    * single-writer per run, volatile for cross-thread reads.
-    */
-  @volatile var lastSemanticStats: Option[SemStats] = None
-  final case class SemStats(cells: Long, candidatePairs: Long,
-      maxPartitionRows: Long)
-
   def semanticNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, threshold: Double, roundSim: Int = 6,
       targetCell: Int = 64, maxSignAxes: Int = 8, probes: Int = 1): DataFrame =
-    semanticNearDupPairsWithStats(df, idCol, vecCol, centroids, threshold,
-      roundSim, targetCell, maxSignAxes, probes)._1
+    semanticPairScan(df, idCol, vecCol, centroids, threshold, roundSim,
+      targetCell, maxSignAxes, probes)._1
 
-  /** [[semanticNearDupPairs]] plus the pair-scan stats as a RETURN VALUE
-    * — the caller-safe channel (ADVICE r16 #3: dd28 baked the
-    * [[lastSemanticStats]] global into its plan as a literal, so any
-    * interleaved call between its probes=1 and probes=2 invocations
-    * would silently publish the wrong n_cand_pairs). The global is
-    * still written (the bench's dd13 telemetry snapshot reads it), but
-    * a caller that needs ITS OWN call's stats takes them from here.
+  /** Pair-scan stats of one [[semanticNearDupPairsWithStats]] call:
+    * trained-cell count, candidate-pair total, and the largest
+    * (cell, sub-bucket) partition the pair join sees.
+    */
+  final case class SemStats(cells: Long, candidatePairs: Long,
+      maxPartitionRows: Long)
+
+  /** [[semanticNearDupPairs]] plus that call's pair-scan stats as a
+    * return value (dd28 publishes its candidate-pair count per probe
+    * setting). The stats are one eager aggregate over the materialized
+    * assignment table, so only callers that need them pay that job.
     */
   def semanticNearDupPairsWithStats(df: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, threshold: Double,
       roundSim: Int = 6, targetCell: Int = 64, maxSignAxes: Int = 8,
       probes: Int = 1): (DataFrame, SemStats) = {
+    val (out, keyed) = semanticPairScan(df, idCol, vecCol, centroids,
+      threshold, roundSim, targetCell, maxSignAxes, probes)
+    // coalesce: sum()/max() are NULL on an empty corpus (ADVICE r9)
+    val row = keyed.groupBy("cell", "_sd_bucket").agg(count(lit(1)).as("c"))
+      .select(coalesce(countDistinct(col("cell")), lit(0L)).as("cells"),
+        coalesce(sum((col("c") * (col("c") - 1) / 2).cast("long")), lit(0L)).as("pairs"),
+        coalesce(max(col("c")), lit(0L)).as("maxPart"))
+      .collect()(0)
+    (out, SemStats(row.getLong(0), row.getLong(1), row.getLong(2)))
+  }
+
+  /** The pair scan behind [[semanticNearDupPairs]]: the pairs frame plus
+    * the (cell, _sd_bucket, _sd_id, _sd_vec) table it self-joins.
+    */
+  private def semanticPairScan(df: DataFrame, idCol: String,
+      vecCol: String, centroids: DataFrame, threshold: Double,
+      roundSim: Int, targetCell: Int, maxSignAxes: Int,
+      probes: Int): (DataFrame, DataFrame) = {
     // probes > 1 = multi-probe assignment (dd28's measured finding: the
     // single-cell bound loses boundary-straddling pairs — probing each
     // vector's 2 nearest cells recovers them for a ~2x candidate-pair
@@ -1128,16 +1137,6 @@ object SimilarityOps {
     val keyed = withVec.join(broadcast(cellSizes), "cell")
       .withColumn("_sd_bucket", col("_sd_sign").substr(lit(1), col("_sd_axes")))
       .select(col("cell"), col("_sd_bucket"), col("_sd_id"), col("_sd_vec"))
-    // telemetry: one aggregate over the cached assignment (coalesce —
-    // sum()/max() are NULL on an empty corpus, ADVICE r9)
-    val statsRow = keyed.groupBy("cell", "_sd_bucket").agg(count(lit(1)).as("c"))
-      .select(coalesce(countDistinct(col("cell")), lit(0L)).as("cells"),
-        coalesce(sum((col("c") * (col("c") - 1) / 2).cast("long")), lit(0L)).as("pairs"),
-        coalesce(max(col("c")), lit(0L)).as("maxPart"))
-      .collect()(0)
-    val stats = SemStats(statsRow.getLong(0), statsRow.getLong(1),
-      statsRow.getLong(2))
-    lastSemanticStats = Some(stats)
     val l = keyed.select(col("cell"), col("_sd_bucket"),
       col("_sd_id").as("id1"), col("_sd_vec").as("_sd_v1"))
     val r = keyed.select(col("cell"), col("_sd_bucket"),
@@ -1152,7 +1151,7 @@ object SimilarityOps {
       else pairs.groupBy("id1", "id2") // a pair can share 2 probed cells
         .agg(min("cell").as("cell"), max("sim").as("sim"))
         .select(col("cell"), col("id1"), col("id2"), col("sim"))
-    (out, stats)
+    (out, keyed)
   }
 
   /** Incremental semantic near-dup: a NEW batch of vectors deduped
@@ -1218,36 +1217,6 @@ object SimilarityOps {
       .withColumn("sim", round(cosine(col("_is_nv"), col("_is_hv")), roundSim))
       .where(col("sim") >= threshold)
       .select(col("cell"), col("new_id"), col("existing_id"), col("sim"))
-  }
-
-  /** Diagnostic (spec support): within-(cell, sub-bucket) candidate pair
-    * count for a corpus assigned with [[scaledCellCount]]-many trained
-    * cells — the number that must grow ~linearly with n for
-    * [[semanticNearDupPairs]] to survive a 100× scale-up — plus the
-    * largest single partition the pair scan would see (the pinned
-    * cell-size bound).
-    *
-    * @return (candidatePairs, maxPartitionRows)
-    */
-  def semanticCandidateStats(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, targetCell: Int = 64,
-      maxSignAxes: Int = 8): (Long, Long) = {
-    val assigned = assignToCentroids(df, idCol, vecCol, centroids)
-    val withVec = assigned.join(df.select(col(idCol), col(vecCol)), idCol)
-      .select(col("cell"),
-        signBucket(col(vecCol).cast("array<double>"), 0 until maxSignAxes).as("_sd_sign"))
-    val cellSizes = withVec.groupBy("cell").agg(count(lit(1)).as("_sd_cn"))
-      .withColumn("_sd_axes", subBucketAxisCount(col("_sd_cn"), targetCell, maxSignAxes))
-      .select(col("cell"), col("_sd_axes"))
-    val row = withVec.join(broadcast(cellSizes), "cell")
-      .select(col("cell"), col("_sd_sign").substr(lit(1), col("_sd_axes")).as("_sd_bucket"))
-      .groupBy("cell", "_sd_bucket").agg(count(lit(1)).as("c"))
-      // coalesce: sum()/max() are NULL on an empty corpus (ADVICE r9)
-      .select(coalesce(sum((col("c") * (col("c") - 1) / 2).cast("long")), lit(0L))
-          .as("pairs"),
-        coalesce(max(col("c")), lit(0L)).as("maxPart"))
-      .collect()(0)
-    (row.getLong(0), row.getLong(1))
   }
 
   /** FILTERED vector search (the production "top-k with a metadata

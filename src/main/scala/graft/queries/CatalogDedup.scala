@@ -1290,9 +1290,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
           .where(round(SimilarityOps.cosine(col("_lv"), col("_rv")), 6) >= 0.6)
           .select("id1", "id2"))
       val perProbe = Seq(1, 2).map { pr =>
-        // stats come back as a VALUE from this call (ADVICE r16 #3) —
-        // never from the shared lastSemanticStats global, which an
-        // interleaved call elsewhere in the JVM could overwrite
+        // each probe setting's stats come back from its own call
         val (detAll, stats) = SimilarityOps.semanticNearDupPairsWithStats(
           emb16, "vec_id", "v16", SharedArtifacts.centroids16(s, d),
           threshold = 0.6, roundSim = 6, targetCell = 64, probes = pr)

@@ -71,8 +71,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and the PlanAuditSpec broadcast allowlists — stay identical whether
   * an artifact was built or served.
   *
-  * Measurement honesty: cold-probe protocols (Bench's sf1 section,
-  * Sf1Probe) call [[clear]] next to `SharedArtifacts.clear()` so "cold"
+  * Measurement honesty: the cold-probe protocol ([[graft.tools.Sf1Probe]])
+  * calls [[clear]] next to `SharedArtifacts.clear()` so "cold"
   * still means build-from-corpus, not read-from-disk — the documented
   * worst-case numbers (dd23's full edge rebuild) keep their meaning.
   */
@@ -252,7 +252,7 @@ object DiskArtifacts {
   }
 
   /** Delete every persisted artifact — the cold-probe protocol's disk
-    * half (Bench sf1 section, Sf1Probe): without it "cold" probes would
+    * half ([[graft.tools.Sf1Probe]]): without it "cold" probes would
     * read yesterday's trained index from /tmp and measure a file scan
     * instead of the build. Probe-tool only: concurrent READERS in
     * another process may fail their first attempt mid-clear (serveOrBuild

@@ -77,39 +77,26 @@ object SharedArtifacts {
     else "absent"
   }
 
-  /** Compute-once-per-(session, corpus) memoization, backed by the
-    * on-disk store: an L1 miss first consults [[DiskArtifacts]] (another
-    * session — or yesterday's run — may have persisted the artifact) and
-    * only a disk miss runs `build`, whose result is persisted as
-    * bucketed parquet and served back from the persisted form — so every
-    * consumer in every session reads the exact same bytes. `build` must
-    * return an already-materialized DataFrame. The in-session handle is
-    * `localCheckpoint`ed like every artifact before r14, so plan shapes
-    * (and PlanAuditSpec's broadcast allowlists) are identical whether
-    * the artifact was built or served.
+  /** The one memo behind every artifact kind: the key carries the
+    * session identity, the sf dir, the tag and the source table's stamp.
     *
     * Deliberately get → build → putIfAbsent, NOT `computeIfAbsent`:
     * artifact builders nest ([[knnGraph16]] calls [[centroids16]]), and
     * ConcurrentHashMap forbids a mapping function from updating the map
     * — a cold nested build can throw IllegalStateException("Recursive
     * update") on a bin collision. The cost is that two racing threads
-    * may both run `build`; the loser's checkpoint blocks are released
-    * and the winner's handle is returned, so callers still see exactly
-    * one shared artifact.
+    * may both run `build`; the loser's handle is released and the
+    * winner's is returned, so callers still see exactly one shared
+    * artifact.
     */
-  def cached(s: SparkSession, tag: String, sfDir: String, table: String,
-      bucketCol: String, nBuckets: Int)(build: => DataFrame): DataFrame = {
+  private def memo(s: SparkSession, tag: String, sfDir: String,
+      table: String)(build: => DataFrame): DataFrame = {
     val key =
       s"${System.identityHashCode(s)}|$tag|$sfDir|${stampOf(sfDir, table)}"
     val hit = cache.get(key)
     if (hit != null) hit
     else {
-      val b0 = DiskArtifacts.buildCount(tag)
-      val t0 = System.nanoTime()
-      val built = Exec.materializeForSelfJoin(
-        DiskArtifacts.serveOrBuild(s, tag, sfDir, table, bucketCol, nBuckets)(build))
-      events.add(ArtEvent(tag, DiskArtifacts.buildCount(tag) > b0,
-        (System.nanoTime() - t0) / 1000000L))
+      val built = build
       val prev = cache.putIfAbsent(key, built)
       if (prev == null) built
       else {
@@ -119,34 +106,53 @@ object SharedArtifacts {
     }
   }
 
-  /** Drop every cached artifact AND release its pinned checkpoint
-    * blocks (values are the `localCheckpoint` handles themselves, so
-    * [[Exec.releaseMaterialized]] applies; a stopped session's release
-    * is a no-op). Cold-cache probe protocols (Bench's sf1 section,
-    * Sf1Probe) call this next to `clearCache()` so BOTH scales pay
-    * artifact builds cold — without it the small-scale side rides the
-    * warmup's session artifacts while the big side builds, inflating
-    * ratios (the q77 17× in-run artifact, BASELINE round 13).
+  /** Compute-once-per-(session, corpus) trained artifact, backed by the
+    * on-disk store: an L1 miss first consults [[DiskArtifacts]] (another
+    * session — or yesterday's run — may have persisted the artifact) and
+    * only a disk miss runs `build`, whose result is persisted as
+    * bucketed parquet and served back from the persisted form — so every
+    * consumer in every session reads the exact same bytes. `build` must
+    * return an already-materialized DataFrame. The in-session handle is
+    * `localCheckpoint`ed like every artifact before r14, so plan shapes
+    * (and PlanAuditSpec's broadcast allowlists) are identical whether
+    * the artifact was built or served.
+    */
+  def cached(s: SparkSession, tag: String, sfDir: String, table: String,
+      bucketCol: String, nBuckets: Int)(build: => DataFrame): DataFrame =
+    memo(s, tag, sfDir, table) {
+      val b0 = DiskArtifacts.buildCount(tag)
+      val t0 = System.nanoTime()
+      val built = Exec.materializeForSelfJoin(
+        DiskArtifacts.serveOrBuild(s, tag, sfDir, table, bucketCol, nBuckets)(build))
+      events.add(ArtEvent(tag, DiskArtifacts.buildCount(tag) > b0,
+        (System.nanoTime() - t0) / 1000000L))
+      built
+    }
+
+  /** Drop every memoized artifact AND release its blocks through
+    * [[Exec.releaseMaterialized]]: it frees a checkpointed or DISK_ONLY
+    * handle and is a no-op on a served parquet frame (and on a stopped
+    * session). Cold-cache probe protocols ([[graft.tools.Sf1Probe]])
+    * call this next to `clearCache()` so BOTH scales pay artifact builds
+    * cold — without it the small-scale side rides the warmup's session
+    * artifacts while the big side builds, inflating ratios (the q77 17×
+    * in-run artifact, BASELINE round 13).
     */
   def clear(): Unit = {
     cache.forEach { (key, df) =>
       DiskArtifacts.releaseOrWarn(key)(Exec.releaseMaterialized(df))
     }
     cache.clear()
-    largeCache.forEach { (key, df) =>
-      DiskArtifacts.releaseOrWarn(key)(df.unpersist(blocking = false))
-    }
-    largeCache.clear()
   }
 
   // --------------------------------------------------------------------
   // Shared DERIVED-INPUT tables (VERDICT r13 #4): the tokenized-document
   // / shingle kernels that dd12/dd14/dd16/dd19/dd20/dp-tx consumers each
   // re-exploded per query. These are NOT trained artifacts — they are
-  // O(corpus) expansions of `documents.text` — so they live in a
-  // separate cache whose values are DISK_ONLY `materializeLarge` handles
-  // (lineage kept, nothing pinned in executor heap; the r7 rule), NOT
-  // localCheckpoints, and they are NOT persisted via [[DiskArtifacts]]
+  // O(corpus) expansions of `documents.text` — so their memo values are
+  // DISK_ONLY `materializeLarge` handles (lineage kept, nothing pinned in
+  // executor heap; the r7 rule), NOT localCheckpoints, and they are NOT
+  // persisted via [[DiskArtifacts]]
   // (a deployment materializes the token table once per corpus as
   // ordinary parquet; re-reading text and splitting is cheaper than
   // shipping the expansion between these sf-scale sessions). The
@@ -156,8 +162,6 @@ object SharedArtifacts {
   // fresh.
   // --------------------------------------------------------------------
 
-  private val largeCache = new ConcurrentHashMap[String, DataFrame]()
-
   /** [[cached]]'s sibling for O(corpus)-FRACTION artifacts (ADVICE r14
     * #5: winnowFp12 is ~2/(w+1) of total corpus characters — routing it
     * through `cached` pinned a corpus-fraction table in executor
@@ -166,41 +170,13 @@ object SharedArtifacts {
     * session map, [[DiskArtifacts]] persistence, disk-miss-only build —
     * but the served frame keeps its parquet lineage and is NOT
     * checkpointed: the bucketed on-disk copy IS the materialization, so
-    * consumers scan it per use (bucket-pruned, nothing pinned). Handles
-    * live in `largeCache` purely as memo keys; `clear()` treats an
-    * un-persisted handle's unpersist as a no-op.
+    * consumers scan it per use (bucket-pruned, nothing pinned).
     */
   private def cachedLargeServed(s: SparkSession, tag: String, sfDir: String,
       table: String, bucketCol: String, nBuckets: Int)(
-      build: => DataFrame): DataFrame = {
-    val key =
-      s"${System.identityHashCode(s)}|$tag|$sfDir|${stampOf(sfDir, table)}"
-    val hit = largeCache.get(key)
-    if (hit != null) hit
-    else {
-      val served =
-        DiskArtifacts.serveOrBuild(s, tag, sfDir, table, bucketCol, nBuckets)(build)
-      val prev = largeCache.putIfAbsent(key, served)
-      if (prev == null) served else prev
-    }
-  }
-
-  private def largeCached(s: SparkSession, tag: String, sfDir: String,
-      table: String)(build: => DataFrame): DataFrame = {
-    val key =
-      s"${System.identityHashCode(s)}|$tag|$sfDir|${stampOf(sfDir, table)}"
-    val hit = largeCache.get(key)
-    if (hit != null) hit
-    else {
-      val built = build
-      val prev = largeCache.putIfAbsent(key, built)
-      if (prev == null) built
-      else {
-        DiskArtifacts.releaseOrWarn(key)(built.unpersist(blocking = false))
-        prev
-      }
-    }
-  }
+      build: => DataFrame): DataFrame =
+    memo(s, tag, sfDir, table)(
+      DiskArtifacts.serveOrBuild(s, tag, sfDir, table, bucketCol, nBuckets)(build))
 
   /** The exploded whitespace-token table [doc_id, tok] over ALL documents
     * (an empty/whitespace doc contributes one "" token — the
@@ -209,7 +185,7 @@ object SharedArtifacts {
     * tf-idf, tx08's commonness and tx22's BM25 term stats.
     */
   def docTokens(s: SparkSession, d: String): DataFrame =
-    largeCached(s, "doctoks", d, "documents") {
+    memo(s, "doctoks", d, "documents") {
       // keyed by the token (guide §2.4): the dominant consumers
       // aggregate or join on tok (tf-idf df counts, commonness ranks,
       // BM25 postings, the unigram/BPE word-frequency passes) and read
@@ -229,7 +205,7 @@ object SharedArtifacts {
     * tx13 novelty).
     */
   def posShingles8(s: SparkSession, d: String): DataFrame =
-    largeCached(s, "possh8", d, "documents") {
+    memo(s, "possh8", d, "documents") {
       Exec.materializeLarge(DedupOps.positionalShingles(
         Tables.table(s, d, "documents"), "text", "doc_id", 8))
     }
@@ -239,7 +215,7 @@ object SharedArtifacts {
     * edge verification) and the [[jaccardEdges12]] artifact build.
     */
   def docShingles3(s: SparkSession, d: String): DataFrame =
-    largeCached(s, "sh3", d, "documents") {
+    memo(s, "sh3", d, "documents") {
       // keyed by the shingle (guide §2.4): jaccardJoinExact's rarity
       // aggregation and rarity join both key on sh and read the kernel
       // co-partitioned; the per-doc prefix window pays its id exchange

@@ -1,13 +1,29 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev tool (VERDICT r3 stretch): extend the recorded scale sweep one decade
-  * past the driver-generated corpus for the five heaviest operators
-  * (dd06, dp01, tx06, q51, q66) — the first point where per-row compute
-  * should clear the fixed-overhead floor, turning "flat wall time" into
-  * a real scaling slope.
+/** The decade probe: `runMain graft.tools.Sf1Probe [runs] [names…]`
+  * times each probe query at sf0.1 and at a synthetic sf1 (ten times
+  * the data) and prints, per probe and run, both wall times, the wall
+  * ratio and the CPU ratio. Decade probes are judged on the CPU ratio:
+  * process CPU time at sf1 over that at sf0.1 separates "the work grew"
+  * from "the cores were busy elsewhere" — a wall ratio of 30× with a CPU
+  * ratio of 10× is local-mode saturation, a CPU ratio of 90× is
+  * super-linear work.
+  *
+  * Protocol: one untimed warm-up at sf0.01 (JIT and codegen); then each
+  * timed write (`noop`, the full answer) starts from a cleared cache and
+  * cleared shared artifacts, in memory and on disk, so BOTH scales pay
+  * their one-time materializations cold, and with the initial partition
+  * count re-derived from that scale's input bytes (the
+  * [[graft.GraftSession]] policy). A probe that throws prints `error`
+  * for that scale and is left out of both ratios; the run goes on
+  * (ADVICE r7: a time-to-failure is not a measurement). dd20 also prints
+  * its raw / candidate / verify row counts per scale, from a separate
+  * execution after the timed write.
   *
   * The sf1 corpus is synthesized in /tmp as 10 structure-preserving
   * copies of sf0.1 (the driver's testdata is read-only and tops out at
@@ -36,32 +52,23 @@ import org.apache.spark.sql.functions._
   *    per-block cost dd22's fuzzy-join probe measures.
   */
 object Sf1Probe {
+  // the catalog's heaviest operators, each with a decade ratio on record
   private val probes = Seq("dd06_dup_clusters", "dp01_curation_pipeline",
-    "tx06_tfidf", "q51_stream_join", "q66_stream_upsert",
-    "dd13_semantic_dedup", "ann08_kmeans_train",
-    // VERDICT r14 #1: the driver's in-run sf1 section read 13.9–26.2x
-    // on these four where the committed envelope reads 1.7–6.2x —
-    // they join the DEFAULT isolated list so every `runMain
-    // graft.tools.Sf1Probe 3` leaves a contention-controlled decade
-    // ratio on record (tx14 had none at all when it was flagged weak)
-    "tx14_bigram_lm", "dd17_lsh_recall", "dd20_jaccard_join",
-    "dd23_incremental_clusters",
-    // VERDICT r15 #1: ann18 read 36.26s in the r15 driver main loop vs
-    // 3.68s committed idle with NO isolated full-query probe on record —
-    // it joins the default list so every `runMain graft.tools.Sf1Probe 3`
-    // leaves a contention-controlled decade ratio for it
-    "ann18_graph_depth_curve",
-    // VERDICT r17 (r16 #2): the r16 in-bench sf1 section read dp09 at
-    // 23.0x with no same-round envelope; the isolated 3-run protocol
-    // reads 2.0/1.6/1.6x (BASELINE round 17) — it joins the default
-    // list so every future probe run re-certifies the near-linear
-    // shingle equi-join slope
-    "dp09_decontam")
+    "tx36_classifier_eval", "dd28_semantic_recall", "tx06_tfidf",
+    "q51_stream_join", "q66_stream_upsert", "dp03_seq_packing",
+    "q68_pagerank", "ann07_recall", "dp09_decontam", "tx08_commonness",
+    "dd12_substring_spans", "dd13_semantic_dedup", "ann08_kmeans_train",
+    "tx14_bigram_lm", "dd17_lsh_recall", "q77_triangle_count",
+    "ann14_knn_graph", "tx18_zipf_slope", "dd20_jaccard_join",
+    "dp24_shard_manifest", "ann16_graph_search",
+    "q87_personalized_pagerank", "q86_graph_distance", "q90_cheapest_path",
+    "tx22_bm25_retrieval", "dd22_fuzzy_join", "q92_label_prop",
+    "dd23_incremental_clusters", "dp30_kcenter_coreset",
+    "dd24_exact_substr", "dd25_winnow_fingerprints",
+    "ann18_graph_depth_curve")
 
-  /** Also called by graft.Bench's optional sf1 section. Idempotent: the
-    * `_DONE` marker caches the built corpus across runs/rounds.
-    */
-  private[graft] def buildSf1(spark: SparkSession, src: String, dst: String,
+  /** Idempotent: the `_DONE` marker caches the built corpus across runs. */
+  private def buildSf1(spark: SparkSession, src: String, dst: String,
       copies: Int): Unit = {
     import java.nio.file.{Files => JF, Paths}
     val fs = Paths.get(dst)
@@ -160,8 +167,8 @@ object Sf1Probe {
     buildSf1(spark, sf01, sf1, copies = 10)
     val cat = graft.queries.Catalog.all.map(q => q.name -> q).toMap
     // optional args: [runs] [probe names...] — e.g. `3 dd17_lsh_recall`
-    // repeats the dd17 decade probe three times (the idle 3-run
-    // protocol, VERDICT r11 #2); no args = the default list once
+    // repeats the dd17 decade probe three times; no args = the default
+    // list once
     val (runs, sel) = args.toSeq match {
       case n +: rest if n.forall(_.isDigit) && rest.nonEmpty =>
         (n.toInt, rest)
@@ -169,44 +176,55 @@ object Sf1Probe {
       case Nil => (1, probes)
       case names => (1, names)
     }
-    // warm-up at sf0.01 (JIT + codegen), then time one decade apart
-    sel.foreach(n => cat(n).fn(spark, "/root/testdata/sf0.01")
-      .write.format("noop").mode("overwrite").save())
-    println(f"${"query"}%-24s ${"sf0.1"}%9s ${"sf1"}%9s ${"ratio"}%7s")
-    for (_ <- 1 to runs) sel.foreach { n =>
-      val times = Seq(sf01, sf1).map { sf =>
-        // both scales pay their one-time materializations cold — a warm
-        // sf0.1 pass vs a cold sf1 pass flatters the ratio (graft.Bench's
-        // sf1-section protocol)
-        spark.catalog.clearCache()
-        graft.queries.SharedArtifacts.clear()
-        graft.queries.DiskArtifacts.clear()
-        // size-scaled initial partitions, re-derived per scale — the
-        // same policy graft.Bench's sf1 section and GraftSession use
-        // (VERDICT r17 #3), so envelopes recorded here stay comparable
-        spark.conf.set(
-          "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          graft.GraftSession.initialPartitions(cpus.toInt,
-            graft.GraftSession.dirBytes(sf)).toString)
-        val t0 = System.nanoTime()
-        cat(n).fn(spark, sf).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // dd20 row-volume telemetry (VERDICT r17 #1): raw pre-distinct
-        // self-join rows vs distinct candidates vs verify rows, printed
-        // per scale so the decade slope of each stage is on record.
-        // Exact counts via a dedicated execution AFTER the timed pass
-        // (reusing the still-warm shingle artifact) — never riding or
-        // distorting the measurement itself.
-        if (n == "dd20_jaccard_join") {
-          val (raw, cand, ver) = graft.operators.DedupOps.jaccardJoinStats(
-            graft.sources.Tables.table(spark, sf, "documents"), "doc_id",
-            "text", num = 1, den = 2,
-            shingleTable = Some(graft.queries.SharedArtifacts.docShingles3(spark, sf)))
-          println(s"""  dd20_rows[$sf] = {"raw_pairs":$raw,"cand_pairs":$cand,"verify_rows":$ver}""")
-        }
-        sec
+    def attempt[T](what: String)(body: => T): Option[T] =
+      try Some(body) catch { case NonFatal(e) =>
+        System.err.println(
+          s"[sf1probe] $what failed: ${e.getClass.getName}: ${e.getMessage}")
+        None
       }
-      println(f"$n%-24s ${times(0)}%8.2fs ${times(1)}%8.2fs ${times(1) / times(0)}%6.1fx")
+    def write(n: String, sf: String): Unit =
+      cat(n).fn(spark, sf).write.format("noop").mode("overwrite").save()
+    sel.foreach(n => attempt(s"warmup $n")(write(n, "/root/testdata/sf0.01")))
+    // (wall seconds, process CPU ns) of one cold timed write
+    def timed(n: String, sf: String): Option[(Double, Long)] = {
+      spark.catalog.clearCache()
+      graft.queries.SharedArtifacts.clear()
+      graft.queries.DiskArtifacts.clear()
+      spark.conf.set(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        graft.GraftSession.initialPartitions(cpus.toInt,
+          graft.GraftSession.dirBytes(sf)).toString)
+      attempt(s"$n at $sf") {
+        val c0 = graft.Bench.processCpuNanos()
+        val t0 = System.nanoTime()
+        write(n, sf)
+        ((System.nanoTime() - t0) / 1e9, graft.Bench.processCpuNanos() - c0)
+      }
+    }
+    def ratio(a: Option[Double], b: Option[Double]): String =
+      (for (x <- a; y <- b if y > 0) yield f"${x / y}%6.1fx").getOrElse("     -")
+    println(f"${"query"}%-26s ${"sf0.1"}%9s ${"sf1"}%9s ${"ratio"}%7s ${"cpu"}%7s")
+    for (_ <- 1 to runs) sel.foreach { n =>
+      val Seq(small, big) = Seq(sf01, sf1).map { sf =>
+        val t = timed(n, sf)
+        // raw pre-distinct self-join rows vs distinct candidates vs verify
+        // rows, from an execution AFTER the timed write that reuses its
+        // still-warm shingle artifact, so the timing never carries it
+        if (n == "dd20_jaccard_join" && t.isDefined)
+          attempt(s"dd20_rows at $sf") {
+            val (raw, cand, ver) = graft.operators.DedupOps.jaccardJoinStats(
+              graft.sources.Tables.table(spark, sf, "documents"), "doc_id",
+              "text", num = 1, den = 2,
+              shingleTable = Some(graft.queries.SharedArtifacts.docShingles3(spark, sf)))
+            println(s"""  dd20_rows[$sf] = {"raw_pairs":$raw,"cand_pairs":$cand,"verify_rows":$ver}""")
+          }
+        t
+      }
+      def sec(t: Option[(Double, Long)]) =
+        t.fold(f"${"error"}%9s")(x => f"${x._1}%8.2fs")
+      println(f"$n%-26s ${sec(small)} ${sec(big)} " +
+        s"${ratio(big.map(_._1), small.map(_._1))} " +
+        ratio(big.map(_._2.toDouble), small.map(_._2.toDouble)))
     }
     spark.stop()
   }

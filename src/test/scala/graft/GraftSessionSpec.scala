@@ -47,9 +47,9 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("heavy-list invariant: the bench sf1 probe scales never run " +
       "under-partitioned vs the bytes/2MB dictate") {
-    // the exact derivation graft.Bench's timed() and Sf1Probe apply per
-    // scale dir — for every dir size and core count the policy may be
-    // invoked with, the dictate holds (up to the 1M cap)
+    // the exact derivation graft.tools.Sf1Probe applies per scale dir —
+    // for every dir size and core count the policy may be invoked with,
+    // the dictate holds (up to the 1M cap)
     for (cores <- Seq(4, 32); bytes <- Seq(0L, 200L << 20, 2L << 30)) {
       val p = GraftSession.initialPartitions(cores, bytes)
       assert(p >= ((bytes + MB2 - 1) / MB2).min(1000000L),

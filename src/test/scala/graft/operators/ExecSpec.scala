@@ -204,13 +204,4 @@ class ExecSpec extends AnyFunSuite {
     assert(keyed.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE)
   }
-
-  test("connectedComponents records round telemetry") {
-    val vertices = (1L to 6L).toDF("id")
-    val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("src", "dst")
-    DedupOps.connectedComponents(vertices, edges)
-    val stats = DedupOps.lastCcStats
-    assert(stats.isDefined)
-    assert(stats.get.rounds >= 1 && stats.get.roundMillis.size == stats.get.rounds)
-  }
 }

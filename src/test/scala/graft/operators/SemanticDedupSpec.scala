@@ -59,12 +59,15 @@ class SemanticDedupSpec extends AnyFunSuite {
 
   test("candidate pairs grow ~linearly with corpus size (4x data, not 16x pairs)") {
     val n1 = 1024; val n2 = 4 * n1
-    val (p1, _) = SimilarityOps.semanticCandidateStats(
+    val s1 = SimilarityOps.semanticNearDupPairsWithStats(
       corpus(n1), "id", "vec",
-      trainedCentroids(corpus(n1), SimilarityOps.scaledCellCount(n1)))
-    val (p2, max2) = SimilarityOps.semanticCandidateStats(
+      trainedCentroids(corpus(n1), SimilarityOps.scaledCellCount(n1)),
+      threshold = 0.5)._2
+    val s2 = SimilarityOps.semanticNearDupPairsWithStats(
       corpus(n2), "id", "vec",
-      trainedCentroids(corpus(n2), SimilarityOps.scaledCellCount(n2)))
+      trainedCentroids(corpus(n2), SimilarityOps.scaledCellCount(n2)),
+      threshold = 0.5)._2
+    val (p1, p2, max2) = (s1.candidatePairs, s2.candidatePairs, s2.maxPartitionRows)
     assert(p1 > 0, "probe corpus produced no candidates — not probing anything")
     // quadratic would be ~16x for 4x data; linear is 4x. 8x = generous
     // slack for cluster-shape drift between the two corpora.
@@ -83,9 +86,11 @@ class SemanticDedupSpec extends AnyFunSuite {
         (((i * 2654435761L + d * 40503L) % 1000L) / 500.0f) - 1.0f
       })
     }.toDF("id", "vec")
-    val (pairs, maxPart) = SimilarityOps.semanticCandidateStats(
+    val stats = SimilarityOps.semanticNearDupPairsWithStats(
       df, "id", "vec",
-      trainedCentroids(df, SimilarityOps.scaledCellCount(n.toLong)))
+      trainedCentroids(df, SimilarityOps.scaledCellCount(n.toLong)),
+      threshold = 0.5)._2
+    val (pairs, maxPart) = (stats.candidatePairs, stats.maxPartitionRows)
     val allPairs = n.toLong * (n - 1) / 2
     assert(pairs < allPairs / 10,
       s"pair scan ~quadratic: $pairs of $allPairs all-pairs")
@@ -292,5 +297,56 @@ class SemanticDedupSpec extends AnyFunSuite {
     assert(p2.count() >= p1.count())
     // no duplicate (id1, id2) rows despite pairs sharing two probed cells
     assert(p2.count() == p2.distinct().count())
+  }
+
+  test("semanticNearDupPairs runs one query fewer than semanticNearDupPairsWithStats") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val df = corpus(512)
+    val cents = trainedCentroids(df, SimilarityOps.scaledCellCount(512))
+    cents.collect() // trains outside the counted groups
+    // job group -> (job count, SQL execution ids); adaptive execution
+    // starts one job per shuffle stage, so one eager query is one
+    // execution id but several jobs
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, (Int, Set[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach { g =>
+            val ex = String.valueOf(e.properties.getProperty("spark.sql.execution.id"))
+            seen.merge(g, (1, Set(ex)), (a, b) => (a._1 + b._1, a._2 ++ b._2))
+          }
+    }
+    sc.addSparkListener(listener)
+    // the jobs a call starts while building its frame
+    def jobs(tag: String)(call: => Any): (Int, Int) = {
+      val group = s"semdedup-$tag-${System.nanoTime()}"
+      val marker = s"$group-marker"
+      sc.setJobGroup(group, tag)
+      try call finally sc.clearJobGroup()
+      // one listener sees job events in order: once a later marker job
+      // is visible, every job the call started is too
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.containsKey(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.containsKey(marker))
+      Option(seen.get(group)).fold((0, 0))(v => (v._1, v._2.size))
+    }
+    // the two inputs differ only in a no-op filter, so neither call
+    // reads the other's cached assignment table
+    try {
+      val (plainJobs, plainQueries) = jobs("plain")(SimilarityOps
+        .semanticNearDupPairs(df.where(col("id") > -1L), "id", "vec", cents,
+          threshold = 0.5))
+      val (statsJobs, statsQueries) = jobs("stats")(SimilarityOps
+        .semanticNearDupPairsWithStats(df.where(col("id") > -2L), "id", "vec",
+          cents, threshold = 0.5))
+      info(s"jobs: plain $plainJobs, with stats $statsJobs")
+      assert(plainQueries == statsQueries - 1,
+        s"queries: plain $plainQueries, with stats $statsQueries")
+      assert(plainJobs < statsJobs)
+    } finally sc.removeSparkListener(listener)
   }
 }
