@@ -190,13 +190,19 @@ object Bench {
     val stampedName = "bench_artifacts/BENCH_full_" + java.time.format.DateTimeFormatter
       .ofPattern("yyyyMMdd'T'HHmmss").withZone(java.time.ZoneOffset.UTC)
       .format(java.time.Instant.now()) + ".json"
-    try {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("bench_artifacts"))
-      java.nio.file.Files.write(java.nio.file.Paths.get(stampedName),
-        (line + "\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_full.json"),
-        (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // best-effort; stdout is the contract
+    // stdout is the contract: a file that cannot be written is reported
+    // on stderr, and the run goes on
+    def writeArtifact(file: String): Unit =
+      try {
+        val p = java.nio.file.Paths.get(file)
+        Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
+        java.nio.file.Files.write(p, (line + "\n").getBytes("UTF-8"))
+      } catch {
+        case scala.util.control.NonFatal(e) => System.err.println(
+          s"[bench] could not write $file: ${e.getClass.getName}: ${e.getMessage}")
+      }
+    writeArtifact(stampedName)
+    writeArtifact("BENCH_full.json")
     // The driver's artifact keeps only the LAST ~2 KB of stdout: ten rounds
     // of BENCH_r*.json carry "parsed": null because the full 133-query line
     // overflows that tail and truncates mid-object. Print a line that FITS —

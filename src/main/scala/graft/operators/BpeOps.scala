@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * (left, right) key weighted by word frequency; the argmax is a
   * TakeOrderedAndProject (limit 1); the merge applies as a pure
   * higher-order fold over each word's symbol array, with the winning pair
-  * broadcast-joined in (no driver collect in the loop). Round state is
-  * localCheckpointed per round so plans don't grow.
+  * broadcast-joined in (no driver collect in the loop). The word table
+  * and the merge rows are one [[Exec.iterateAll]] state, so plans don't
+  * grow.
   *
   * Determinism contract (oracle-replayable): the merge rule is the
   * textbook leftmost-greedy fold — walking a word's symbols, the current
@@ -82,32 +83,37 @@ object BpeOps {
     * adjacent pair (true for any natural corpus with multi-character
     * words; a fully-merged degenerate corpus yields fewer rows).
     */
-  def bpeMerges(df: DataFrame, textCol: String, rounds: Int): DataFrame =
-    trainRounds(df, textCol, rounds, needFinalWords = false)._1
+  def bpeMerges(df: DataFrame, textCol: String, rounds: Int): DataFrame = {
+    val (merges, words) = trainRounds(df, textCol, rounds, needFinalWords = false)
+    Exec.releaseMaterialized(words)
+    merges
+  }
 
   /** The shared training loop: `rounds` (argmax, apply) iterations.
     * Returns (merge table, final word table with merged `seq`s). When
     * `needFinalWords` is false the last round's merge application is
-    * skipped (the merge table alone doesn't need it).
+    * skipped (the merge table alone doesn't need it). The merge table
+    * reads every round's 1-row argmax handle, which stay pinned.
     */
   private def trainRounds(df: DataFrame, textCol: String, rounds: Int,
       needFinalWords: Boolean): (DataFrame, DataFrame) = {
     require(rounds >= 1 && rounds <= 16, "rounds must be in [1, 16]")
-    var cur = Exec.materializeForSelfJoin(wordTable(df, textCol))
-    var out: DataFrame = null
-    for (round <- 1 to rounds) {
+    // state (word table, merge rows so far); a skipped final apply
+    // carries the word table over, so the driver keeps it
+    val Seq(words, merges) = Exec.iterateAll(
+      Seq(Exec.materializeForSelfJoin(wordTable(df, textCol))), rounds) { (s, round) =>
+      val cur = s.head
       val best = Exec.materializeForSelfJoin(
         pairCounts(cur).orderBy(col("cnt").desc, col("l"), col("r")).limit(1))
       val row = best.select(lit(round).as("round"), col("l").as("left_sym"),
         col("r").as("right_sym"), col("cnt").cast("long").as("pair_count"))
-      out = if (out == null) row else out.unionByName(row)
-      if (round < rounds || needFinalWords) {
-        val next = Exec.materializeForSelfJoin(applyMerge(cur, best))
-        Exec.releaseMaterialized(cur)
-        cur = next
-      }
+      Seq(
+        if (round < rounds || needFinalWords)
+          Exec.materializeForSelfJoin(applyMerge(cur, best))
+        else cur,
+        s.lift(1).fold(row)(_.unionByName(row)))
     }
-    (out, cur)
+    (merges, words)
   }
 
   /** The train→APPLY cycle (what tx19's merge table is FOR): encode the

@@ -929,10 +929,7 @@ object DedupOps {
     // keyed by the neighbor-min join's key (guide §2.4 co-partitioned
     // loop state): every round's edges⋈labels join reads `und` without
     // an Exchange — only the O(vertices) label rows shuffle per round
-    val und = Exec.materializeForSelfJoinBy(
-      edges.select(col("src"), col("dst"))
-        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct(), col("src"))
+    val und = GraphOps.undirected(edges)
     var labels = Exec.materializeForSelfJoin(
       vertices.select(col(idCol).as("id"), col(idCol).as("label")))
     var converged = false

@@ -135,7 +135,7 @@ object Exec {
 
   /** Free the pinned blocks of a [[materializeForSelfJoin]] handle that
     * no live plan references anymore — without it a superseded loop
-    * round stays pinned until session end (see [[iterate]]).
+    * round stays pinned until session end (see [[iterateAll]]).
     *
     * Only a DataFrame whose plan IS the checkpoint handle (root =
     * `LogicalRDD`, exactly what `localCheckpoint` returns) is released;
@@ -159,28 +159,44 @@ object Exec {
           df.unpersist(blocking = false)
     }
 
-  /** The single-state loop driver: `rounds` applications of `step`,
-    * where `step(state, r)` builds round r from round r − 1's state.
+  /** The loop driver: `rounds` applications of `step`, where
+    * `step(state, r)` builds round r's state from round r − 1's. A
+    * state is a sequence of frames (kmeans: centroids and the M-step
+    * table they derive from).
     *
-    * Loop-state contract (the iterative operators cite it): each round
-    * is materialized with [[materializeForSelfJoin]], so plans stay one
-    * round deep and lineage is cut; only AFTER the successor is
-    * materialized is the state it replaces passed to
-    * [[releaseMaterialized]]. Without that release a 25-round label
-    * table pins 25 copies until session end, evicting useful cache and
-    * widening run-to-run variance under memory pressure. `init` is
-    * released like any other round — a no-op when it is a view derived
-    * from a caller's handle, which therefore stays pinned. With
-    * `rounds = 0` `init` comes back untouched. The caller owns the
-    * returned handle and the loop-invariant tables `step` reads.
+    * Loop-state contract (the iterative operators cite it): `step`
+    * returns its loop-state frames already materialized with
+    * [[materializeForSelfJoin]] — only the step knows the order in
+    * which they derive from one another — so plans stay one round deep
+    * and lineage is cut. Only AFTER the successor state exists does the
+    * driver pass each frame of the replaced state that the new state
+    * does not hold (by reference) to [[releaseMaterialized]], once; a
+    * frame the step carries over unchanged stays pinned. Without that
+    * release a 25-round label table pins 25 copies until session end,
+    * evicting useful cache and widening run-to-run variance under
+    * memory pressure. `init` is released like any other round — a
+    * no-op for a view derived from a caller's handle, which therefore
+    * stays pinned. With `rounds = 0` `init` comes back untouched and
+    * `step` never runs. The caller owns the returned frames and the
+    * loop-invariant tables `step` reads.
+    */
+  def iterateAll(init: Seq[DataFrame], rounds: Int)(
+      step: (Seq[DataFrame], Int) => Seq[DataFrame]): Seq[DataFrame] =
+    (1 to rounds).foldLeft(init) { (state, r) =>
+      val next = step(state, r)
+      // Dataset equality is reference identity, so `distinct` and
+      // `contains` compare handles, not plans
+      state.distinct.filterNot(next.contains).foreach(releaseMaterialized)
+      next
+    }
+
+  /** [[iterateAll]] over a one-frame state; the driver materializes
+    * each round itself.
     */
   def iterate(init: DataFrame, rounds: Int)(
       step: (DataFrame, Int) => DataFrame): DataFrame =
-    (1 to rounds).foldLeft(init) { (state, r) =>
-      val next = materializeForSelfJoin(step(state, r))
-      releaseMaterialized(state)
-      next
-    }
+    iterateAll(Seq(init), rounds)((s, r) =>
+      Seq(materializeForSelfJoin(step(s.head, r)))).head
 
   /** Materialize an O(corpus)-sized table (exploded tokens, shingles)
     * that multiple downstream branches derive from.

@@ -73,19 +73,8 @@ object GraphOps {
     * NEAREST seed, walked at most `maxRounds` rounds — the "blast
     * radius" / influence-neighborhood query over co-occurrence graphs
     * (which suppliers sit within 2 hops of a recalled part; which docs
-    * sit within 3 links of a known-bad source).
-    *
-    * Relational formulation (the dd06 / graphAnnSearch bounded-iteration
-    * discipline): whole-frontier expansion via ONE equi-join on the
-    * symmetrized edge set per round, already-visited nodes pruned with
-    * an anti-join so each round's join input is only the new rim. The
-    * anti-join makes first-reach depth = BFS depth = min seed distance
-    * (re-expanding a visited node can only re-reach visited nodes).
-    * Every round is a fixed number of shuffles on the node key — no
-    * per-seed sequential state, so a million seeds batch through the
-    * same `maxRounds` joins. Loop state is two fixed-width tables
-    * (visited, frontier), materialized and released per round as
-    * [[Exec.iterate]] does for one.
+    * sit within 3 links of a known-bad source). One [[frontierWalk]]
+    * over the [[undirected]] edge set, with no group column.
     *
     * Input edges are undirected `[uCol, vCol]`; seeds any DataFrame with
     * `seedCol`. Output: `[node, dist]`, dist 0 for seeds, one row per
@@ -94,33 +83,57 @@ object GraphOps {
   def boundedDistances(edges: DataFrame, uCol: String, vCol: String,
       seeds: DataFrame, seedCol: String, maxRounds: Int): DataFrame = {
     require(maxRounds >= 0 && maxRounds <= 16, "maxRounds must be in [0, 16]")
-    val e = edges.select(col(uCol).cast("long").as("u"), col(vCol).cast("long").as("v"))
-    // loop-invariant edge table keyed by the per-round join key: every
-    // frontier-expansion join reads it co-partitioned, so only the
-    // O(frontier) rows shuffle per round (guide §2.4)
-    val und = Exec.materializeForSelfJoinBy(
-      e.select(col("u").as("src"), col("v").as("dst"))
-        .unionByName(e.select(col("v").as("src"), col("u").as("dst")))
-        .distinct(), col("src"))
-    var visited = Exec.materializeForSelfJoin(
-      seeds.select(col(seedCol).cast("long").as("node")).distinct()
-        .withColumn("dist", lit(0)))
-    var frontier = visited
-    for (r <- 1 to maxRounds) {
-      val rim = frontier.join(und, frontier("node") === und("src"))
-        .select(und("dst").as("node")).distinct()
-      val next = Exec.materializeForSelfJoin(
-        rim.join(visited.select("node"), Seq("node"), "left_anti")
-          .withColumn("dist", lit(r)))
-      val merged = Exec.materializeForSelfJoin(visited.unionByName(next))
-      if (!(frontier eq visited)) Exec.releaseMaterialized(frontier)
-      Exec.releaseMaterialized(visited)
-      visited = merged
-      frontier = next
-    }
+    val und = undirected(edges.select(col(uCol).cast("long").as("src"),
+      col(vCol).cast("long").as("dst")))
+    val visited = frontierWalk(und,
+      seeds.select(col(seedCol).cast("long").as("node")), Nil, "dist", maxRounds)
     Exec.releaseMaterialized(und)
-    if (!(frontier eq visited)) Exec.releaseMaterialized(frontier)
     visited
+  }
+
+  /** The symmetrized edge set of `[src, dst]` edges: both directions,
+    * distinct, keyed by `src` ([[Exec.materializeForSelfJoinBy]]) so
+    * every per-round join on `src` reads it co-partitioned and only the
+    * O(frontier) rows shuffle per round (guide §2.4). Column types are
+    * the caller's. The caller owns the handle.
+    */
+  def undirected(edges: DataFrame): DataFrame =
+    Exec.materializeForSelfJoinBy(
+      edges.select(col("src"), col("dst"))
+        .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct(), col("src"))
+
+  /** Whole-frontier BFS, per group: expands every group's frontier at
+    * once through ONE equi-join on `und` ([[undirected]] output) per
+    * round, and prunes already-visited `(group, node)` rows with an
+    * anti-join, so first-reach depth = BFS depth = min seed distance
+    * (re-expanding a visited node can only re-reach visited nodes, so
+    * the pruned walk's visited set equals the unpruned
+    * `seeds ∪ expand(seeds) ∪ …` an oracle replays). Every round is a
+    * fixed number of shuffles on the node key — no per-seed sequential
+    * state, so a million seeds batch through the same `rounds` joins.
+    *
+    * The loop state is one fixed-width table — the visited rows with
+    * their first-reach depth in `depthCol` — run by [[Exec.iterate]];
+    * round r's frontier is the rows at depth r − 1.
+    *
+    * @param seeds `groupCols :+ "node"` (duplicates collapse)
+    * @return `groupCols :+ "node" :+ depthCol`, depth 0 for seeds — a
+    *         handle the caller owns
+    */
+  def frontierWalk(und: DataFrame, seeds: DataFrame, groupCols: Seq[String],
+      depthCol: String, rounds: Int): DataFrame = {
+    val key = groupCols :+ "node"
+    Exec.iterate(Exec.materializeForSelfJoin(
+      seeds.select(key.map(col): _*).distinct().withColumn(depthCol, lit(0))),
+      rounds) { (visited, r) =>
+      val rim = visited.where(col(depthCol) === r - 1)
+        .join(und, col("node") === col("src"))
+        .select(groupCols.map(col) :+ col("dst").as("node"): _*).distinct()
+      visited.unionByName(
+        rim.join(visited.select(key.map(col): _*), key, "left_anti")
+          .withColumn(depthCol, lit(r)))
+    }
   }
 
   /** Bounded multi-source WEIGHTED shortest paths (Bellman–Ford,
@@ -187,20 +200,17 @@ object GraphOps {
       rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 16, "rounds must be in [1, 16]")
     import org.apache.spark.sql.expressions.Window
-    val e = edges.select(col(uCol).cast("long").as("u"), col(vCol).cast("long").as("v"))
-    // keyed by the per-round label-join key `t` (§2.4): each LPA round
-    // joins the label table onto the edges by t with the edge side
-    // already partitioned — only the O(nodes) label rows move
-    val und = Exec.materializeForSelfJoinBy(
-      e.select(col("u").as("s"), col("v").as("t"))
-        .unionByName(e.select(col("v").as("s"), col("u").as("t")))
-        .distinct(), col("t"))
+    // each LPA round joins the label table onto the neighbor side `src`
+    // of the symmetric edge set and counts labels per `dst` — only the
+    // O(nodes) label rows move
+    val und = undirected(edges.select(col(uCol).cast("long").as("src"),
+      col(vCol).cast("long").as("dst")))
     val w = Window.partitionBy("node").orderBy(col("_cnt").desc, col("label").asc)
     val labels = Exec.iterate(Exec.materializeForSelfJoin(
-      und.select(col("s").as("node")).distinct()
+      und.select(col("src").as("node")).distinct()
         .withColumn("label", col("node"))), rounds) { (labels, _) =>
-      und.join(labels.withColumnRenamed("node", "t"), Seq("t"))
-        .groupBy(col("s").as("node"), col("label"))
+      und.join(labels.withColumnRenamed("node", "src"), Seq("src"))
+        .groupBy(col("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("_cnt"))
         .withColumn("_rk", row_number().over(w))
         .where(col("_rk") === 1)
@@ -297,8 +307,8 @@ object GraphOps {
     * far above any real web/bipartite corpus after the usual top-domain
     * capping. Each round is one equi-join + one hash aggregation per
     * direction over the deduplicated edge list (no windows, no driver
-    * data); the two alternating states follow [[Exec.iterate]]'s
-    * materialize-then-release contract by hand.
+    * data). The two alternating states run as one [[Exec.iterateAll]]
+    * state `(h, a)`.
     *
     * Returns (side 'hub'|'auth', node, score) for every node that holds
     * nonzero mass after the final round.
@@ -318,32 +328,26 @@ object GraphOps {
       if (Exec.isKeyedHandle(eSrc)) Exec.materializeForSelfJoinBy(eSrc, col("dst"))
       else eSrc // below the keying threshold one handle serves both sides
     val hubs = eSrc.select(col("src").as("node")).distinct()
+    def normalized(raw: DataFrame, node: String): DataFrame =
+      Exec.materializeForSelfJoin(
+        raw.crossJoin(broadcast(
+            raw.agg(greatest(lit(1L), expr("sum(raw) div 1000000000000")).as("q"))))
+          .select(col(node).as("node"), expr("raw div q").as("score")))
+    // state (h, a): the hub round reads the authority round it follows.
     // greatest(1, ...) guards the ANSI divide-by-zero on an empty edge
     // set (the 1-row aggregate still evaluates; the cross join with the
     // empty hub side then discards it)
-    var h = Exec.materializeForSelfJoin(
+    val Seq(h, a) = Exec.iterateAll(Seq(Exec.materializeForSelfJoin(
       hubs.crossJoin(broadcast(
           hubs.agg(expr("1000000000000 div greatest(1, count(*))").as("init"))))
-        .select(col("node"), col("init").as("score")))
-    var a: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val aRaw = eSrc.join(h, col("node") === col("src"))
-        .groupBy(col("dst").as("anode")).agg(sum("score").as("raw"))
-      val prevA = a
-      a = Exec.materializeForSelfJoin(
-        aRaw.crossJoin(broadcast(
-            aRaw.agg(greatest(lit(1L), expr("sum(raw) div 1000000000000")).as("q"))))
-          .select(col("anode").as("node"), expr("raw div q").as("score")))
-      if (prevA != null) Exec.releaseMaterialized(prevA)
-      val hRaw = eDst.join(a, col("node") === col("dst"))
-        .groupBy(col("src").as("hnode")).agg(sum("score").as("raw"))
-      val prevH = h
-      h = Exec.materializeForSelfJoin(
-        hRaw.crossJoin(broadcast(
-            hRaw.agg(greatest(lit(1L), expr("sum(raw) div 1000000000000")).as("q"))))
-          .select(col("hnode").as("node"), expr("raw div q").as("score")))
-      Exec.releaseMaterialized(prevH)
+        .select(col("node"), col("init").as("score")))), rounds) { (s, _) =>
+      val a = normalized(eSrc.join(s.head, col("node") === col("src"))
+        .groupBy(col("dst").as("anode")).agg(sum("score").as("raw")), "anode")
+      val h = normalized(eDst.join(a, col("node") === col("dst"))
+        .groupBy(col("src").as("hnode")).agg(sum("score").as("raw")), "hnode")
+      Seq(h, a)
     }
+    Seq(eSrc, eDst).distinct.foreach(Exec.releaseMaterialized)
     h.select(lit("hub").as("side"), col("node"), col("score"))
       .unionAll(a.select(lit("auth").as("side"), col("node"), col("score")))
   }

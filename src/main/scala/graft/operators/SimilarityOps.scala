@@ -462,8 +462,8 @@ object SimilarityOps {
     * partial-aggregatable argmax keyed by vec_id + one
     * partial-aggregatable explode-agg — no all-pairs stage, no window
     * shuffle of n×k scored rows, no driver loop over data. The tiny
-    * centroid table is checkpointed per round under [[Exec.iterate]]'s
-    * loop-state contract, kept by hand for the M-step.
+    * centroid table and the M-step table it derives from are one
+    * [[Exec.iterateAll]] state, under its loop-state contract.
     *
     * @return long-form centroids after `iters` rounds over the training
     *         set: (cell, dim, n_vectors, mean) — cell is the seed
@@ -483,40 +483,34 @@ object SimilarityOps {
         all.orderBy(
             md5(concat(lit("km:"), col("_km_id").cast("string"))), col("_km_id"))
           .limit(samplePerCell * k))
-    // seed cells are VECTOR IDS — enforce the simCellKey cell-domain
+    // state (centroids, M-step table): each round's centroids derive
+    // from its M-step, which reads the previous round's centroids. Seed
+    // cells are VECTOR IDS — enforce the simCellKey cell-domain
     // contract here (k rows, one-time), the fit's rounds preserve the
     // cell values so the initial check covers every round
-    var centroids = Exec.materializeForSelfJoin(requireCellDomain(
-      vecs.orderBy(col("_km_id")).limit(k)
-        .select(col("_km_id").as("cell"), col("_km_vec").as("_km_cvec"))))
-    var lastM: DataFrame = null
-    for (_ <- 1 to iters) {
-      val scored = vecs.crossJoin(broadcast(centroids))
+    val Seq(centroids, m) = Exec.iterateAll(Seq(Exec.materializeForSelfJoin(
+      requireCellDomain(vecs.orderBy(col("_km_id")).limit(k)
+        .select(col("_km_id").as("cell"), col("_km_vec").as("_km_cvec"))))),
+      iters) { (s, _) =>
+      val scored = vecs.crossJoin(broadcast(s.head))
         .withColumn("_km_sim", round(cosine(col("_km_vec"), col("_km_cvec")), roundSim))
       val assigned = nearestCell(scored, "_km_id", "_km_sim", "cell")
         .select(col("_km_id"), col("cell"))
-      val prevM = lastM
-      lastM = Exec.materializeForSelfJoin(
+      val m = Exec.materializeForSelfJoin(
         quantizedCentroids(vecs.join(assigned, "_km_id"), "cell", "_km_vec", shift))
-      if (prevM != null) Exec.releaseMaterialized(prevM)
-      val updated = lastM
-        .groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
-          x => x.getField("mean")).as("_km_cvec"))
       // empty-cluster fallback: keep the previous centroid for cells the
       // assignment starved (left join preserves all k cells every round)
-      val prevC = centroids
-      centroids = Exec.materializeForSelfJoin(
-        centroids.select(col("cell"), col("_km_cvec").as("_km_prev"))
-          .join(updated, Seq("cell"), "left")
-          .select(col("cell"), coalesce(col("_km_cvec"), col("_km_prev")).as("_km_cvec")))
-      Exec.releaseMaterialized(prevC)
+      Seq(Exec.materializeForSelfJoin(
+        s.head.select(col("cell"), col("_km_cvec").as("_km_prev"))
+          .join(centroidVectors(m, Seq("cell"), "_km_cvec"), Seq("cell"), "left")
+          .select(col("cell"), coalesce(col("_km_cvec"), col("_km_prev")).as("_km_cvec"))),
+        m)
     }
     // the returned M-step table is the only live handle: the training
     // sample and the final centroid round fed it and are dead now
     Exec.releaseMaterialized(centroids)
     if (vecs ne all) Exec.releaseMaterialized(vecs)
-    lastM
+    m
   }
 
   /** Trained product-quantization codebooks: [[kmeansFit]]'s
@@ -542,8 +536,8 @@ object SimilarityOps {
     * Scale shape per round: one (blocks×codes)-row broadcast equi-join
     * on `blk`, one map-side-combinable lexicographic `min(struct(dist,
     * code))` argmin keyed by (vec, blk), one explode-agg M-step — no
-    * window over scored rows, no all-pairs stage; loop state is
-    * checkpointed and released per round like kmeansFit/dd06/q68.
+    * window over scored rows, no all-pairs stage; the codebook and
+    * M-step table are one [[Exec.iterateAll]] state, as in kmeansFit.
     *
     * @return long-form codebook after `iters` rounds over the training
     *         sample: (blk, code, dim, n_vectors, mean) — `code` is the
@@ -571,13 +565,13 @@ object SimilarityOps {
     // sampled ids — code = seed vector id (the kmeansFit convention)
     val seedIds = smp.orderBy("_pq_id").limit(codesPerBlock)
       .select(col("_pq_id").as("_pq_seed"))
-    var codebook = Exec.materializeForSelfJoin(
-      rows.join(broadcast(seedIds), col("_pq_id") === col("_pq_seed"))
-        .select(col("blk"), col("_pq_id").as("code"), col("_pq_sv").as("_pq_cv")))
     val scale = (1L << shift).toDouble
-    var lastM: DataFrame = null
-    for (_ <- 1 to iters) {
-      val scored = rows.join(broadcast(withCodeRank(codebook)), Seq("blk"))
+    // state (codebook, M-step table), as in kmeansFit
+    val Seq(codebook, m) = Exec.iterateAll(Seq(Exec.materializeForSelfJoin(
+      rows.join(broadcast(seedIds), col("_pq_id") === col("_pq_seed"))
+        .select(col("blk"), col("_pq_id").as("code"), col("_pq_sv").as("_pq_cv")))),
+      iters) { (s, _) =>
+      val scored = rows.join(broadcast(withCodeRank(s.head)), Seq("blk"))
         .withColumn("_pq_d", round(expr(
           "aggregate(zip_with(_pq_sv, _pq_cv, (a, b) -> (a - b) * (a - b)), " +
             "0D, (acc, x) -> acc + x)"), roundDist))
@@ -585,8 +579,7 @@ object SimilarityOps {
         // min_by on the single-long key ≡ min(struct(d, code)): keeps
         // the per-round argmin a HashAggregate (round 18)
         .agg(min_by(col("code"), distRankKey(col("_pq_d"), col("_crank"))).as("code"))
-      val prevM = lastM
-      lastM = Exec.materializeForSelfJoin(
+      val m = Exec.materializeForSelfJoin(
         rows.join(assigned, Seq("_pq_id", "blk"))
           .select(col("blk"), col("code"), posexplode(expr(
               s"transform(_pq_sv, y -> cast(floor(y * ${1L << shift}D) as bigint))"))
@@ -594,32 +587,29 @@ object SimilarityOps {
           .groupBy("blk", "code", "dim")
           .agg(count(lit(1)).as("n_vectors"),
             (sum("q").cast("double") / (count(lit(1)) * scale)).as("mean")))
-      if (prevM != null) Exec.releaseMaterialized(prevM)
-      val updated = lastM.groupBy("blk", "code")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
-          x => x.getField("mean")).as("_pq_cv"))
-      val prevC = codebook
-      codebook = Exec.materializeForSelfJoin(
-        codebook.select(col("blk"), col("code"), col("_pq_cv").as("_pq_prev"))
-          .join(updated, Seq("blk", "code"), "left")
+      Seq(Exec.materializeForSelfJoin(
+        s.head.select(col("blk"), col("code"), col("_pq_cv").as("_pq_prev"))
+          .join(centroidVectors(m, Seq("blk", "code"), "_pq_cv"),
+            Seq("blk", "code"), "left")
           .select(col("blk"), col("code"),
-            coalesce(col("_pq_cv"), col("_pq_prev")).as("_pq_cv")))
-      Exec.releaseMaterialized(prevC)
+            coalesce(col("_pq_cv"), col("_pq_prev")).as("_pq_cv"))),
+        m)
     }
     Exec.releaseMaterialized(codebook)
     Exec.releaseMaterialized(smp)
     Exec.releaseMaterialized(rows)
-    lastM
+    m
   }
 
-  /** Long-form [[pqFit]] output → one row per (blk, code) with the
-    * centroid as an array column, ready to broadcast (≤ blocks × codes
-    * rows by construction).
+  /** Long-form centroids ([[kmeansFit]] / [[pqFit]] output, one row per
+    * (keys…, dim)) → one row per `keys` with the centroid as the array
+    * column `as`, in `dim` order — ready to broadcast (≤ cells or
+    * blocks × codes rows by construction).
     */
-  def pqCodebookVectors(codebook: DataFrame): DataFrame =
-    codebook.groupBy("blk", "code")
+  def centroidVectors(longForm: DataFrame, keys: Seq[String], as: String): DataFrame =
+    longForm.groupBy(keys.map(col): _*)
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
-        x => x.getField("mean")).as("cv"))
+        x => x.getField("mean")).as(as))
 
   /** Encode every vector against a trained PQ codebook: one row per
     * (id, blk) with the nearest code by rounded squared L2 (ties to the
@@ -638,7 +628,7 @@ object SimilarityOps {
           s"transform(sequence(0, $blocks - 1), " +
             s"b -> slice(_pe_vec, b * $subDim + 1, $subDim))"))
         .as(Seq("blk", "_pe_sv")))
-    rows.join(broadcast(withCodeRank(pqCodebookVectors(codebook))), Seq("blk"))
+    rows.join(broadcast(withCodeRank(centroidVectors(codebook, Seq("blk", "code"), "cv"))), Seq("blk"))
       .withColumn("_pe_d", round(expr(
         "aggregate(zip_with(_pe_sv, cv, (a, b) -> (a - b) * (a - b)), " +
           "0D, (acc, x) -> acc + x)"), roundDist))
@@ -676,7 +666,7 @@ object SimilarityOps {
           s"transform(sequence(0, $blocks - 1), " +
             s"b -> slice(_adc_qv, b * $subDim + 1, $subDim))"))
         .as(Seq("blk", "_adc_qsv")))
-      .join(broadcast(pqCodebookVectors(codebook)), Seq("blk"))
+      .join(broadcast(centroidVectors(codebook, Seq("blk", "code"), "cv")), Seq("blk"))
       .select(col("query_id"), col("blk"), col("code"),
         expr("cast(round(aggregate(zip_with(_adc_qsv, cv, " +
           "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x) " +
@@ -752,7 +742,7 @@ object SimilarityOps {
           s"transform(sequence(0, $blocks - 1), " +
             s"b -> slice(_ia_dqv, b * $subDim + 1, $subDim))"))
         .as(Seq("blk", "_ia_qsv")))
-      .join(broadcast(pqCodebookVectors(codebook)), Seq("blk"))
+      .join(broadcast(centroidVectors(codebook, Seq("blk", "code"), "cv")), Seq("blk"))
       .select(col("query_id"), col("blk"), col("code"),
         expr("cast(round(aggregate(zip_with(_ia_qsv, cv, " +
           "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x) " +
@@ -849,7 +839,7 @@ object SimilarityOps {
           s"transform(sequence(0, $blocks - 1), " +
             s"b -> slice(_ir_qr, b * $subDim + 1, $subDim))"))
         .as(Seq("blk", "_ir_qsv")))
-    val dtab = qres.join(broadcast(pqCodebookVectors(cb)), Seq("blk"))
+    val dtab = qres.join(broadcast(centroidVectors(cb, Seq("blk", "code"), "cv")), Seq("blk"))
       .select(col("query_id"), col("cell"), col("blk"), col("code"),
         expr("cast(round(aggregate(zip_with(_ir_qsv, cv, " +
           "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x) " +
@@ -1404,16 +1394,15 @@ object SimilarityOps {
     * same probes: recall ≥ the IVF arm by construction (truth items
     * globally dominate the rank order, so hits = min(|pool ∩ truth|,
     * k) is monotone in the pool). Each round expands the WHOLE
-    * frontier at once via one equi-join on the undirected edge set
-    * (src → dst), pruning already-visited nodes with an anti-join so a
-    * round's join input is only the new rim. `rounds` bounds the walk:
-    * the visited pool is ≤ seeds·(maxdeg+1)^rounds per query, and every
-    * round is one shuffle on a two-long edge key — no per-query
-    * sequential state, so 10^6 concurrent queries batch through the
-    * same 2·`rounds` joins. The final exact re-rank is a window over
-    * only the bounded query set's pools. Frontier/visited state is
-    * fixed-width and loop-carried → localCheckpoint per round with
-    * release of superseded handles (the connectedComponents pattern).
+    * frontier at once — [[GraphOps.frontierWalk]] grouped by query over
+    * the [[GraphOps.undirected]] edge set, pruning already-visited
+    * nodes with an anti-join so a round's join input is only the new
+    * rim. `rounds` bounds the walk: the visited pool is
+    * ≤ seeds·(maxdeg+1)^rounds per query, and every round is one
+    * shuffle on a two-long edge key — no per-query sequential state, so
+    * 10^6 concurrent queries batch through the same 2·`rounds` joins.
+    * The final exact re-rank is a window over only the bounded query
+    * set's pools.
     *
     * Determinism: min-id entry points, set-union frontier, rounded
     * cosine with (sim desc, id asc) ties — oracle-replayable round by
@@ -1484,42 +1473,14 @@ object SimilarityOps {
       .where(col("_ga_rn") <= nProbe).select(col("query_id"), col("cell"))
     val entrySeeds = probes.join(ep, Seq("cell"))
       .select(col("query_id"), col("node"))
-    val seeds = (if (warmStart)
+    val seeds = if (warmStart)
         entrySeeds.unionByName(
           queries.select(col("id").as("query_id"), col("id").as("node")))
-      else entrySeeds)
-      .distinct()
-      .withColumn("fdepth", lit(0))
-    // keyed by the walk join's key (guide §2.4): each expansion round
-    // reads the symmetrized kNN edge set co-partitioned — only the
-    // O(frontier) rows shuffle per round
-    val und = Exec.materializeForSelfJoinBy(
-      edges.select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-        .unionByName(
-          edges.select(col("neighbor_id").as("src"), col("query_id").as("dst")))
-        .distinct(), col("src"))
-    var visited = Exec.materializeForSelfJoin(seeds)
-    var frontier = visited
-    for (r <- 1 to rounds) {
-      val rim = frontier.join(und, frontier("node") === und("src"))
-        .select(frontier("query_id"), und("dst").as("node")).distinct()
-      // prune nodes already visited: re-expanding them can only re-reach
-      // visited nodes (expand distributes over union), so the pruned
-      // walk's visited set equals the unpruned one the oracle replays —
-      // and a pruned node's tag is its FIRST-reach depth (= BFS depth)
-      val next = Exec.materializeForSelfJoin(
-        rim.join(visited.select("query_id", "node"),
-            Seq("query_id", "node"), "left_anti")
-          .withColumn("fdepth", lit(r)))
-      val merged = Exec.materializeForSelfJoin(
-        visited.unionByName(next))
-      if (!(frontier eq visited)) Exec.releaseMaterialized(frontier)
-      Exec.releaseMaterialized(visited)
-      visited = merged
-      frontier = next
-    }
+      else entrySeeds
+    val und = GraphOps.undirected(
+      edges.select(col("query_id").as("src"), col("neighbor_id").as("dst")))
+    val visited = GraphOps.frontierWalk(und, seeds, Seq("query_id"), "fdepth", rounds)
     Exec.releaseMaterialized(und)
-    if (!(frontier eq visited)) Exec.releaseMaterialized(frontier)
     val pool = visited.where(col("node") =!= col("query_id"))
       .select(col("query_id"), col("node").as("neighbor_id"), col("fdepth"))
     val q = queries.select(col("id").as("query_id"), col("vec").as("_ga_qvec"))
@@ -1529,6 +1490,8 @@ object SimilarityOps {
       pool.join(broadcast(q), Seq("query_id")).join(n, Seq("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"), col("fdepth"),
           round(cosine(col("_ga_qvec"), col("_ga_nvec")), roundSim).as("sim")))
+    Exec.releaseMaterialized(visited)
+    Exec.releaseMaterialized(base)
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     (1 to rounds).map { d =>
@@ -1593,9 +1556,10 @@ object SimilarityOps {
     * Scale shape: the selection is INHERENTLY sequential in k (each
     * pick conditions the next), so the operator is k bounded passes,
     * each ONE broadcast-1-row distance update + min fold over the
-    * corpus — never a pairwise join; the min-distance state is
-    * fixed-width [id, md], kept by hand under [[Exec.iterate]]'s
-    * loop-state contract alongside the selected set and the last pick.
+    * corpus — never a pairwise join; the selected set and the
+    * fixed-width [id, md] min-distance table are one
+    * [[Exec.iterateAll]] state, and each round's 1-row pick is released
+    * inside its round.
     * The argmax is a global TakeOrderedAndProject (every task keeps 1 row).
     *
     * @return [round (0-based pick order), vec id, dist2 (squared
@@ -1623,38 +1587,37 @@ object SimilarityOps {
         "(x, y) -> (x - y) * (x - y)), 0L, (acc, v) -> acc + v)")
     val seed = quant.orderBy(col("_kc_id").asc).limit(1)
       .select(col("_kc_id").as("_c_id"), col("_kc_q").as("_c_q"))
-    var selected = Exec.materializeForSelfJoin(
-      seed.select(lit(0).as("round"), col("_c_id").as(idCol),
-        lit(0L).as("dist2")))
-    var minDist = Exec.materializeForSelfJoin(
-      quant.crossJoin(broadcast(seed))
-        .where(col("_kc_id") =!= col("_c_id"))
-        .select(col("_kc_id"), col("_kc_q"),
-          dist2("_kc_q", "_c_q").as("_md")))
-    for (r <- 1 until k) {
+    val init = Seq(
+      Exec.materializeForSelfJoin(
+        seed.select(lit(0).as("round"), col("_c_id").as(idCol), lit(0L).as("dist2"))),
+      Exec.materializeForSelfJoin(
+        quant.crossJoin(broadcast(seed))
+          .where(col("_kc_id") =!= col("_c_id"))
+          .select(col("_kc_id"), col("_kc_q"), dist2("_kc_q", "_c_q").as("_md"))))
+    Exec.releaseMaterialized(quant)
+    val Seq(selected, minDist) = Exec.iterateAll(init, k - 1) { (s, r) =>
+      val Seq(sel, md) = s
       // the 1-row argmax is materialized ONCE per round: left lazy it
       // would be re-derived by both consumers below, scanning the
       // corpus-sized minDist twice per round
       val next = Exec.materializeForSelfJoin(
-        minDist.orderBy(col("_md").desc, col("_kc_id").asc).limit(1)
+        md.orderBy(col("_md").desc, col("_kc_id").asc).limit(1)
           .select(col("_kc_id").as("_c_id"), col("_kc_q").as("_c_q"),
             col("_md").as("_c_md")))
-      val sel2 = Exec.materializeForSelfJoin(selected.unionByName(
-        next.select(lit(r).as("round"), col("_c_id").as(idCol),
-          col("_c_md").as("dist2"))))
-      // the picked id also leaves the candidate pool (its md is 0 and
-      // could never win again given the distinct guard, but dropping it
-      // keeps the invariant "minDist = unselected points" literal)
-      val md2 = Exec.materializeForSelfJoin(
-        minDist.crossJoin(broadcast(next.select(col("_c_id"), col("_c_q"))))
-          .where(col("_kc_id") =!= col("_c_id"))
-          .select(col("_kc_id"), col("_kc_q"),
-            least(col("_md"), dist2("_kc_q", "_c_q")).as("_md")))
+      val out = Seq(
+        Exec.materializeForSelfJoin(sel.unionByName(
+          next.select(lit(r).as("round"), col("_c_id").as(idCol),
+            col("_c_md").as("dist2")))),
+        // the picked id also leaves the candidate pool (its md is 0 and
+        // could never win again given the distinct guard, but dropping
+        // it keeps the invariant "minDist = unselected points" literal)
+        Exec.materializeForSelfJoin(
+          md.crossJoin(broadcast(next.select(col("_c_id"), col("_c_q"))))
+            .where(col("_kc_id") =!= col("_c_id"))
+            .select(col("_kc_id"), col("_kc_q"),
+              least(col("_md"), dist2("_kc_q", "_c_q")).as("_md"))))
       Exec.releaseMaterialized(next)
-      Exec.releaseMaterialized(selected)
-      Exec.releaseMaterialized(minDist)
-      selected = sel2
-      minDist = md2
+      out
     }
     Exec.releaseMaterialized(minDist)
     selected

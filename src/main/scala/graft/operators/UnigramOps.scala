@@ -165,21 +165,17 @@ object UnigramOps {
     val words = Exec.materializeForSelfJoin(
       wordFreqs(df, textCol, tokenTable)
         .where(length(col("w")) <= maxWordLen))
-    var pieces = withLogProbs(seedPieces(words, maxLen, minCount))
-    var prevAll: DataFrame = null
-    for (_ <- 1 to rounds) {
+    // state (pieces, E-step counts): `pieces` is a view over the counts
+    // (the driver's release of it is a no-op)
+    val Seq(pieces, _*) = Exec.iterateAll(
+      Seq(withLogProbs(seedPieces(words, maxLen, minCount))), rounds) { (s, _) =>
       // E-step over the current vocabulary (materialized: the DP output
       // feeds the threshold scalar, the prune filter AND the M-step —
       // three consumers of one vocabulary-sized table)
       val all = Exec.materializeForSelfJoin(
-        pieces.select("piece")
-          .join(viterbiCounts(words, pieces, maxLen), Seq("piece"), "left")
+        s.head.select("piece")
+          .join(viterbiCounts(words, s.head, maxLen), Seq("piece"), "left")
           .select(col("piece"), coalesce(col("cnt"), lit(0L)).as("cnt")))
-      // the previous round's state fed this round's (now-materialized)
-      // counts and nothing else — release its pinned blocks
-      // ([[Exec.iterate]]'s contract, kept by hand for the prune)
-      if (prevAll != null) Exec.releaseMaterialized(prevAll)
-      prevAll = all
       // prune threshold: 0.2-discrete-quantile of MULTI-char counts
       // (single chars are exempt; zero-count multi pieces die regardless)
       val multi = all.where(length(col("piece")) >= 2)
@@ -190,8 +186,9 @@ object UnigramOps {
         }
       val kept = all.where(length(col("piece")) === 1
         || (col("cnt") >= thr && col("cnt") > 0))
-      pieces = withLogProbs(kept)
+      Seq(withLogProbs(kept), all)
     }
+    Exec.releaseMaterialized(words)
     pieces.select(col("piece"), col("cnt"), col("lp").as("lp_nano"))
   }
 

@@ -259,6 +259,32 @@ private[queries] trait CatalogAnn extends CatalogShared {
         .orderBy("query_id", "rank")
     })
 
+  /** Brute-force top-k truth for a recall grade: ≤ |queries|·k rows
+    * but a full corpus scan, so it is materialized once (localCheckpoint,
+    * tiny) and the hits join and the n_queries aggregate of every arm
+    * graded against it read the same blocks.
+    */
+  private def truthTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    Exec.materializeForSelfJoin(
+      SimilarityOps.bruteForceTopK(queries, corpus, k = k, roundSim = 6)
+        .select("query_id", "neighbor_id"))
+
+  /** One arm's recall row: |approx ∩ truth| / (n_queries · k), integer
+    * counts and one final division. Two 1-row aggregates; the cross join
+    * is a designed broadcast BNLJ (PlanAuditSpec allowlist), same shape
+    * as tx11/dp07/dp08.
+    */
+  private def recallOf(method: String, approx: DataFrame, truth: DataFrame,
+      k: Int): DataFrame = {
+    val hits = approx.select("query_id", "neighbor_id")
+      .join(truth, Seq("query_id", "neighbor_id"))
+      .agg(count(lit(1)).as("total_hits"))
+    truth.agg(countDistinct("query_id").as("n_queries")).crossJoin(hits)
+      .select(lit(method).as("method"), col("n_queries"), col("total_hits"),
+        (col("total_hits").cast("double") / (col("n_queries") * lit(k)))
+          .as("recall"))
+  }
+
   private val ann07 = Q("ann07_recall", Some(s"""
     WITH v AS (SELECT vec_id, cast(embedding as double[]) AS e FROM embeddings),
     t_lsh AS (${annBruteSql.format("q.vec_id < 50", 5)}),
@@ -451,26 +477,8 @@ private[queries] trait CatalogAnn extends CatalogShared {
     (s, d) => {
       val emb = T(s, d, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      // each truth set is ≤ |queries|·k rows but costs a brute-force
-      // corpus scan — materialize it once (localCheckpoint, tiny) so the
-      // hits join and the n_queries aggregate read the same blocks
-      // instead of re-scanning the corpus per reference
       def truth(qFilter: Column, k: Int): DataFrame =
-        graft.operators.Exec.materializeForSelfJoin(
-          SimilarityOps.bruteForceTopK(emb.where(qFilter), emb, k = k, roundSim = 6)
-            .select("query_id", "neighbor_id"))
-      def recallOf(method: String, approx: DataFrame, t: DataFrame,
-          k: Int): DataFrame = {
-        val hits = approx.select("query_id", "neighbor_id")
-          .join(t, Seq("query_id", "neighbor_id"))
-          .agg(count(lit(1)).as("total_hits"))
-        // two 1-row aggregates; the cross join is a designed broadcast
-        // BNLJ (PlanAuditSpec allowlist), same shape as tx11/dp07/dp08
-        t.agg(countDistinct("query_id").as("n_queries")).crossJoin(hits)
-          .select(lit(method).as("method"), col("n_queries"), col("total_hits"),
-            (col("total_hits").cast("double") / (col("n_queries") * lit(k)))
-              .as("recall"))
-      }
+        truthTopK(emb.where(qFilter), emb, k)
       // trained-centroid IVF: the shared 16-cell coarse quantizer
       // (SharedArtifacts.centroids64 — one kmeansFit on the 256-row
       // salted-md5 sample per session, the ksmp/kc0..kc2 CTE mirror,
@@ -1173,20 +1181,8 @@ private[queries] trait CatalogAnn extends CatalogShared {
       val ivfArm = SimilarityOps.ivfTopK(e, col("id") < 20, idx,
         k = 5, nProbe = 2, roundSim = 6)
       // one brute-force truth scan, shared by both arms (the ann07 move)
-      val truth = graft.operators.Exec.materializeForSelfJoin(
-        SimilarityOps.bruteForceTopK(e.where(col("id") < 20), e,
-          k = 5, roundSim = 6).select("query_id", "neighbor_id"))
-      def recallOf(method: String, approx: DataFrame): DataFrame = {
-        val hits = approx.select("query_id", "neighbor_id")
-          .join(truth, Seq("query_id", "neighbor_id"))
-          .agg(count(lit(1)).as("total_hits"))
-        truth.agg(countDistinct("query_id").as("n_queries")).crossJoin(hits)
-          .select(lit(method).as("method"), col("n_queries"),
-            col("total_hits"),
-            (col("total_hits").cast("double") / (col("n_queries") * lit(5)))
-              .as("recall"))
-      }
-      recallOf("graph", graphArm).unionByName(recallOf("ivf", ivfArm))
+      val truth = truthTopK(e.where(col("id") < 20), e, 5)
+      recallOf("graph", graphArm, truth, 5).unionByName(recallOf("ivf", ivfArm, truth, 5))
         .orderBy("method")
     })
 
@@ -1320,19 +1316,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
         col("v16").cast("array<double>").as("vec"))
       val ivfArm = SimilarityOps.ivfTopK(e, col("id") < 20, idx,
         k = 5, nProbe = 2, roundSim = 6)
-      val truth = graft.operators.Exec.materializeForSelfJoin(
-        SimilarityOps.bruteForceTopK(e.where(col("id") < 20), e,
-          k = 5, roundSim = 6).select("query_id", "neighbor_id"))
-      def recallOf(method: String, approx: DataFrame): DataFrame = {
-        val hits = approx.select("query_id", "neighbor_id")
-          .join(truth, Seq("query_id", "neighbor_id"))
-          .agg(count(lit(1)).as("total_hits"))
-        truth.agg(countDistinct("query_id").as("n_queries")).crossJoin(hits)
-          .select(lit(method).as("method"), col("n_queries"),
-            col("total_hits"),
-            (col("total_hits").cast("double") / (col("n_queries") * lit(5)))
-              .as("recall"))
-      }
+      val truth = truthTopK(e.where(col("id") < 20), e, 5)
       // ONE walk tags first-reach depth, ONE exact-cosine scoring of the
       // depth-3 pool; each depth ranks its subset (mirrors the oracle's
       // p3sc-once design) — running the single-depth search 3x would
@@ -1348,10 +1332,10 @@ private[queries] trait CatalogAnn extends CatalogShared {
         idx, g, col("id") < 20, k = 5, nProbe = 2, maxRounds = 3,
         roundSim = 6, warmStart = false)
       Seq(1, 2, 3).map { r =>
-        recallOf(s"graph_r$r", byDepth.where(col("depth") === r))
+        recallOf(s"graph_r$r", byDepth.where(col("depth") === r), truth, 5)
       }.reduce(_ unionByName _)
-        .unionByName(recallOf("graph_cold_r3", cold.where(col("depth") === 3)))
-        .unionByName(recallOf("ivf", ivfArm))
+        .unionByName(recallOf("graph_cold_r3", cold.where(col("depth") === 3), truth, 5))
+        .unionByName(recallOf("ivf", ivfArm, truth, 5))
         .orderBy("method")
     })
 
@@ -1404,11 +1388,9 @@ private[queries] trait CatalogAnn extends CatalogShared {
       // count is a 1-row metadata aggregate, not a corpus shuffle
       val k = SimilarityOps.scaledCellCount(hist.count(), targetCell = 64)
       val frozen = graft.operators.Exec.materializeForSelfJoin(
-        SimilarityOps.kmeansFit(hist, "vec_id", "v16", k = k,
-            iters = 2, samplePerCell = 16)
-          .groupBy("cell")
-          .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
-            x => x.getField("mean")).as("cvec")))
+        SimilarityOps.centroidVectors(
+          SimilarityOps.kmeansFit(hist, "vec_id", "v16", k = k,
+            iters = 2, samplePerCell = 16), Seq("cell"), "cvec"))
       SimilarityOps.assignToCentroids(
           emb16.select(col("vec_id").cast("long").as("id"),
             col("v16").cast("array<double>").as("vec")),
@@ -1542,22 +1524,11 @@ private[queries] trait CatalogAnn extends CatalogShared {
       val wr = Window.partitionBy("query_id")
         .orderBy(col("sim").desc, col("neighbor_id").asc)
       val e = base.select(col("id"), col("vec"))
-      val truth = graft.operators.Exec.materializeForSelfJoin(
-        SimilarityOps.bruteForceTopK(e.where(col("id") < 20), e,
-          k = 5, roundSim = 6).select("query_id", "neighbor_id"))
-      def recallOf(method: String, approx: DataFrame): DataFrame = {
-        val hits = approx.select("query_id", "neighbor_id")
-          .join(truth, Seq("query_id", "neighbor_id"))
-          .agg(count(lit(1)).as("total_hits"))
-        truth.agg(countDistinct("query_id").as("n_queries")).crossJoin(hits)
-          .select(lit(method).as("method"), col("n_queries"),
-            col("total_hits"),
-            (col("total_hits").cast("double") / (col("n_queries") * lit(5)))
-              .as("recall"))
-      }
+      val truth = truthTopK(e.where(col("id") < 20), e, 5)
       Seq(1, 2, 4).map { p =>
         recallOf(s"ivf_p$p", scored.where(col("prn") <= p)
-          .withColumn("rank", row_number().over(wr)).where(col("rank") <= 5))
+          .withColumn("rank", row_number().over(wr)).where(col("rank") <= 5),
+          truth, 5)
       }.reduce(_ unionByName _).orderBy("method")
     })
 
@@ -1819,28 +1790,14 @@ private[queries] trait CatalogAnn extends CatalogShared {
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val q = emb.where(col("id") < 5)
       val lsh20 = SimilarityOps.lshTopK(q, emb, k = 20)
-      val truth = Exec.materializeForSelfJoin(
-        SimilarityOps.bruteForceTopK(q, emb, k = 10)
-          .select("query_id", "neighbor_id"))
+      val truth = truthTopK(q, emb, 10)
       val fused = SimilarityOps.rrfFuse(Seq(
           lex20.select("query_id", "neighbor_id", "rank"),
           lsh20.select("query_id", "neighbor_id", "rank")),
           kConst = 60, topK = 10)
-      def grade(method: String, arm: DataFrame): DataFrame = {
-        val hits = arm.select("query_id", "neighbor_id")
-          .join(truth, Seq("query_id", "neighbor_id"))
-          .agg(count(lit(1)).as("total_hits"))
-        truth.agg(countDistinct("query_id").as("n_queries"))
-          .crossJoin(hits)
-          .select(lit(method).as("method"),
-            col("n_queries").cast("long").as("n_queries"),
-            col("total_hits").cast("long").as("total_hits"),
-            (col("total_hits").cast("double") / (col("n_queries") * lit(10)))
-              .as("recall"))
-      }
-      grade("lex", lex20.where(col("rank") <= 10))
-        .unionByName(grade("lsh", lsh20.where(col("rank") <= 10)))
-        .unionByName(grade("rrf", fused))
+      recallOf("lex", lex20.where(col("rank") <= 10), truth, 10)
+        .unionByName(recallOf("lsh", lsh20.where(col("rank") <= 10), truth, 10))
+        .unionByName(recallOf("rrf", fused, truth, 10))
         .orderBy("method")
     })
 

@@ -469,11 +469,9 @@ private[queries] trait CatalogDedup extends CatalogShared {
       // k from the HISTORY count (the persisted index's own sizing —
       // one scalar count over the pruned id column, mirrored by kp)
       val k = SimilarityOps.scaledCellCount(hist.count(), targetCell = 64)
-      val cent = SimilarityOps.kmeansFit(hist, "vec_id", "v16", k = k,
-          iters = 2, samplePerCell = 16)
-        .groupBy("cell")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
-          x => x.getField("mean")).as("cvec"))
+      val cent = SimilarityOps.centroidVectors(
+        SimilarityOps.kmeansFit(hist, "vec_id", "v16", k = k,
+          iters = 2, samplePerCell = 16), Seq("cell"), "cvec")
       SimilarityOps.incrementalSemanticNearDup(batch, hist, "vec_id", "v16",
           graft.operators.Exec.materializeForSelfJoin(cent),
           threshold = 0.6, roundSim = 6, targetCell = 64)

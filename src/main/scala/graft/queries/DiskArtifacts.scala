@@ -98,7 +98,10 @@ object DiskArtifacts {
   private def gcGraceMs: Long =
     sys.props.getOrElse("graft.artifacts.gcGraceMs", "900000").toLong
 
-  private def stampOf(sfDir: String, table: String): String = {
+  /** The source table's change stamp, `size:mtime` (or "absent") —
+    * also the in-session memo key part of [[SharedArtifacts]].
+    */
+  private[queries] def stampOf(sfDir: String, table: String): String = {
     val p = Paths.get(sfDir, s"$table.parquet")
     if (Files.exists(p))
       s"${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"

@@ -70,13 +70,6 @@ object SharedArtifacts {
     b.result()
   }
 
-  private def stampOf(sfDir: String, table: String): String = {
-    val p = java.nio.file.Paths.get(sfDir, s"$table.parquet")
-    if (java.nio.file.Files.exists(p))
-      s"${java.nio.file.Files.size(p)}:${java.nio.file.Files.getLastModifiedTime(p).toMillis}"
-    else "absent"
-  }
-
   /** The one memo behind every artifact kind: the key carries the
     * session identity, the sf dir, the tag and the source table's stamp.
     *
@@ -92,7 +85,7 @@ object SharedArtifacts {
   private def memo(s: SparkSession, tag: String, sfDir: String,
       table: String)(build: => DataFrame): DataFrame = {
     val key =
-      s"${System.identityHashCode(s)}|$tag|$sfDir|${stampOf(sfDir, table)}"
+      s"${System.identityHashCode(s)}|$tag|$sfDir|${DiskArtifacts.stampOf(sfDir, table)}"
     val hit = cache.get(key)
     if (hit != null) hit
     else {
@@ -240,11 +233,9 @@ object SharedArtifacts {
       val k = SimilarityOps.scaledCellCount(
         Tables.parquetRowCount(s, s"$d/embeddings.parquet"), targetCell = 64)
       Exec.materializeForSelfJoin(
-        SimilarityOps.kmeansFit(emb16, "vec_id", "v16", k = k,
-            iters = 2, samplePerCell = 16)
-          .groupBy("cell")
-          .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
-            x => x.getField("mean")).as("cvec")))
+        SimilarityOps.centroidVectors(
+          SimilarityOps.kmeansFit(emb16, "vec_id", "v16", k = k,
+            iters = 2, samplePerCell = 16), Seq("cell"), "cvec"))
     }
 
   /** The full-width (64-dim) 16-cell coarse quantizer shared by the
@@ -257,11 +248,9 @@ object SharedArtifacts {
       val emb = Tables.table(s, d, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("v64"))
       Exec.materializeForSelfJoin(
-        SimilarityOps.kmeansFit(emb, "id", "v64", k = 16,
-            iters = 2, samplePerCell = 16)
-          .groupBy("cell")
-          .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
-            x => x.getField("mean")).as("cvec")))
+        SimilarityOps.centroidVectors(
+          SimilarityOps.kmeansFit(emb, "id", "v64", k = 16,
+            iters = 2, samplePerCell = 16), Seq("cell"), "cvec"))
     }
 
   /** ann14's built k-NN graph (k=5, nProbe=2 over [[centroids16]]),

@@ -164,6 +164,86 @@ class ExecSpec extends AnyFunSuite {
     Exec.releaseMaterialized(handle)
   }
 
+  private def zeros(n: Int) = Exec.materializeForSelfJoin(
+    (1 to n).map(i => (i.toLong, 0L)).toDF("id", "v"))
+
+  test("iterateAll: after k rounds of a two-frame state only the returned frames stay pinned") {
+    import org.apache.spark.sql.functions._
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val out = Exec.iterateAll(Seq(zeros(50), zeros(50)), 3) { (s, r) =>
+      // the second frame derives from the first, as kmeans' centroids
+      // derive from its M-step
+      val a = Exec.materializeForSelfJoin(addRound(s.head, r))
+      Seq(a, Exec.materializeForSelfJoin(addRound(a, r)))
+    }
+    assert(pinnedSince(before, 2) == out.map(rddIdOf).toSet,
+      "both init frames and both superseded states must be released")
+    // a = 1 + 2 + 3; b = a + 3
+    assert(out.head.where(col("v") =!= 6L).count() == 0)
+    assert(out(1).where(col("v") =!= 9L).count() == 0)
+    out.foreach(Exec.releaseMaterialized)
+  }
+
+  test("iterateAll: a frame the step carries over unchanged is not released") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val fixed = zeros(10)
+    val out = Exec.iterateAll(Seq(zeros(10), fixed), 3)((s, r) =>
+      Seq(Exec.materializeForSelfJoin(addRound(s.head, r)), s(1)))
+    assert(out(1) eq fixed)
+    assert(pinnedSince(before, 2) == Set(rddIdOf(out.head), rddIdOf(fixed)))
+    assert(fixed.count() == 10)
+    out.foreach(Exec.releaseMaterialized)
+  }
+
+  test("iterateAll: rounds = 0 returns init and never calls the step") {
+    val init = Seq(zeros(10), zeros(10))
+    val out = Exec.iterateAll(init, 0)((_, _) => fail("step must not run"))
+    assert(out eq init)
+    Thread.sleep(200)
+    assert(init.map(rddIdOf).forall(spark.sparkContext.getPersistentRDDs.contains))
+    init.foreach(Exec.releaseMaterialized)
+  }
+
+  test("loop operators leave pinned only the handles their answer reads") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    // the persistent RDDs a call adds, once its answer has been read
+    // (a released handle the answer still needs fails the collect);
+    // they are unpersisted afterwards so the next call starts clean
+    def pinnedBy(n: Int)(call: => DataFrame): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val out = call
+      val added = pinnedSince(before, n)
+      out.collect()
+      added.foreach(id =>
+        spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      added.size
+    }
+    val hubs = Seq((1L, 10L), (1L, 11L), (2L, 10L), (3L, 11L), (3L, 12L))
+      .toDF("src", "dst")
+    val points = Seq((1L, Seq(0f, 0f)), (2L, Seq(10f, 0f)), (3L, Seq(5f, 0f)),
+      (4L, Seq(0f, 1f)), (5L, Seq(9f, 0f))).toDF("vec_id", "embedding")
+    val docs = Seq((1L, "abab ab abab"), (2L, "ab cd")).toDF("doc_id", "text")
+    val corpus = Seq((0L, Seq(1.0, 0.05)), (1L, Seq(0.9, 0.1)),
+      (10L, Seq(0.55, 0.84)), (20L, Seq(0.3, 0.95))).toDF("id", "vec")
+    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0))).toDF("cell", "cvec")
+    val knn = Seq((0L, 1L), (1L, 10L), (10L, 20L)).toDF("query_id", "neighbor_id")
+    val counts = Map(
+      "hits" -> pinnedBy(2)(GraphOps.hits(hubs, "src", "dst", rounds = 2)),
+      "kCenterCoreset" -> pinnedBy(1)(
+        SimilarityOps.kCenterCoreset(points, "vec_id", "embedding", k = 3)),
+      "unigramFit" -> pinnedBy(1)(
+        UnigramOps.unigramFit(docs, "text", maxLen = 4, minCount = 2, rounds = 2)),
+      "graphAnnSearchByDepth" -> pinnedBy(1)(
+        SimilarityOps.graphAnnSearchByDepth(corpus, "id", "vec", cents, knn,
+          col("id") === 0, k = 3, nProbe = 1, maxRounds = 2)),
+      "bpeMerges" -> pinnedBy(2)(
+        BpeOps.bpeMerges(Seq("aab aab aab ab ab").toDF("text"), "text", rounds = 2)))
+    assert(counts == Map("hits" -> 2, "kCenterCoreset" -> 1, "unigramFit" -> 1,
+      "graphAnnSearchByDepth" -> 1, "bpeMerges" -> 2),
+      s"pinned handles per operator: $counts")
+  }
+
   test("materializeForSelfJoinBy: small tables stay a plain checkpoint; " +
       "forced keying co-partitions the same-keyed join (round 19)") {
     import org.apache.spark.sql.functions._
