@@ -527,6 +527,34 @@ object DedupOps {
           .as("dup_frac"))
   }
 
+  /** The disjoint covered islands of a positional shingle table `sh`
+    * (_id, _p, _h) of width `k`: keys in >= 2 distinct docs cover
+    * [p, p + k − 1]; overlapping spans union per doc (two windows over
+    * the doc key), and each doc's islands collect to two position-sorted
+    * arrays [_id, _ss (starts), _es (ends)] — the splice input of
+    * [[removeDuplicateSpans]] and [[removeCharSpans]].
+    */
+  private def coveredIslands(sh: DataFrame, k: Int): DataFrame = {
+    val dupKeys = sh.groupBy("_h").agg(countDistinct("_id").as("_nd"))
+      .where(col("_nd") >= 2).select("_h")
+    val spans = sh.join(dupKeys, "_h")
+      .select(col("_id"), col("_p").cast("long").as("_s"),
+        (col("_p") + k - 1).cast("long").as("_e"))
+    val wPrev = Window.partitionBy("_id").orderBy("_s")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val wRun = Window.partitionBy("_id").orderBy("_s")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    spans
+      .withColumn("_new", when(max(col("_e")).over(wPrev).isNull
+        || col("_s") > max(col("_e")).over(wPrev), 1L).otherwise(0L))
+      .withColumn("_isl", sum(col("_new")).over(wRun))
+      .groupBy("_id", "_isl")
+      .agg(min(col("_s")).as("_is"), max(col("_e")).as("_ie"))
+      .groupBy("_id")
+      .agg(array_sort(collect_list(col("_is"))).as("_ss"),
+        array_sort(collect_list(col("_ie"))).as("_es"))
+  }
+
   /** ExactSubstr-style duplicated-span REMOVAL — the production payoff
     * [[duplicateCoverage]] stops short of (it measures covered tokens;
     * this edits the text): every token covered by a k-token shingle that
@@ -556,40 +584,17 @@ object DedupOps {
     require(k >= 2)
     val sh = shingles.getOrElse(
       Exec.materializeLarge(positionalShingles(df, textCol, idCol, k)))
-    val dupKeys = sh.groupBy("_h").agg(countDistinct("_id").as("_nd"))
-      .where(col("_nd") >= 2).select("_h")
-    val spans = sh.join(dupKeys, "_h")
-      .select(col("_id"), col("_p").cast("long").as("_s"),
-        (col("_p") + k - 1).cast("long").as("_e"))
-    val wPrev = Window.partitionBy("_id").orderBy("_s")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wRun = Window.partitionBy("_id").orderBy("_s")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // disjoint covered islands (the dd16 trick), collected per doc as
-    // two position-sorted arrays — the per-row splice input
-    val islands = spans
-      .withColumn("_new", when(max(col("_e")).over(wPrev).isNull
-        || col("_s") > max(col("_e")).over(wPrev), 1L).otherwise(0L))
-      .withColumn("_isl", sum(col("_new")).over(wRun))
-      .groupBy("_id", "_isl")
-      .agg(min(col("_s")).as("_is"), max(col("_e")).as("_ie"))
-      .groupBy("_id")
-      .agg(array_sort(collect_list(col("_is"))).as("_ss"),
-        array_sort(collect_list(col("_ie"))).as("_es"))
     df.where(length(trim(col(textCol))) > 0)
       .select(col(idCol), tokens(col(textCol)).as("_tk"))
-      .join(islands.withColumnRenamed("_id", idCol), Seq(idCol), "left")
+      .join(coveredIslands(sh, k).withColumnRenamed("_id", idCol), Seq(idCol), "left")
       // the kept tokens are the GAPS between the disjoint sorted
       // islands (the same linear zip-of-shifted-boundaries splice as
-      // [[removeCharSpans]] — VERDICT r14 #4's fix applied to the token
-      // variant too; the old per-position boundary count re-scanned
-      // both arrays for every token, O(n_tok × islands) per row). Docs
-      // with no islands carry null arrays -> one gap [1, n_tok] ->
-      // keep all. expr(), NOT the Scala lambda DSL: nested Scala-side
-      // HOF lambdas all name their variable `x`, so an inner lambda
-      // SHADOWS the outer variable and the predicate silently
-      // degenerates (observed: every doc with ≥1 island lost ALL its
-      // tokens).
+      // [[removeCharSpans]]), O(n_tok + islands) per row. Docs with no
+      // islands carry null arrays -> one gap [1, n_tok] -> keep all.
+      // expr(), NOT the Scala lambda DSL: nested Scala-side HOF lambdas
+      // all name their variable `x`, so an inner lambda SHADOWS the
+      // outer variable and the predicate silently degenerates (every
+      // doc with ≥1 island would lose ALL its tokens).
       .withColumn("_ssn", coalesce(col("_ss"), typedLit(Seq.empty[Long])))
       .withColumn("_esn", coalesce(col("_es"), typedLit(Seq.empty[Long])))
       .withColumn("_segs", expr(
@@ -651,9 +656,9 @@ object DedupOps {
     * splice emits the GAPS between the sorted disjoint islands as
     * substrings — a linear zip of the shifted boundary arrays,
     * O(n_chars + islands) per row (the per-position boundary-COUNT form
-    * the oracle replays is value-identical but O(n_chars × islands);
-    * VERDICT r14 #4). The whole construction lives in one `expr` (the
-    * dd19 lesson: Scala-side nested HOF lambdas shadow their variable).
+    * the oracle replays is value-identical but O(n_chars × islands)).
+    * The whole construction lives in one `expr` (Scala-side nested HOF
+    * lambdas shadow their variable).
     *
     * @return [idCol, n_chars, kept_chars, clean_text] one row per
     *         non-empty doc; clean_text = "" when fully covered
@@ -665,33 +670,15 @@ object DedupOps {
     val sh = grams.getOrElse(
       Exec.materializeLargeBy(positionalCharGrams(df, textCol, idCol, k),
         col("_h")))
-    val dupKeys = sh.groupBy("_h").agg(countDistinct("_id").as("_nd"))
-      .where(col("_nd") >= 2).select("_h")
-    val spans = sh.join(dupKeys, "_h")
-      .select(col("_id"), col("_p").cast("long").as("_s"),
-        (col("_p") + k - 1).cast("long").as("_e"))
-    val wPrev = Window.partitionBy("_id").orderBy("_s")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wRun = Window.partitionBy("_id").orderBy("_s")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val islands = spans
-      .withColumn("_new", when(max(col("_e")).over(wPrev).isNull
-        || col("_s") > max(col("_e")).over(wPrev), 1L).otherwise(0L))
-      .withColumn("_isl", sum(col("_new")).over(wRun))
-      .groupBy("_id", "_isl")
-      .agg(min(col("_s")).as("_is"), max(col("_e")).as("_ie"))
-      .groupBy("_id")
-      .agg(array_sort(collect_list(col("_is"))).as("_ss"),
-        array_sort(collect_list(col("_ie"))).as("_es"))
     df.where(length(col(textCol)) > 0)
       .select(col(idCol), col(textCol).as("_t"))
-      .join(islands.withColumnRenamed("_id", idCol), Seq(idCol), "left")
+      .join(coveredIslands(sh, k).withColumnRenamed("_id", idCol), Seq(idCol), "left")
       .withColumn("_ssn", coalesce(col("_ss"), typedLit(Seq.empty[Long])))
       .withColumn("_esn", coalesce(col("_es"), typedLit(Seq.empty[Long])))
-      // LINEAR splice (VERDICT r14 #4: the old per-position boundary
-      // count re-scanned both boundary arrays for every character —
-      // O(n_chars × islands) per row, quadratic on boilerplate docs
-      // with thousands of duplicated fragments). The islands are
+      // LINEAR splice, so boilerplate docs with thousands of duplicated
+      // fragments never go quadratic (a per-position boundary count
+      // would re-scan both arrays for every character, O(n_chars ×
+      // islands) per row). The islands are
       // disjoint and sorted, so the KEPT text is exactly the gaps
       // between them: zip the shifted end array (0, e1, …, eb) against
       // the shifted start array (s1, …, sb, len+1) — gap i is

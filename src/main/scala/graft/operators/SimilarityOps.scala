@@ -48,6 +48,24 @@ object SimilarityOps {
       case None    => cosineComposed(a, b)
     }
 
+  /** Integer dot product of two array<bigint> columns from built-in
+    * higher-order functions — the dependency-free reference form of
+    * [[longDot]].
+    */
+  def longDotComposed(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+
+  /** Integer dot product — native codegen'd expression
+    * ([[graft.functions.LongDotProduct]]: one fused loop, no per-row
+    * product array) when a session is active, composed form otherwise.
+    * Integer arithmetic is exact, so both forms are identical.
+    */
+  def longDot(a: Column, b: Column): Column =
+    org.apache.spark.sql.SparkSession.getActiveSession match {
+      case Some(s) => graft.functions.LongDotProduct.dotNative(s, a, b)
+      case None    => longDotComposed(a, b)
+    }
+
   /** Exact top-k neighbours for each query vector.
     *
     * `queries`/`corpus`: (id, vec). The query side is broadcast (small by
@@ -964,17 +982,7 @@ object SimilarityOps {
       df.where(queryPred).select(col(idCol).as("_sq_id"))
         .join(enc, "_sq_id")
         .select(col("_sq_id").as("query_id"), col("_sq_c").as("_qc")))
-    // the scan — corpus × queries code dots — runs the fused native
-    // expression (one codegen'd loop, no per-row product array); the HOF
-    // composition is the dependency-free fallback. Integer arithmetic:
-    // both forms are exact and identical, this is purely the hot path.
-    def longDot(a: Column, b: Column): Column =
-      org.apache.spark.sql.SparkSession.getActiveSession match {
-        case Some(s) => graft.functions.LongDotProduct.dotNative(s, a, b)
-        case None => expr(
-          "aggregate(zip_with(_qc, _nc, (a, b) -> a * b), 0L, " +
-            "(acc, x) -> acc + x)")
-      }
+    // the scan — corpus × queries code dots — is the hot path of [[longDot]]
     val scored = enc
       .select(col("_sq_id").as("neighbor_id"), col("_sq_c").as("_nc"))
       .join(q, col("query_id") =!= col("neighbor_id"))
@@ -1527,13 +1535,6 @@ object SimilarityOps {
       df.where(queryPred).select(col(idCol).as("_mip_id"))
         .join(quant, "_mip_id")
         .select(col("_mip_id").as("query_id"), col("_mip_q").as("_qq")))
-    def longDot(a: Column, b: Column): Column =
-      org.apache.spark.sql.SparkSession.getActiveSession match {
-        case Some(s) => graft.functions.LongDotProduct.dotNative(s, a, b)
-        case None => expr(
-          "aggregate(zip_with(_qq, _mip_q, (a, b) -> a * b), 0L, " +
-            "(acc, x) -> acc + x)")
-      }
     val scored = quant.join(q, col("query_id") =!= col("_mip_id"))
       .select(col("query_id"), col("_mip_id").as("neighbor_id"),
         longDot(col("_qq"), col("_mip_q")).as("dot_q"))

@@ -119,25 +119,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
 
   private val ann04 = Q("ann04_ivf", Some(s"""
     WITH v AS (SELECT vec_id, cast(embedding as double[]) AS e FROM embeddings),
-    cent AS (SELECT vec_id AS cent_id, e FROM v WHERE vec_id < 16),
-    scoredc AS (
-      SELECT v.vec_id, cent.cent_id,
-        ${ivfCos.format("v", "cent", "v", "v", "cent", "cent")} AS csim
-      FROM v CROSS JOIN cent),
-    assigned AS (
-      SELECT vec_id, cent_id AS cell FROM (
-        SELECT vec_id, cent_id,
-          row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn
-        FROM scoredc) t WHERE rn = 1),
-    probes AS (
-      SELECT vec_id AS query_id, cent_id AS cell FROM (
-        SELECT vec_id, cent_id,
-          row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn
-        FROM scoredc WHERE vec_id >= 20 AND vec_id < 30) t WHERE rn <= 2),
-    cand AS (
-      SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assigned a ON a.cell = p.cell
-      WHERE a.vec_id <> p.query_id),
+    $seedIvfCandCtes,
     scored AS (
       SELECT c.query_id, c.neighbor_id,
         ${ivfCos.format("q", "n", "q", "q", "n", "n")} AS sim
@@ -218,21 +200,8 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // pairs sharing no block never meet, so the join shuffles by code
   // bucket instead of forming queries x corpus. The same multi-band
   // shape MinHash banding uses, applied to vectors.
-  private val ann06 = Q("ann06_pq_topk", Some("""
-    WITH codes AS (
-      SELECT vec_id,
-        list_transform(generate_series(0, 7), b ->
-          array_to_string(list_transform(generate_series(1, 8),
-            i -> CASE WHEN embedding[b*8 + i] >= 0 THEN '1' ELSE '0' END), '')) AS cs
-      FROM embeddings),
-    flat AS (
-      SELECT vec_id, unnest(generate_series(0, 7)) AS blk, unnest(cs) AS code
-      FROM codes),
-    matches AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, count(*) AS n_match
-      FROM flat q JOIN flat c ON q.blk = c.blk AND q.code = c.code
-      WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
-      GROUP BY 1, 2)
+  private val ann06 = Q("ann06_pq_topk", Some(s"""
+    WITH $signPqMatchCtes
     SELECT query_id, neighbor_id, n_match, rank FROM (
       SELECT query_id, neighbor_id, n_match,
         row_number() OVER (PARTITION BY query_id ORDER BY n_match DESC, neighbor_id) AS rank
@@ -304,25 +273,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
             DESC, c.vec_id) AS rank
         FROM vb q JOIN vb c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
         WHERE q.vec_id < 50) t WHERE rank <= 5),
-    cent AS (SELECT vec_id AS cent_id, e FROM v WHERE vec_id < 16),
-    scoredc AS (
-      SELECT v.vec_id, cent.cent_id,
-        ${ivfCos.format("v", "cent", "v", "v", "cent", "cent")} AS csim
-      FROM v CROSS JOIN cent),
-    assigned AS (
-      SELECT vec_id, cent_id AS cell FROM (
-        SELECT vec_id, cent_id,
-          row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn
-        FROM scoredc) t WHERE rn = 1),
-    probes AS (
-      SELECT vec_id AS query_id, cent_id AS cell FROM (
-        SELECT vec_id, cent_id,
-          row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cent_id) AS rn
-        FROM scoredc WHERE vec_id >= 20 AND vec_id < 30) t WHERE rn <= 2),
-    cand AS (
-      SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-      FROM probes p JOIN assigned a ON a.cell = p.cell
-      WHERE a.vec_id <> p.query_id),
+    $seedIvfCandCtes,
     a_ivf AS (
       SELECT query_id, neighbor_id FROM (
         SELECT c.query_id, c.neighbor_id,
@@ -331,20 +282,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
         FROM cand c JOIN v q ON q.vec_id = c.query_id
                     JOIN v n ON n.vec_id = c.neighbor_id) t
       WHERE rank <= 5),
-    codes AS (
-      SELECT vec_id,
-        list_transform(generate_series(0, 7), b ->
-          array_to_string(list_transform(generate_series(1, 8),
-            i -> CASE WHEN embedding[b*8 + i] >= 0 THEN '1' ELSE '0' END), '')) AS cs
-      FROM embeddings),
-    flat AS (
-      SELECT vec_id, unnest(generate_series(0, 7)) AS blk, unnest(cs) AS code
-      FROM codes),
-    matches AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, count(*) AS n_match
-      FROM flat q JOIN flat c ON q.blk = c.blk AND q.code = c.code
-      WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id
-      GROUP BY 1, 2),
+    $signPqMatchCtes,
     a_pq AS (
       SELECT query_id, neighbor_id FROM (
         SELECT query_id, neighbor_id,
@@ -523,8 +461,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
              FROM smp) t WHERE rn <= 4)""")}
     SELECT cell, dim, n_vectors, mean FROM m2 ORDER BY cell, dim"""),
     (s, d) => SimilarityOps.kmeansFit(
-        T(s, d, "embeddings")
-          .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16")),
+        SharedArtifacts.emb16(s, d),
         "vec_id", "v16", k = 4, iters = 2, samplePerCell = 16)
       .orderBy("cell", "dim"))
 
@@ -552,22 +489,8 @@ private[queries] trait CatalogAnn extends CatalogShared {
     WITH $pqTrainCtes,
     c2 AS (SELECT blk, code, list(mean ORDER BY dim) AS cv
            FROM m2 GROUP BY blk, code),
-    fr AS (SELECT vec_id, b.blk,
-             list_slice(e, b.blk * 8 + 1, b.blk * 8 + 8) AS sv
-           FROM v, (SELECT unnest(generate_series(0, 7)) AS blk) b),
-    ed AS (SELECT f.vec_id, f.blk, c.code,
-             round(list_sum(list_transform(generate_series(1, 8),
-               i -> (f.sv[i] - c.cv[i]) * (f.sv[i] - c.cv[i]))), 6) AS d
-           FROM fr f JOIN c2 c ON f.blk = c.blk),
-    enc AS (SELECT vec_id, blk, code FROM (
-             SELECT vec_id, blk, code, row_number() OVER (
-               PARTITION BY vec_id, blk ORDER BY d, code) AS rn
-             FROM ed) t WHERE rn = 1),
-    qt AS (SELECT f.vec_id AS query_id, f.blk, c.code,
-             cast(round(list_sum(list_transform(generate_series(1, 8),
-               i -> (f.sv[i] - c.cv[i]) * (f.sv[i] - c.cv[i])))
-               * 1000000.0) as bigint) AS dq
-           FROM fr f JOIN c2 c ON f.blk = c.blk WHERE f.vec_id < 5),
+    ${pqEncodeCtes("v", "c2")},
+    ${pqQueryDistCte("c2")},
     sc AS (SELECT q.query_id, e.vec_id AS neighbor_id,
              cast(sum(q.dq) as bigint) AS d_sum
            FROM enc e JOIN qt q ON e.blk = q.blk AND e.code = q.code
@@ -615,22 +538,8 @@ private[queries] trait CatalogAnn extends CatalogShared {
       SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
       FROM ktp p JOIN kta a ON a.cell = p.cell
       WHERE a.vec_id <> p.query_id),
-    fr AS (SELECT vec_id, b.blk,
-             list_slice(e, b.blk * 8 + 1, b.blk * 8 + 8) AS sv
-           FROM v, (SELECT unnest(generate_series(0, 7)) AS blk) b),
-    ed AS (SELECT f.vec_id, f.blk, c.code,
-             round(list_sum(list_transform(generate_series(1, 8),
-               i -> (f.sv[i] - c.cv[i]) * (f.sv[i] - c.cv[i]))), 6) AS d
-           FROM fr f JOIN pc2 c ON f.blk = c.blk),
-    enc AS (SELECT vec_id, blk, code FROM (
-             SELECT vec_id, blk, code, row_number() OVER (
-               PARTITION BY vec_id, blk ORDER BY d, code) AS rn
-             FROM ed) t WHERE rn = 1),
-    qt AS (SELECT f.vec_id AS query_id, f.blk, c.code,
-             cast(round(list_sum(list_transform(generate_series(1, 8),
-               i -> (f.sv[i] - c.cv[i]) * (f.sv[i] - c.cv[i])))
-               * 1000000.0) as bigint) AS dq
-           FROM fr f JOIN pc2 c ON f.blk = c.blk WHERE f.vec_id < 5),
+    ${pqEncodeCtes("v", "pc2")},
+    ${pqQueryDistCte("pc2")},
     sc AS (SELECT cd.query_id, cd.neighbor_id,
              cast(sum(q.dq) as bigint) AS d_sum
            FROM cand cd
@@ -642,17 +551,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
              SELECT query_id, neighbor_id, row_number() OVER (
                PARTITION BY query_id ORDER BY d_sum, neighbor_id) AS arn
              FROM sc) t WHERE arn <= 20),
-    rr AS (SELECT p.query_id, p.neighbor_id,
-             round(list_sum(list_transform(generate_series(1, 64), i -> q.e[i] * n.e[i]))
-               / (sqrt(list_sum(list_transform(generate_series(1, 64), i -> q.e[i] * q.e[i])))
-                * sqrt(list_sum(list_transform(generate_series(1, 64), i -> n.e[i] * n.e[i])))), 6) AS sim
-           FROM pool p JOIN v q ON q.vec_id = p.query_id
-                       JOIN v n ON n.vec_id = p.neighbor_id)
-    SELECT query_id, neighbor_id, sim, rank FROM (
-      SELECT query_id, neighbor_id, sim, row_number() OVER (
-        PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM rr) t
-    WHERE rank <= 10 ORDER BY query_id, rank"""),
+    $exactReRankSql"""),
     (s, d) => {
       val embRaw = T(s, d, "embeddings")
       val emb = embRaw.select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -684,7 +583,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // are exact longs, so both engines rank identically (ties to the
   // lower neighbor id). Same query set and k as the other quantized
   // arms (vec_id < 5, k = 10).
-  private val ann12 = Q("ann12_sq8_topk", Some("""
+  private val ann12 = Q("ann12_sq8_topk", Some(s"""
     WITH v AS (SELECT vec_id, cast(embedding as double[]) AS e FROM embeddings),
     vn AS (SELECT vec_id, CASE WHEN nrm = 0 THEN e
              ELSE list_transform(e, x -> x / nrm) END AS e
@@ -708,17 +607,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
              SELECT query_id, neighbor_id, row_number() OVER (
                PARTITION BY query_id ORDER BY score_int DESC, neighbor_id) AS prn
              FROM sc) t WHERE prn <= 20),
-    rr AS (SELECT p.query_id, p.neighbor_id,
-             round(list_sum(list_transform(generate_series(1, 64), i -> q.e[i] * n.e[i]))
-               / (sqrt(list_sum(list_transform(generate_series(1, 64), i -> q.e[i] * q.e[i])))
-                * sqrt(list_sum(list_transform(generate_series(1, 64), i -> n.e[i] * n.e[i])))), 6) AS sim
-           FROM pool p JOIN v q ON q.vec_id = p.query_id
-                       JOIN v n ON n.vec_id = p.neighbor_id)
-    SELECT query_id, neighbor_id, sim, rank FROM (
-      SELECT query_id, neighbor_id, sim, row_number() OVER (
-        PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM rr) t
-    WHERE rank <= 10 ORDER BY query_id, rank"""),
+    $exactReRankSql"""),
     (s, d) => SimilarityOps.sqTopK(T(s, d, "embeddings"), "vec_id",
         "embedding", col("vec_id") < 5, k = 10, pool = 20)
       .select("query_id", "neighbor_id", "sim", "rank")
@@ -745,17 +634,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
     ${pqTrainCtesFrom("vres")},
     pc2 AS (SELECT blk, code, list(mean ORDER BY dim) AS cv
             FROM m2 GROUP BY blk, code),
-    fr AS (SELECT vec_id, b.blk,
-             list_slice(e, b.blk * 8 + 1, b.blk * 8 + 8) AS sv
-           FROM vres, (SELECT unnest(generate_series(0, 7)) AS blk) b),
-    ed AS (SELECT f.vec_id, f.blk, c.code,
-             round(list_sum(list_transform(generate_series(1, 8),
-               i -> (f.sv[i] - c.cv[i]) * (f.sv[i] - c.cv[i]))), 6) AS d
-           FROM fr f JOIN pc2 c ON f.blk = c.blk),
-    enc AS (SELECT vec_id, blk, code FROM (
-             SELECT vec_id, blk, code, row_number() OVER (
-               PARTITION BY vec_id, blk ORDER BY d, code) AS rn
-             FROM ed) t WHERE rn = 1),
+    ${pqEncodeCtes("vres", "pc2")},
     qp AS (SELECT vec_id AS query_id, cell FROM (
         SELECT vec_id, cell,
           row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
@@ -786,17 +665,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
              SELECT query_id, neighbor_id, row_number() OVER (
                PARTITION BY query_id ORDER BY d_sum, neighbor_id) AS prn
              FROM sc) t WHERE prn <= 20),
-    rr AS (SELECT p.query_id, p.neighbor_id,
-             round(list_sum(list_transform(generate_series(1, 64), i -> q.e[i] * n.e[i]))
-               / (sqrt(list_sum(list_transform(generate_series(1, 64), i -> q.e[i] * q.e[i])))
-                * sqrt(list_sum(list_transform(generate_series(1, 64), i -> n.e[i] * n.e[i])))), 6) AS sim
-           FROM pool p JOIN v q ON q.vec_id = p.query_id
-                       JOIN v n ON n.vec_id = p.neighbor_id)
-    SELECT query_id, neighbor_id, sim, rank FROM (
-      SELECT query_id, neighbor_id, sim, row_number() OVER (
-        PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM rr) t
-    WHERE rank <= 10 ORDER BY query_id, rank"""),
+    $exactReRankSql"""),
     (s, d) => {
       val emb = T(s, d, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
@@ -822,22 +691,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // determinism contract; the oracle replays training, both
   // assignments, the cell join, and the per-query rank.
   private val ann14 = Q("ann14_knn_graph", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1),
+    WITH ${ivf16AssignCtes()},
     pr AS (SELECT vec_id AS query_id, cell FROM (
              SELECT vec_id, cell,
                row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
@@ -859,8 +713,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
       FROM scored) t
     WHERE rank <= 5 ORDER BY query_id, rank"""),
     (s, d) => {
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       // the GRAPH is this query's output, so the build runs fresh here
       // (its bench number is the honest build cost); only the trained
       // centroid INPUT comes from the shared session artifact
@@ -881,57 +734,9 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // filtered set. Same trained centroids and determinism contract as
   // dd13/ann14.
   private val ann15 = Q("ann15_filtered_topk", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1),
-    lb AS (SELECT vec_id, label FROM embeddings),
-    a3l AS (SELECT a3.vec_id, a3.cell, lb.label FROM a3 JOIN lb USING (vec_id)),
-    pr AS (SELECT t.vec_id AS query_id, t.cell, lb.label FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3 WHERE vec_id < 20) t
-           JOIN lb ON lb.vec_id = t.vec_id
-           WHERE t.rn <= 2),
-    cand AS (SELECT pr.query_id, a3l.vec_id AS neighbor_id, pr.label
-             FROM pr JOIN a3l ON pr.cell = a3l.cell AND pr.label = a3l.label
-             WHERE a3l.vec_id <> pr.query_id),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id, c.label,
-        round(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * n.e[i]))
-          / (sqrt(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * q.e[i])))
-           * sqrt(list_sum(list_transform(generate_series(1, 16), i -> n.e[i] * n.e[i])))), 6) AS sim
-      FROM cand c
-      JOIN v q ON q.vec_id = c.query_id
-      JOIN v n ON n.vec_id = c.neighbor_id)
-    SELECT query_id, cast(rank as int) AS rank, neighbor_id, label, sim FROM (
-      SELECT query_id, neighbor_id, label, sim,
-        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM scored) t
-    WHERE rank <= 5 ORDER BY query_id, rank"""),
-    (s, d) => {
-      val corpus = graft.operators.Exec.materializeForSelfJoin(
-        T(s, d, "embeddings").select(col("vec_id").as("id"),
-          slice(col("embedding"), 1, 16).as("vec"), col("label")))
-      SimilarityOps.ivfFilteredTopK(corpus, col("id") < 20,
-          SharedArtifacts.centroids16(s, d),
-          attrCol = "label", k = 5, nProbe = 2, roundSim = 6)
-        .select(col("query_id"), col("rank").cast("int").as("rank"),
-          col("neighbor_id"), col("label"), col("sim"))
-        .orderBy("query_id", "rank")
-    })
+    WITH ${ivf16AssignCtes()},
+    ${labelFilteredSql(sameLabel = true)}"""),
+    (s, d) => labelFilteredTopK(s, d, sameLabel = true))
 
 
   // IVF RANGE search (SimilarityOps.ivfRangeSearch — FAISS
@@ -944,22 +749,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // 6-dp similarity so the boundary is engine-exact. Oracle replays
   // training + assignment + probes + threshold CTE-by-CTE.
   private val ann23 = Q("ann23_range_search", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1),
+    WITH ${ivf16AssignCtes()},
     pr AS (SELECT vec_id AS query_id, cell FROM (
              SELECT vec_id, cell,
                row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
@@ -999,57 +789,9 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // a residual predicate on the cell join, never a post-filter over a
   // corpus-wide top-k), and the same exact-cosine re-rank.
   private val ann22 = Q("ann22_hard_negatives", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1),
-    lb AS (SELECT vec_id, label FROM embeddings),
-    a3l AS (SELECT a3.vec_id, a3.cell, lb.label FROM a3 JOIN lb USING (vec_id)),
-    pr AS (SELECT t.vec_id AS query_id, t.cell, lb.label FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3 WHERE vec_id < 20) t
-           JOIN lb ON lb.vec_id = t.vec_id
-           WHERE t.rn <= 2),
-    cand AS (SELECT pr.query_id, a3l.vec_id AS neighbor_id, pr.label
-             FROM pr JOIN a3l ON pr.cell = a3l.cell AND pr.label <> a3l.label
-             WHERE a3l.vec_id <> pr.query_id),
-    scored AS (
-      SELECT c.query_id, c.neighbor_id, c.label,
-        round(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * n.e[i]))
-          / (sqrt(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * q.e[i])))
-           * sqrt(list_sum(list_transform(generate_series(1, 16), i -> n.e[i] * n.e[i])))), 6) AS sim
-      FROM cand c
-      JOIN v q ON q.vec_id = c.query_id
-      JOIN v n ON n.vec_id = c.neighbor_id)
-    SELECT query_id, cast(rank as int) AS rank, neighbor_id, label, sim FROM (
-      SELECT query_id, neighbor_id, label, sim,
-        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM scored) t
-    WHERE rank <= 5 ORDER BY query_id, rank"""),
-    (s, d) => {
-      val corpus = graft.operators.Exec.materializeForSelfJoin(
-        T(s, d, "embeddings").select(col("vec_id").as("id"),
-          slice(col("embedding"), 1, 16).as("vec"), col("label")))
-      SimilarityOps.ivfFilteredTopK(corpus, col("id") < 20,
-          SharedArtifacts.centroids16(s, d),
-          attrCol = "label", k = 5, nProbe = 2, roundSim = 6, sameAttr = false)
-        .select(col("query_id"), col("rank").cast("int").as("rank"),
-          col("neighbor_id"), col("label"), col("sim"))
-        .orderBy("query_id", "rank")
-    })
+    WITH ${ivf16AssignCtes()},
+    ${labelFilteredSql(sameLabel = false)}"""),
+    (s, d) => labelFilteredTopK(s, d, sameLabel = false))
 
 
   // Graph-ANN SEARCH (SimilarityOps.graphAnnSearch — VERDICT r12 #3):
@@ -1065,28 +807,12 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // ann14; the oracle replays graph build, entry points, both expansion
   // rounds, and the re-rank.
   private val ann16 = Q("ann16_graph_search", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1),
+    WITH ${ivf16AssignCtes()},
     $graphSearchCtes
     SELECT query_id, cast(rank as int) AS rank, neighbor_id, sim
     FROM granked WHERE rank <= 5 ORDER BY query_id, rank"""),
     (s, d) => {
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       // serving query: index artifacts (trained centroids + built k-NN
       // graph) come from the shared session cache — ann08/ann14 own the
       // honest build costs; this query measures the SEARCH
@@ -1109,66 +835,13 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // (AnnRecallSpec pins graph ≥ ivf). Truth is the 16-dim brute-force
   // top-5, shared by both arms.
   private val ann17 = Q("ann17_graph_recall", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1),
+    WITH ${ivf16AssignCtes()},
     $graphSearchCtes,
     a_graph AS (SELECT query_id, neighbor_id FROM granked WHERE rank <= 5),
-    icand AS (SELECT DISTINCT q.query_id, a3.vec_id AS neighbor_id
-              FROM qpr q JOIN a3 USING (cell)
-              WHERE a3.vec_id <> q.query_id),
-    isc AS (
-      SELECT c.query_id, c.neighbor_id,
-        round(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * n.e[i]))
-          / (sqrt(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * q.e[i])))
-           * sqrt(list_sum(list_transform(generate_series(1, 16), i -> n.e[i] * n.e[i])))), 6) AS sim
-      FROM icand c
-      JOIN v q ON q.vec_id = c.query_id
-      JOIN v n ON n.vec_id = c.neighbor_id),
-    a_ivf AS (SELECT query_id, neighbor_id FROM (
-      SELECT query_id, neighbor_id,
-        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM isc) t WHERE rank <= 5),
-    tsc AS (
-      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-        round(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * n.e[i]))
-          / (sqrt(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * q.e[i])))
-           * sqrt(list_sum(list_transform(generate_series(1, 16), i -> n.e[i] * n.e[i])))), 6) AS sim
-      FROM v q JOIN v n ON q.vec_id <> n.vec_id
-      WHERE q.vec_id < 20),
-    t AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-      SELECT query_id, neighbor_id,
-        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM tsc) x WHERE rank <= 5),
-    r AS (
-      SELECT 'graph' AS method,
-        (SELECT count(DISTINCT query_id) FROM t) AS n_queries,
-        (SELECT count(*) FROM a_graph a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id) AS total_hits
-      UNION ALL SELECT 'ivf',
-        (SELECT count(DISTINCT query_id) FROM t),
-        (SELECT count(*) FROM a_ivf a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id))
-    SELECT method, cast(n_queries as bigint) AS n_queries,
-      cast(total_hits as bigint) AS total_hits,
-      cast(total_hits as double) / (n_queries * 5) AS recall
-    FROM r ORDER BY method"""),
+    $ivfArmCtes,
+    ${recall16Sql(Seq("graph" -> "a_graph", "ivf" -> "a_ivf"))}"""),
     (s, d) => {
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       // both arms serve the SAME shared session index (trained centroids
       // + built graph) — the head-to-head grades search quality, not
       // per-arm rebuild cost
@@ -1201,22 +874,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // the FOREIGN-query serving case, where the query has no graph node;
   // ivf serves foreign queries natively, so that is the fair fight).
   private val ann18 = Q("ann18_graph_depth_curve", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1),
+    WITH ${ivf16AssignCtes()},
     $graphSearchCtes,
     p3sc AS MATERIALIZED (
       SELECT p.query_id, p.node AS neighbor_id,
@@ -1254,60 +912,11 @@ private[queries] trait CatalogAnn extends CatalogShared {
       SELECT s.query_id, s.neighbor_id,
         row_number() OVER (PARTITION BY s.query_id ORDER BY s.sim DESC, s.neighbor_id) AS rank
       FROM pcsc s) t WHERE rank <= 5),
-    icand AS (SELECT DISTINCT q.query_id, a3.vec_id AS neighbor_id
-              FROM qpr q JOIN a3 USING (cell)
-              WHERE a3.vec_id <> q.query_id),
-    isc AS (
-      SELECT c.query_id, c.neighbor_id,
-        round(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * n.e[i]))
-          / (sqrt(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * q.e[i])))
-           * sqrt(list_sum(list_transform(generate_series(1, 16), i -> n.e[i] * n.e[i])))), 6) AS sim
-      FROM icand c
-      JOIN v q ON q.vec_id = c.query_id
-      JOIN v n ON n.vec_id = c.neighbor_id),
-    a_ivf AS (SELECT query_id, neighbor_id FROM (
-      SELECT query_id, neighbor_id,
-        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM isc) t WHERE rank <= 5),
-    tsc AS (
-      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-        round(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * n.e[i]))
-          / (sqrt(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * q.e[i])))
-           * sqrt(list_sum(list_transform(generate_series(1, 16), i -> n.e[i] * n.e[i])))), 6) AS sim
-      FROM v q JOIN v n ON q.vec_id <> n.vec_id
-      WHERE q.vec_id < 20),
-    t AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-      SELECT query_id, neighbor_id,
-        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM tsc) x WHERE rank <= 5),
-    r AS (
-      SELECT 'graph_r1' AS method,
-        (SELECT count(DISTINCT query_id) FROM t) AS n_queries,
-        (SELECT count(*) FROM a_r1 a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id) AS total_hits
-      UNION ALL SELECT 'graph_r2',
-        (SELECT count(DISTINCT query_id) FROM t),
-        (SELECT count(*) FROM a_r2 a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id)
-      UNION ALL SELECT 'graph_r3',
-        (SELECT count(DISTINCT query_id) FROM t),
-        (SELECT count(*) FROM a_r3 a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id)
-      UNION ALL SELECT 'graph_cold_r3',
-        (SELECT count(DISTINCT query_id) FROM t),
-        (SELECT count(*) FROM a_c3 a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id)
-      UNION ALL SELECT 'ivf',
-        (SELECT count(DISTINCT query_id) FROM t),
-        (SELECT count(*) FROM a_ivf a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id))
-    SELECT method, cast(n_queries as bigint) AS n_queries,
-      cast(total_hits as bigint) AS total_hits,
-      cast(total_hits as double) / (n_queries * 5) AS recall
-    FROM r ORDER BY method"""),
+    $ivfArmCtes,
+    ${recall16Sql(Seq("graph_r1" -> "a_r1", "graph_r2" -> "a_r2", "graph_r3" -> "a_r3",
+      "graph_cold_r3" -> "a_c3", "ivf" -> "a_ivf"))}"""),
     (s, d) => {
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       // every depth arm serves the same shared session index — the
       // curve grades walk depth, not per-arm index rebuilds
       val idx = SharedArtifacts.centroids16(s, d)
@@ -1355,24 +964,11 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // every ingest session) — this query trains on `hist` inline only
   // because its oracle must replay the training.
   private val ann19 = Q("ann19_index_update", Some(s"""
-    WITH ${kmeansCtes(
+    WITH ${ivf16AssignCtes(
       """hist AS (SELECT vec_id, e FROM v WHERE vec_id % 5 <> 0),
     kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
              FROM hist),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""",
-      trainSrc = "hist")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1)
+    """, trainSrc = "hist")}
     SELECT cell,
       cast(sum(CASE WHEN vec_id % 5 <> 0 THEN 1 ELSE 0 END) as bigint) AS n_history,
       cast(sum(CASE WHEN vec_id % 5 = 0 THEN 1 ELSE 0 END) as bigint) AS n_new,
@@ -1381,8 +977,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
                 THEN 1 ELSE 0 END as int) AS retrain
     FROM a3 GROUP BY cell ORDER BY cell"""),
     (s, d) => {
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       val hist = emb16.where(col("vec_id") % 5 =!= 0)
       // k scales with the HISTORY population (the kp CTE mirror); the
       // count is a 1-row metadata aggregate, not a corpus shuffle
@@ -1416,22 +1011,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // that cell's probe rank); each arm ranks its prn ≤ p subset — never
   // three assignment passes (the r12 dd21 lesson).
   private val ann20 = Q("ann20_nprobe_curve", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1),
+    WITH ${ivf16AssignCtes()},
     qp AS (SELECT vec_id AS query_id, cell,
              row_number() OVER (PARTITION BY vec_id
                ORDER BY csim DESC, cell) AS prn
@@ -1460,38 +1040,10 @@ private[queries] trait CatalogAnn extends CatalogShared {
       SELECT query_id, neighbor_id,
         row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
       FROM csc WHERE prn <= 4) t WHERE rank <= 5),
-    tsc AS (
-      SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-        round(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * n.e[i]))
-          / (sqrt(list_sum(list_transform(generate_series(1, 16), i -> q.e[i] * q.e[i])))
-           * sqrt(list_sum(list_transform(generate_series(1, 16), i -> n.e[i] * n.e[i])))), 6) AS sim
-      FROM v q JOIN v n ON q.vec_id <> n.vec_id
-      WHERE q.vec_id < 20),
-    t AS MATERIALIZED (SELECT query_id, neighbor_id FROM (
-      SELECT query_id, neighbor_id,
-        row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-      FROM tsc) x WHERE rank <= 5),
-    r AS (
-      SELECT 'ivf_p1' AS method,
-        (SELECT count(DISTINCT query_id) FROM t) AS n_queries,
-        (SELECT count(*) FROM a_p1 a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id) AS total_hits
-      UNION ALL SELECT 'ivf_p2',
-        (SELECT count(DISTINCT query_id) FROM t),
-        (SELECT count(*) FROM a_p2 a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id)
-      UNION ALL SELECT 'ivf_p4',
-        (SELECT count(DISTINCT query_id) FROM t),
-        (SELECT count(*) FROM a_p4 a JOIN t
-           ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id))
-    SELECT method, cast(n_queries as bigint) AS n_queries,
-      cast(total_hits as bigint) AS total_hits,
-      cast(total_hits as double) / (n_queries * 5) AS recall
-    FROM r ORDER BY method"""),
+    ${recall16Sql(Seq("ivf_p1" -> "a_p1", "ivf_p2" -> "a_p2", "ivf_p4" -> "a_p4"))}"""),
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       val idx = SharedArtifacts.centroids16(s, d)
       val base = graft.operators.Exec.materializeForSelfJoin(
         emb16.select(col("vec_id").cast("long").as("id"),
@@ -1621,24 +1173,8 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // 10^9 div (60 + rank) and the fused top-10 orders by the all-integer
   // sum. documents and embeddings share the id space by corpus
   // construction — the realistic "one item, two representations" setup.
-  private val ann25 = Q("ann25_rrf_fusion", Some("""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-    shl AS (
-      SELECT doc_id,
-        list_distinct(CASE WHEN len(t) >= 3 THEN
-          list_transform(generate_series(1, len(t) - 2),
-            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        ELSE [array_to_string(t, ' ')] END) AS shingles
-      FROM toks),
-    sh AS (SELECT doc_id AS id, unnest(shingles) AS sh FROM shl),
-    lexsc AS (SELECT q.id AS query_id, c.id AS neighbor_id, count(*) AS ov
-      FROM sh q JOIN sh c ON c.sh = q.sh AND c.id <> q.id
-      WHERE q.id < 5 GROUP BY 1, 2),
-    lex AS (SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id, row_number() OVER (
-          PARTITION BY query_id ORDER BY ov DESC, neighbor_id) AS rank
-        FROM lexsc) t WHERE rank <= 20),
+  private val ann25 = Q("ann25_rrf_fusion", Some(s"""
+    WITH $lexArmCtes,
     v AS (SELECT vec_id, cast(embedding as double[]) AS e FROM embeddings),
     dsc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         round(list_sum(list_transform(generate_series(1, 64), i -> q.e[i] * c.e[i]))
@@ -1663,18 +1199,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
       FROM fused) t
     WHERE rank <= 10 ORDER BY query_id, rank"""),
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val sh = SharedArtifacts.docShingles3(s, d)
-      val qsh = broadcast(sh.where(col("id") < 5)
-        .select(col("id").as("query_id"), col("sh")))
-      val lexsc = sh.join(qsh, "sh")
-        .where(col("id") =!= col("query_id"))
-        .groupBy(col("query_id"), col("id").as("neighbor_id"))
-        .agg(count(lit(1)).as("_ov"))
-      val lw = Window.partitionBy("query_id")
-        .orderBy(col("_ov").desc, col("neighbor_id").asc)
-      val lex = lexsc.withColumn("rank", row_number().over(lw))
-        .where(col("rank") <= 20)
+      val lex = lexArm(s, d)
       val emb = T(s, d, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val dense = SimilarityOps.bruteForceTopK(
@@ -1701,24 +1226,8 @@ private[queries] trait CatalogAnn extends CatalogShared {
   // harness is for the quantized arms. All components are the audited
   // bounded shapes (query broadcast, banded bucket join, integer
   // fusion).
-  private val ann26 = Q("ann26_fusion_recall", Some("""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-    shl AS (
-      SELECT doc_id,
-        list_distinct(CASE WHEN len(t) >= 3 THEN
-          list_transform(generate_series(1, len(t) - 2),
-            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        ELSE [array_to_string(t, ' ')] END) AS shingles
-      FROM toks),
-    sh AS (SELECT doc_id AS id, unnest(shingles) AS sh FROM shl),
-    lexsc AS (SELECT q.id AS query_id, c.id AS neighbor_id, count(*) AS ov
-      FROM sh q JOIN sh c ON c.sh = q.sh AND c.id <> q.id
-      WHERE q.id < 5 GROUP BY 1, 2),
-    lex AS (SELECT query_id, neighbor_id, rank FROM (
-        SELECT query_id, neighbor_id, row_number() OVER (
-          PARTITION BY query_id ORDER BY ov DESC, neighbor_id) AS rank
-        FROM lexsc) t WHERE rank <= 20),
+  private val ann26 = Q("ann26_fusion_recall", Some(s"""
+    WITH $lexArmCtes,
     v AS (SELECT vec_id, cast(embedding as double[]) AS e,
         concat(CASE WHEN embedding[1] >= 0 THEN '1' ELSE '0' END,
                CASE WHEN embedding[2] >= 0 THEN '1' ELSE '0' END,
@@ -1774,18 +1283,7 @@ private[queries] trait CatalogAnn extends CatalogShared {
       cast(h.total_hits as double) / (nq.n_queries * 10) AS recall
     FROM h CROSS JOIN nq ORDER BY h.method"""),
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val sh = SharedArtifacts.docShingles3(s, d)
-      val qsh = broadcast(sh.where(col("id") < 5)
-        .select(col("id").as("query_id"), col("sh")))
-      val lexsc = sh.join(qsh, "sh")
-        .where(col("id") =!= col("query_id"))
-        .groupBy(col("query_id"), col("id").as("neighbor_id"))
-        .agg(count(lit(1)).as("_ov"))
-      val lw = Window.partitionBy("query_id")
-        .orderBy(col("_ov").desc, col("neighbor_id").asc)
-      val lex20 = lexsc.withColumn("rank", row_number().over(lw))
-        .where(col("rank") <= 20)
+      val lex20 = lexArm(s, d)
       val emb = T(s, d, "embeddings")
         .select(col("vec_id").as("id"), col("embedding").as("vec"))
       val q = emb.where(col("id") < 5)

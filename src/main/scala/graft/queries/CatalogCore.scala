@@ -1461,36 +1461,7 @@ private[queries] trait CatalogCore extends CatalogShared {
   // IDENTICAL TextOps.driftFromCounts tail as the batch op. Counts are
   // associative, so any micro-batching folds to the batch answer — the
   // oracle IS tx15's SQL.
-  private val q76 = Q("q76_stream_token_drift", Some("""
-    WITH t AS (
-      SELECT lang, doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-      FROM documents WHERE length(trim(text)) > 0),
-    tok AS (
-      SELECT lang, is_batch, substr(md5(u), 1, 16) AS h FROM (
-        SELECT lang, doc_id >= 400 AS is_batch, unnest(tk) AS u FROM t)),
-    per AS (
-      SELECT lang, h,
-        sum(CASE WHEN is_batch THEN 1 ELSE 0 END) AS b,
-        sum(CASE WHEN is_batch THEN 0 ELSE 1 END) AS hc
-      FROM tok GROUP BY 1, 2),
-    tot AS (SELECT lang, sum(b) AS bt, sum(hc) AS ht, count(*) AS v
-            FROM per GROUP BY 1),
-    terms AS (
-      SELECT per.lang, per.b, per.hc,
-        (per.b + 1.0) / (tot.bt + tot.v) AS pb,
-        (per.hc + 1.0) / (tot.ht + tot.v) AS ph
-      FROM per JOIN tot USING (lang)),
-    agg AS (
-      SELECT lang,
-        cast(sum(cast(round(pb * ln(pb / ph) * 1000000000.0) as bigint))
-          as bigint) AS kl_nano,
-        cast(sum(CASE WHEN hc = 0 THEN b ELSE 0 END) as bigint) AS oov_occ
-      FROM terms GROUP BY 1)
-    SELECT a.lang, cast(t.bt as bigint) AS batch_tok,
-      cast(t.ht as bigint) AS hist_tok, cast(t.v as bigint) AS vocab,
-      cast(a.oov_occ as double) / t.bt AS oov_rate, a.kl_nano
-    FROM agg a JOIN tot t USING (lang)
-    WHERE t.bt > 0 ORDER BY a.lang"""),
+  private val q76 = Q("q76_stream_token_drift", Some(driftSql),
     (s, d) => {
       val docs = T(s, d, "documents")
       graft.streaming.StreamingOps.streamTokenDrift(s,
@@ -1518,12 +1489,8 @@ private[queries] trait CatalogCore extends CatalogShared {
   // whole edge-derivation tree per branch: at the decade corpus that
   // spilled >40 GB and never finished, where the materialized form runs in
   // ~30 s (measured r18; same class of exponential-inline blowup as ann18).
-  private val q77 = Q("q77_triangle_count", Some("""
-    WITH pp AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-    e0 AS MATERIALIZED (
-      SELECT a.pk AS u, b.pk AS v
-      FROM pp a JOIN pp b ON a.ok = b.ok AND a.pk < b.pk
-      GROUP BY a.pk, b.pk HAVING count(*) >= 2),
+  private val q77 = Q("q77_triangle_count", Some(s"""
+    WITH $copurchaseMatCtes,
     deg AS MATERIALIZED (SELECT k, count(*) AS d FROM (
         SELECT u AS k FROM e0 UNION ALL SELECT v AS k FROM e0) GROUP BY k),
     ed AS MATERIALIZED (
@@ -1729,12 +1696,8 @@ private[queries] trait CatalogCore extends CatalogShared {
   // count FIXED and documented (the q92/LPA bounded-iteration
   // discipline); per round one degree hash-agg + two semi-joins, edge
   // keys only.
-  private val q97 = Q("q97_kcore", Some("""
-    WITH pp AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-    e0 AS MATERIALIZED (
-      SELECT a.pk AS u, b.pk AS v
-      FROM pp a JOIN pp b ON a.ok = b.ok AND a.pk < b.pk
-      GROUP BY a.pk, b.pk HAVING count(*) >= 2),
+  private val q97 = Q("q97_kcore", Some(s"""
+    WITH $copurchaseMatCtes,
     d1 AS MATERIALIZED (SELECT k, count(*) AS d FROM (
         SELECT u AS k FROM e0 UNION ALL SELECT v AS k FROM e0) GROUP BY k),
     k1 AS MATERIALIZED (SELECT k FROM d1 WHERE d >= 2),
@@ -2120,14 +2083,8 @@ private[queries] trait CatalogCore extends CatalogShared {
   // equi-join per round, visited pruned by anti-join (first-reach depth
   // = BFS depth, so the oracle's UNION-recursive enumeration min()s to
   // the identical distance). The edge set is q77's shared artifact.
-  private val q86 = Q("q86_graph_distance", Some("""
-    WITH RECURSIVE pp AS (
-      SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-    e0 AS (
-      SELECT a.pk AS u, b.pk AS v
-      FROM pp a JOIN pp b ON a.ok = b.ok AND a.pk < b.pk
-      GROUP BY a.pk, b.pk HAVING count(*) >= 2),
-    und AS (SELECT u AS s, v AS t FROM e0 UNION SELECT v, u FROM e0),
+  private val q86 = Q("q86_graph_distance", Some(s"""
+    WITH RECURSIVE $copurchaseCtes,
     nodes AS (SELECT DISTINCT s AS k FROM und),
     reach(node, dist) AS (
       SELECT k, 0 FROM nodes WHERE k % 13 = 0
@@ -2493,13 +2450,7 @@ private[queries] trait CatalogCore extends CatalogShared {
   // nested-window CTEs (lpIterSql). Fixed rounds, not convergence —
   // synchronous LPA can 2-cycle, so bounded rounds IS the contract.
   private val q92 = Q("q92_label_prop", Some(s"""
-    WITH pp AS (
-      SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-    e0 AS (
-      SELECT a.pk AS u, b.pk AS v
-      FROM pp a JOIN pp b ON a.ok = b.ok AND a.pk < b.pk
-      GROUP BY a.pk, b.pk HAVING count(*) >= 2),
-    und AS (SELECT u AS s, v AS t FROM e0 UNION SELECT v, u FROM e0),
+    WITH $copurchaseCtes,
     p0 AS (SELECT DISTINCT s AS node, s AS label FROM und),
     p1 AS (${lpIterSql("p0")}),
     p2 AS (${lpIterSql("p1")}),
@@ -2638,7 +2589,7 @@ private[queries] trait CatalogCore extends CatalogShared {
   // profile EXACTLY, which is what the oracle checks. State is
   // |columns| sketch rows, independent of stream volume; the estimator
   // tail applies after read-back, expression-identical to dp28/q46.
-  private val q96 = Q("q96_stream_profile", Some("""
+  private val q96 = Q("q96_stream_profile", Some(s"""
     WITH src AS (
       SELECT 'l_orderkey' AS c, cast(l_orderkey as varchar) AS v FROM lineitem
       UNION ALL SELECT 'l_returnflag', l_returnflag FROM lineitem
@@ -2647,15 +2598,7 @@ private[queries] trait CatalogCore extends CatalogShared {
       SELECT c, count(*) AS n_rows, count(*) - count(v) AS n_null,
         min(v) AS min_val, max(v) AS max_val
       FROM src GROUP BY c),
-    h AS (SELECT DISTINCT c, ('0x' || substr(md5(v), 1, 15))::BIGINT AS h
-          FROM src WHERE v IS NOT NULL),
-    r AS (SELECT c, h, row_number() OVER (PARTITION BY c ORDER BY h) AS rn,
-            count(*) OVER (PARTITION BY c) AS nd FROM h),
-    kmv AS (SELECT c,
-        cast(CASE WHEN nd < 64 THEN cast(nd as double)
-                  ELSE floor(63.0 * 1152921504606846976.0 / cast(h as double)) END
-          as bigint) AS ndv_kmv
-      FROM r WHERE rn = least(nd, 64))
+    $kmvNdvCtes
     SELECT counts.c AS col_name, cast(n_rows as bigint) AS n_rows,
       cast(n_null as bigint) AS n_null, min_val, max_val,
       cast(coalesce(ndv_kmv, 0) as bigint) AS ndv_kmv
@@ -2922,15 +2865,7 @@ private[queries] trait CatalogCore extends CatalogShared {
       row_number() OVER (ORDER BY w DESC, s1, s2) AS rank
     FROM pairs ORDER BY w DESC, s1, s2 LIMIT 20"""),
     (s, d) => {
-      // keyed by the customer key (guide §2.4): the degree aggregation,
-      // the degree-cap join and BOTH sides of the pair self-join all key
-      // on c — the declared partitioning removes every one of those
-      // Exchanges over the edge table
-      val e = Exec.materializeForSelfJoinBy(
-        T(s, d, "orders").join(T(s, d, "lineitem"),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-          .distinct(), col("c"))
+      val e = customerSupplierEdges(s, d)
       val deg = e.groupBy("c").agg(count(lit(1)).as("d"))
       val ek = e.join(deg.where(col("d").between(2, 50)).select("c"), "c")
       val pairs = ek.select(col("c"), col("s").as("s1"))
@@ -2970,13 +2905,7 @@ private[queries] trait CatalogCore extends CatalogShared {
       row_number() OVER (ORDER BY aa_nano DESC, s1, s2) AS rank
     FROM pairs ORDER BY aa_nano DESC, s1, s2 LIMIT 20"""),
     (s, d) => {
-      // same §2.4 keyed materialization as q102 (deg agg, cap join and
-      // pair self-join all key on c)
-      val e = Exec.materializeForSelfJoinBy(
-        T(s, d, "orders").join(T(s, d, "lineitem"),
-            col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-          .distinct(), col("c"))
+      val e = customerSupplierEdges(s, d)
       val deg = e.groupBy("c").agg(count(lit(1)).as("d"))
       val ek = e.join(deg.where(col("d").between(2, 50)), "c")
       val pairs = ek.select(col("c"), col("s").as("s1"), col("d"))
@@ -3047,13 +2976,7 @@ private[queries] trait CatalogCore extends CatalogShared {
     FROM customer WHERE c_custkey % 11 <> 0
     ORDER BY c_custkey"""),
     (s, d) => {
-      val cust = T(s, d, "customer")
-      val oldSnap = cust.where(col("c_custkey") % 7 =!= 0)
-        .select("c_custkey", "c_name", "c_acctbal")
-      val newSnap = cust.where(col("c_custkey") % 11 =!= 0)
-        .select(col("c_custkey"), col("c_name"),
-          when(col("c_custkey") % 5 === 0, col("c_acctbal") * 2)
-            .otherwise(col("c_acctbal")).as("c_acctbal"))
+      val (oldSnap, newSnap) = customerSnapshots(s, d)
       val diff = SnapshotOps.snapshotDiff(oldSnap, newSnap,
         keys = Seq("c_custkey"), compareCols = Seq("c_name", "c_acctbal"))
       SnapshotOps.applyDiff(oldSnap, diff,

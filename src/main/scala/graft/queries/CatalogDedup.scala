@@ -82,16 +82,10 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // N-gram Jaccard verification over blocked candidate pairs. Blocking key:
   // the doc's minimum md5'd 3-shingle (a 1-row minhash band) — exact
   // Jaccard only computed within blocks (equi-join, never a cross join).
-  private val dd04 = Q("dd04_ngram_jaccard", Some("""
+  private val dd04 = Q("dd04_ngram_jaccard", Some(s"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-        CASE WHEN len(t) >= 3 THEN
-          list_transform(generate_series(1, len(t) - 2),
-            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        ELSE [array_to_string(t, ' ')] END AS shingles
-      FROM toks),
+      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+    $wordShingleCte,
     keyed AS (
       SELECT doc_id, shingles,
         list_aggregate(list_transform(shingles, x -> md5(x)), 'min') AS block
@@ -134,10 +128,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
   private val dd06 = Q("dd06_dup_clusters", Some(s"""
     WITH RECURSIVE $minhashCtes,
     pairs AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band_id = r.band_id AND l.band_key = r.band_key
-      WHERE l.doc_id < r.doc_id),
+      $bandPairSql),
     edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
               UNION ALL SELECT id2, id1 FROM pairs),
     reach(id, lab) AS (
@@ -281,22 +272,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // vectors re-assign against them; same-(cell, sub-bucket) pairs score
   // by the same rounded cosine.
   private val dd13 = Q("dd13_semantic_dedup", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
-    a3 AS MATERIALIZED (SELECT vec_id, cell FROM (
-             SELECT vec_id, cell,
-               row_number() OVER (PARTITION BY vec_id ORDER BY csim DESC, cell) AS rn
-             FROM s3) t WHERE rn = 1),
+    WITH ${ivf16AssignCtes()},
     w AS (SELECT a3.cell, a3.vec_id, v.e,
             array_to_string(list_transform(generate_series(1, 8),
               i -> CASE WHEN v.e[i] >= 0 THEN '1' ELSE '0' END), '') AS sgn
@@ -318,8 +294,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
     SELECT cell, id1, id2, sim FROM pairs WHERE sim >= 0.6
     ORDER BY cell, id1, id2"""),
     (s, d) => {
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       // trained centroids: the shared session artifact
       // (SharedArtifacts.centroids16 — cells present in the final M-step,
       // rebuilt to arrays, matching the oracle's kp/c2 CTEs; training
@@ -343,15 +318,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // cosine only inside probed cells — candidate volume ~ evals × 2 ×
   // cell target, never train × eval.
   private val dd15 = Q("dd15_semantic_decontam", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
+    WITH ${ivf16TrainCtes()},
     tr AS (SELECT vec_id, e FROM v WHERE vec_id % 11 <> 0),
     ev AS (SELECT vec_id, e FROM v WHERE vec_id % 11 = 0),
     st AS (SELECT tr.vec_id, c2.cell,
@@ -381,8 +348,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
     FROM scored WHERE sim >= 0.6
     GROUP BY train_id ORDER BY train_id"""),
     (s, d) => {
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       SimilarityOps.semanticContaminated(emb16, "vec_id", "v16",
           col("vec_id") % 11 === 0,
           SharedArtifacts.centroids16(s, d),
@@ -409,18 +375,12 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // so batch rows land where the index was built; batch×batch pairs are
   // tomorrow's history by design.
   private val dd18 = Q("dd18_incremental_semantic", Some(s"""
-    WITH ${kmeansCtes(
+    WITH ${ivf16TrainCtes(
       """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
                  FROM embeddings WHERE vec_id % 8 <> 5),
     vh AS (SELECT vec_id, e FROM v WHERE vec_id % 8 <> 5),
     vn AS (SELECT vec_id, e FROM v WHERE vec_id % 8 = 5),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""",
-      trainSrc = "vh")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
+    """, trainSrc = "vh")},
     sh AS (SELECT vh.vec_id, c2.cell,
              ${km16Cos.format("vh", "c2", "vh", "vh", "c2", "c2")} AS csim
            FROM vh CROSS JOIN c2),
@@ -462,8 +422,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
     SELECT cell, new_id, existing_id, sim FROM pairs WHERE sim >= 0.6
     ORDER BY cell, new_id, existing_id"""),
     (s, d) => {
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       val hist = emb16.where(col("vec_id") % 8 =!= 5)
       val batch = emb16.where(col("vec_id") % 8 === 5)
       // k from the HISTORY count (the persisted index's own sizing —
@@ -489,16 +448,10 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // incremental dedup pipeline probes BEFORE any join against history.
   // md5-derived bit positions are engine-portable; the no-false-negative
   // guarantee (actual_dup -> maybe_dup) is asserted in DedupOpsSpec.
-  private val dd10 = Q("dd10_bloom_prefilter", Some("""
+  private val dd10 = Q("dd10_bloom_prefilter", Some(s"""
     WITH hist AS (SELECT text FROM documents WHERE doc_id < 400),
     batch AS (SELECT doc_id, text FROM documents WHERE doc_id >= 400),
-    ks AS (SELECT unnest([0, 1, 2, 3]) AS i),
-    bits AS (
-      SELECT DISTINCT ('0x' || substr(md5(h.text), 1 + 4*k.i, 4))::BIGINT % 4096 AS bit
-      FROM hist h CROSS JOIN ks k),
-    probe AS (
-      SELECT b.doc_id, ('0x' || substr(md5(b.text), 1 + 4*k.i, 4))::BIGINT % 4096 AS bit
-      FROM batch b CROSS JOIN ks k),
+    $bloomProbeCtes,
     maybe AS (
       SELECT doc_id,
         count(*) FILTER (WHERE bit IN (SELECT bit FROM bits)) = 4 AS maybe_dup
@@ -524,10 +477,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
   private val dd11 = Q("dd11_containment", Some(s"""
     WITH $minhashCtes,
     pairs AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band_id = r.band_id AND l.band_key = r.band_key
-      WHERE l.doc_id < r.doc_id),
+      $bandPairSql),
     sets AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh)
     SELECT p.id1, p.id2,
       cast(len(list_filter(a.s, x -> list_contains(b.s, x))) as bigint) AS n_shared,
@@ -550,31 +500,15 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // fan-out before it happens; run detection is the islands trick per
   // (pair, diagonal). minRun=1 keeps every sharing pair and reports its
   // longest span, so the corpus's true span distribution is visible.
-  private val dd12 = Q("dd12_substring_spans", Some("""
-    WITH t AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-      FROM documents WHERE length(trim(text)) > 0),
-    sh AS (
-      SELECT doc_id,
-        unnest(generate_series(1, len(tk) - 7)) AS p,
-        unnest(list_transform(generate_series(1, len(tk) - 7),
-          i -> substr(md5(array_to_string(list_slice(tk, i, i + 7), ' ')), 1, 16))) AS h
-      FROM t WHERE len(tk) >= 8),
+  private val dd12 = Q("dd12_substring_spans", Some(s"""
+    $posShingle8Ctes,
     keep AS (
       SELECT h FROM (
         SELECT h, count(DISTINCT doc_id) AS nd, count(*) AS occ
         FROM sh GROUP BY h)
       WHERE nd BETWEEN 2 AND 8 AND occ <= 32),
     m AS (SELECT sh.doc_id, sh.p, sh.h FROM sh JOIN keep USING (h)),
-    pr AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, a.p AS p1, b.p AS p2
-      FROM m a JOIN m b ON a.h = b.h AND a.doc_id < b.doc_id),
-    runs AS (
-      SELECT id1, id2, p1 - p2 AS diag,
-        p1 - row_number() OVER (PARTITION BY id1, id2, p1 - p2 ORDER BY p1) AS grp
-      FROM pr),
-    agg AS (SELECT id1, id2, diag, grp, count(*) AS run
-            FROM runs GROUP BY 1, 2, 3, 4)
+    $diagonalRunCtes
     SELECT id1, id2, cast(sum(run) as bigint) AS n_shared,
       cast(max(run) as bigint) AS max_run
     FROM agg GROUP BY id1, id2 HAVING max(run) >= 1 ORDER BY id1, id2"""),
@@ -594,16 +528,8 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // equi-joins it on the fixed-width md5 key, and the two-sided
   // stop-shingle filter (history rarity from history stats alone, batch
   // occurrence cap) bounds per-key fan-out at maxOcc².
-  private val dd14 = Q("dd14_incremental_spans", Some("""
-    WITH t AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-      FROM documents WHERE length(trim(text)) > 0),
-    sh AS (
-      SELECT doc_id,
-        unnest(generate_series(1, len(tk) - 7)) AS p,
-        unnest(list_transform(generate_series(1, len(tk) - 7),
-          i -> substr(md5(array_to_string(list_slice(tk, i, i + 7), ' ')), 1, 16))) AS h
-      FROM t WHERE len(tk) >= 8),
+  private val dd14 = Q("dd14_incremental_spans", Some(s"""
+    $posShingle8Ctes,
     hist AS (SELECT doc_id, p, h FROM sh WHERE doc_id < 400),
     newb AS (SELECT doc_id, p, h FROM sh WHERE doc_id >= 400),
     hkeep AS (
@@ -653,37 +579,14 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // per-doc interval union (islands over the high-cardinality doc key)
   // so overlapping spans never double-count. Integer-exact counts; the
   // one IEEE division is mirrored.
-  private val dd16 = Q("dd16_dup_coverage", Some("""
-    WITH t AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-      FROM documents WHERE length(trim(text)) > 0),
-    sh AS (
-      SELECT doc_id,
-        unnest(generate_series(1, len(tk) - 7)) AS p,
-        unnest(list_transform(generate_series(1, len(tk) - 7),
-          i -> substr(md5(array_to_string(list_slice(tk, i, i + 7), ' ')), 1, 16))) AS h
-      FROM t WHERE len(tk) >= 8),
-    dup AS (
-      SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd FROM sh GROUP BY h)
-      WHERE nd >= 2),
-    sp AS (SELECT sh.doc_id, sh.p AS s, sh.p + 7 AS e FROM sh JOIN dup USING (h)),
-    mx AS (
-      SELECT doc_id, s, e,
-        max(e) OVER (PARTITION BY doc_id ORDER BY s
-          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-      FROM sp),
-    il AS (
-      SELECT doc_id, s, e,
-        sum(CASE WHEN pme IS NULL OR s > pme THEN 1 ELSE 0 END)
-          OVER (PARTITION BY doc_id ORDER BY s
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
-      FROM mx),
+  private val dd16 = Q("dd16_dup_coverage", Some(s"""
+    $tokenSpanIslandCtes,
     cov AS (
       SELECT doc_id, sum(ce) AS dup_tok FROM (
         SELECT doc_id, gid, max(e) - min(s) + 1 AS ce
         FROM il GROUP BY doc_id, gid) g GROUP BY doc_id),
     n AS (
-      SELECT doc_id, len(regexp_split_to_array(trim(text), '\s+')) AS n_tok
+      SELECT doc_id, len(regexp_split_to_array(trim(text), '\\s+')) AS n_tok
       FROM documents WHERE length(trim(text)) > 0)
     SELECT n.doc_id, cast(n.n_tok as bigint) AS n_tok,
       cast(coalesce(c.dup_tok, 0) as bigint) AS dup_tok,
@@ -706,31 +609,8 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // both engines express as plain integer lambdas. No new shuffle shape
   // over dd16: same shingle hash-agg + equi-join + per-doc windows, one
   // extra per-doc collect, one join back.
-  private val dd19 = Q("dd19_span_removal", Some("""
-    WITH t AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-      FROM documents WHERE length(trim(text)) > 0),
-    sh AS (
-      SELECT doc_id,
-        unnest(generate_series(1, len(tk) - 7)) AS p,
-        unnest(list_transform(generate_series(1, len(tk) - 7),
-          i -> substr(md5(array_to_string(list_slice(tk, i, i + 7), ' ')), 1, 16))) AS h
-      FROM t WHERE len(tk) >= 8),
-    dup AS (
-      SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd FROM sh GROUP BY h)
-      WHERE nd >= 2),
-    sp AS (SELECT sh.doc_id, sh.p AS s, sh.p + 7 AS e FROM sh JOIN dup USING (h)),
-    mx AS (
-      SELECT doc_id, s, e,
-        max(e) OVER (PARTITION BY doc_id ORDER BY s
-          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-      FROM sp),
-    il AS (
-      SELECT doc_id, s, e,
-        sum(CASE WHEN pme IS NULL OR s > pme THEN 1 ELSE 0 END)
-          OVER (PARTITION BY doc_id ORDER BY s
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
-      FROM mx),
+  private val dd19 = Q("dd19_span_removal", Some(s"""
+    $tokenSpanIslandCtes,
     isl AS (SELECT doc_id, min(s) AS s, max(e) AS e FROM il GROUP BY doc_id, gid),
     ia AS (SELECT doc_id, list_sort(list(s)) AS ss, list_sort(list(e)) AS es
            FROM isl GROUP BY doc_id),
@@ -762,10 +642,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
   private val dd17 = Q("dd17_lsh_recall", Some(s"""
     WITH $minhashCtes,
     cand AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band_id = r.band_id AND l.band_key = r.band_key
-      WHERE l.doc_id < r.doc_id AND l.doc_id < 100),
+      $bandPairSql AND l.doc_id < 100),
     sets AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh),
     u AS (
       SELECT q.doc_id AS id1, c.doc_id AS id2,
@@ -795,33 +672,8 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // compared (never ranked) composite key f·2^40 + h40 + string
   // tiebreak; verification is integer cross-multiplication — no float
   // in any decision.
-  private val dd20 = Q("dd20_jaccard_join", Some("""
-    WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t FROM documents),
-    shl AS (
-      SELECT doc_id,
-        list_distinct(CASE WHEN len(t) >= 3 THEN
-          list_transform(generate_series(1, len(t) - 2),
-            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        ELSE [array_to_string(t, ' ')] END) AS shingles
-      FROM toks),
-    sh AS (SELECT doc_id AS id, unnest(shingles) AS sh FROM shl),
-    freq AS (SELECT sh, count(*) AS f FROM sh GROUP BY sh),
-    pos AS (SELECT s.id, s.sh,
-        row_number() OVER (PARTITION BY s.id
-          ORDER BY f.f, ('0x' || substr(md5(s.sh), 1, 10))::BIGINT, s.sh) AS pos,
-        count(*) OVER (PARTITION BY s.id) AS n
-      FROM sh s JOIN freq f USING (sh)),
-    pref AS (SELECT id, sh, n FROM pos
-             WHERE pos <= n - (1 * n + 1) // 2 + 1),
-    cand AS (SELECT DISTINCT a.id AS id1, b.id AS id2, a.n AS n1, b.n AS n2
-             FROM pref a JOIN pref b ON a.sh = b.sh AND a.id < b.id
-               AND least(a.n, b.n) * 2 >= greatest(a.n, b.n) * 1),
-    inter AS (SELECT c.id1, c.id2, c.n1, c.n2, count(*) AS i
-              FROM cand c
-              JOIN sh x ON x.id = c.id1
-              JOIN sh y ON y.id = c.id2 AND y.sh = x.sh
-              GROUP BY c.id1, c.id2, c.n1, c.n2)
+  private val dd20 = Q("dd20_jaccard_join", Some(s"""
+    WITH $jaccInterCtes
     SELECT id1, id2, cast(i as bigint) AS n_common,
       round(cast(i as double) / (n1 + n2 - i), 6) AS jaccard
     FROM inter WHERE i * 2 >= 1 * (n1 + n2 - i)
@@ -977,7 +829,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // identically. Fan-out is one row per character — the honest cost of
   // character-exact dedup, paid by the published operator as suffix
   // arrays; rows are (id, int, 16-char hash), nothing wider shuffles.
-  private val dd24 = Q("dd24_exact_substr", Some("""
+  private val dd24 = Q("dd24_exact_substr", Some(s"""
     WITH t AS (SELECT doc_id, text FROM documents WHERE length(text) > 0),
     sh AS (
       SELECT doc_id,
@@ -985,21 +837,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
         unnest(list_transform(generate_series(1, length(text) - 19),
           i -> substr(md5(substr(text, i, 20)), 1, 16))) AS h
       FROM t WHERE length(text) >= 20),
-    dup AS (
-      SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd FROM sh GROUP BY h)
-      WHERE nd >= 2),
-    sp AS (SELECT sh.doc_id, sh.p AS s, sh.p + 19 AS e FROM sh JOIN dup USING (h)),
-    mx AS (
-      SELECT doc_id, s, e,
-        max(e) OVER (PARTITION BY doc_id ORDER BY s
-          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pme
-      FROM sp),
-    il AS (
-      SELECT doc_id, s, e,
-        sum(CASE WHEN pme IS NULL OR s > pme THEN 1 ELSE 0 END)
-          OVER (PARTITION BY doc_id ORDER BY s
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS gid
-      FROM mx),
+    ${spanIslandCtes(19)},
     isl AS (SELECT doc_id, min(s) AS s, max(e) AS e FROM il GROUP BY doc_id, gid),
     ia AS (SELECT doc_id, list_sort(list(s)) AS ss, list_sort(list(e)) AS es
            FROM isl GROUP BY doc_id),
@@ -1029,25 +867,9 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // min per doc over the composite h:pos key (both engines evaluate it
   // identically; the p ≥ w full-window filter applies AFTER the frame);
   // pairs via the rarity-filtered equi-join (dd12's stop-gram bound).
-  private val dd25 = Q("dd25_winnow_fingerprints", Some("""
-    WITH t AS (SELECT doc_id, text FROM documents WHERE length(text) >= 20),
-    g AS (
-      SELECT doc_id,
-        unnest(generate_series(1, length(text) - 19)) AS p,
-        unnest(list_transform(generate_series(1, length(text) - 19),
-          i -> substr(md5(substr(text, i, 20)), 1, 16))) AS h
-      FROM t),
-    keyed AS (
-      SELECT doc_id, p, h || ':' || lpad(cast(p as varchar), 12, '0') AS key
-      FROM g),
-    sel AS (
-      SELECT doc_id, p,
-        min(key) OVER (PARTITION BY doc_id ORDER BY p
-          ROWS BETWEEN 11 PRECEDING AND CURRENT ROW) AS s
-      FROM keyed),
-    fp AS (
-      SELECT DISTINCT doc_id, substr(s, 1, 16) AS h
-      FROM sel WHERE p >= 12),
+  private val dd25 = Q("dd25_winnow_fingerprints", Some(s"""
+    $winnowGramCtes,
+    $winnowFpCtes,
     keep AS (
       SELECT h FROM (
         SELECT h, count(DISTINCT doc_id) AS nd, count(*) AS occ
@@ -1073,25 +895,9 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // rarity cap derives from HISTORY stats alone (dd14's discipline —
   // the index is immutable at probe time). Daily cost: fingerprint the
   // batch + one equi-join on the bucketed gram key.
-  private val dd26 = Q("dd26_incremental_winnow", Some("""
-    WITH t AS (SELECT doc_id, text FROM documents WHERE length(text) >= 20),
-    g AS (
-      SELECT doc_id,
-        unnest(generate_series(1, length(text) - 19)) AS p,
-        unnest(list_transform(generate_series(1, length(text) - 19),
-          i -> substr(md5(substr(text, i, 20)), 1, 16))) AS h
-      FROM t),
-    keyed AS (
-      SELECT doc_id, p, h || ':' || lpad(cast(p as varchar), 12, '0') AS key
-      FROM g),
-    sel AS (
-      SELECT doc_id, p,
-        min(key) OVER (PARTITION BY doc_id ORDER BY p
-          ROWS BETWEEN 11 PRECEDING AND CURRENT ROW) AS s
-      FROM keyed),
-    fp AS (
-      SELECT DISTINCT doc_id, substr(s, 1, 16) AS h
-      FROM sel WHERE p >= 12),
+  private val dd26 = Q("dd26_incremental_winnow", Some(s"""
+    $winnowGramCtes,
+    $winnowFpCtes,
     hist AS (SELECT doc_id AS existing_id, h FROM fp WHERE doc_id < 400),
     newb AS (SELECT doc_id AS new_id, h FROM fp WHERE doc_id >= 400),
     hkeep AS (
@@ -1135,42 +941,18 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // absent stop-fingerprint caps (spec-asserted on a controlled
   // corpus); below it the curve is what (k, w) tuning needs. One gram
   // explode feeds both arms.
-  private val dd27 = Q("dd27_winnow_detection", Some("""
-    WITH t AS (SELECT doc_id, text FROM documents WHERE length(text) >= 20),
-    g AS (
-      SELECT doc_id,
-        unnest(generate_series(1, length(text) - 19)) AS p,
-        unnest(list_transform(generate_series(1, length(text) - 19),
-          i -> substr(md5(substr(text, i, 20)), 1, 16))) AS h
-      FROM t),
+  private val dd27 = Q("dd27_winnow_detection", Some(s"""
+    $winnowGramCtes,
     keep AS (
       SELECT h FROM (
         SELECT h, count(DISTINCT doc_id) AS nd, count(*) AS occ
         FROM g GROUP BY h)
       WHERE nd BETWEEN 2 AND 8 AND occ <= 32),
     m AS (SELECT g.doc_id, g.p, g.h FROM g JOIN keep USING (h)),
-    pr AS (
-      SELECT a.doc_id AS id1, b.doc_id AS id2, a.p AS p1, b.p AS p2
-      FROM m a JOIN m b ON a.h = b.h AND a.doc_id < b.doc_id),
-    runs AS (
-      SELECT id1, id2, p1 - p2 AS diag,
-        p1 - row_number() OVER (PARTITION BY id1, id2, p1 - p2 ORDER BY p1) AS grp
-      FROM pr),
-    agg AS (SELECT id1, id2, diag, grp, count(*) AS run
-            FROM runs GROUP BY 1, 2, 3, 4),
+    $diagonalRunCtes,
     truth AS (SELECT id1, id2, cast(max(run) as bigint) + 19 AS span
               FROM agg GROUP BY id1, id2),
-    keyed AS (
-      SELECT doc_id, p, h || ':' || lpad(cast(p as varchar), 12, '0') AS key
-      FROM g),
-    sel AS (
-      SELECT doc_id, p,
-        min(key) OVER (PARTITION BY doc_id ORDER BY p
-          ROWS BETWEEN 11 PRECEDING AND CURRENT ROW) AS s
-      FROM keyed),
-    fp AS (
-      SELECT DISTINCT doc_id, substr(s, 1, 16) AS h
-      FROM sel WHERE p >= 12),
+    $winnowFpCtes,
     wkeep AS (
       SELECT h FROM (
         SELECT h, count(DISTINCT doc_id) AS nd, count(*) AS occ
@@ -1214,18 +996,8 @@ private[queries] trait CatalogDedup extends CatalogShared {
   // candidate-pair totals side by side, so the recall gain and the
   // bounded ~2x scan-cost growth read from one result.
   private val dd28 = Q("dd28_semantic_recall", Some(s"""
-    WITH ${kmeansCtes(
-      """kp AS (SELECT greatest(4, least(4096, (count(*) + 63) // 64)) AS k
-                 FROM embeddings),
-    """,
-      "(SELECT k * 16 FROM kp)",
-      """c0 AS MATERIALIZED (SELECT vec_id AS cell, e AS ce FROM (
-             SELECT vec_id, e, row_number() OVER (ORDER BY vec_id) AS rn
-             FROM smp) t, kp WHERE t.rn <= kp.k)""")},
-    c2 AS (SELECT cell, list(mean ORDER BY dim) AS ce FROM m2 GROUP BY cell),
-    s3 AS MATERIALIZED (SELECT v.vec_id, c2.cell,
-             ${km16Cos.format("v", "c2", "v", "v", "c2", "c2")} AS csim
-           FROM v CROSS JOIN c2),
+    WITH ${ivf16TrainCtes()},
+    $ivf16ScoreCte,
     truth AS (
       SELECT l.vec_id AS id1, r.vec_id AS id2
       FROM v l JOIN v r ON l.vec_id < r.vec_id
@@ -1276,8 +1048,7 @@ private[queries] trait CatalogDedup extends CatalogShared {
       round(cast(u.n_hits as double) / nt.n_truth, 6) AS recall
     FROM u CROSS JOIN nt WHERE nt.n_truth > 0 ORDER BY probes"""),
     (s, d) => {
-      val emb16 = T(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+      val emb16 = SharedArtifacts.emb16(s, d)
       val l = broadcast(emb16.where(col("vec_id") < 50)
         .select(col("vec_id").as("id1"),
           col("v16").cast("array<double>").as("_lv")))

@@ -167,18 +167,7 @@ private[queries] trait CatalogMultimodal extends CatalogShared {
   // multimodal pipeline; per-batch cost O(batch), model loads
   // O(partitions), no state store. The oracle is mm05's batch SQL:
   // scoring is per-row, so any micro-batching appends the same rows.
-  private val mm07 = Q("mm07_stream_infer", Some("""
-    WITH b AS (
-      SELECT doc_id, hex(encode(text)) AS hx,
-        octet_length(encode(text)) AS blen
-      FROM documents WHERE doc_id < 200 AND length(text) > 0)
-    SELECT doc_id,
-      cast(list_sum(list_transform(generate_series(1, blen),
-        i -> (strpos('0123456789ABCDEF', substr(hx, CAST(2*i-1 AS INT), 1)) * 16
-            + strpos('0123456789ABCDEF', substr(hx, CAST(2*i AS INT), 1)) - 17)
-          * ([3, 1, 4, 1])[(i - 1) % 4 + 1]))
-        as bigint) AS score
-    FROM b ORDER BY doc_id"""),
+  private val mm07 = Q("mm07_stream_infer", mm05.oracle,
     (s, d) => graft.streaming.StreamingOps.streamBatchScore(s,
         s"$d/documents.parquet",
         col("doc_id") < 200 && length(col("text")) > 0,
@@ -199,7 +188,7 @@ private[queries] trait CatalogMultimodal extends CatalogShared {
   // char==byte equivalence), the bit pack, the band split
   // ((h >> 16k) & 0xFFFF reads identically under arithmetic and logical
   // shift for k <= 3), and the Hamming filter.
-  private val mm06 = Q("mm06_phash_neardup", Some("""
+  private val mm06 = Q("mm06_phash_neardup", Some(s"""
     WITH b0 AS (
       SELECT doc_id, hex(encode(text)) AS hx,
         octet_length(encode(text)) AS blen
@@ -225,10 +214,7 @@ private[queries] trait CatalogMultimodal extends CatalogShared {
       SELECT doc_id, phash, bi, (phash >> (bi * 16)) & 65535 AS bval
       FROM h, (SELECT unnest(generate_series(0, 3)) AS bi) b),
     cand AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2,
-        l.phash AS h1, r.phash AS h2
-      FROM bv l JOIN bv r ON l.bi = r.bi AND l.bval = r.bval
-        AND l.doc_id < r.doc_id)
+      ${phashPairSql("bv")})
     SELECT id1, id2, bit_count(xor(h1, h2)) AS hamming
     FROM cand WHERE bit_count(xor(h1, h2)) <= 8
     ORDER BY id1, id2"""),
@@ -236,17 +222,7 @@ private[queries] trait CatalogMultimodal extends CatalogShared {
       val hashed = MultimodalOps.perceptualHash64(
         MultimodalOps.withBinaryPayload(T(s, d, "documents"), "text"),
         "payload", "doc_id")
-      val bv = Exec.materializeForSelfJoin(
-        hashed.select(col("doc_id"), col("phash"),
-            explode(expr("sequence(0, 3)")).as("bi"))
-          .withColumn("bval",
-            expr("shiftrightunsigned(phash, bi * 16) & 65535")))
-      val l = bv.select(col("bi"), col("bval"), col("doc_id").as("id1"),
-        col("phash").as("h1"))
-      val r = bv.select(col("bi"), col("bval"), col("doc_id").as("id2"),
-        col("phash").as("h2"))
-      l.join(r, Seq("bi", "bval")).where(col("id1") < col("id2"))
-        .select("id1", "id2", "h1", "h2").distinct()
+      phashBandPairs(hashed)
         .withColumn("hamming", DedupOps.hamming64(col("h1"), col("h2")))
         .where(col("hamming") <= 8)
         .select("id1", "id2", "hamming")
@@ -266,10 +242,7 @@ private[queries] trait CatalogMultimodal extends CatalogShared {
   private val mm08 = Q("mm08_crossmodal_neardup", Some(s"""
     WITH $minhashCtes,
     ct AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band_id = r.band_id AND l.band_key = r.band_key
-      WHERE l.doc_id < r.doc_id),
+      $bandPairSql),
     pb0 AS (
       SELECT doc_id, hex(encode(text)) AS hx,
         octet_length(encode(text)) AS blen
@@ -295,10 +268,7 @@ private[queries] trait CatalogMultimodal extends CatalogShared {
       SELECT doc_id, phash, bi, (phash >> (bi * 16)) & 65535 AS bval
       FROM ph, (SELECT unnest(generate_series(0, 3)) AS bi) b),
     cv AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2,
-        l.phash AS h1, r.phash AS h2
-      FROM pbv l JOIN pbv r ON l.bi = r.bi AND l.bval = r.bval
-        AND l.doc_id < r.doc_id),
+      ${phashPairSql("pbv")}),
     agree AS (SELECT cv.id1, cv.id2, cv.h1, cv.h2
               FROM cv JOIN ct ON cv.id1 = ct.id1 AND cv.id2 = ct.id2),
     sets AS (SELECT doc_id, list_distinct(shingles) AS s FROM sh),
@@ -319,17 +289,7 @@ private[queries] trait CatalogMultimodal extends CatalogShared {
         shingleK = 3, bands = 4, rowsPerBand = 4)
       val hashed = MultimodalOps.perceptualHash64(
         MultimodalOps.withBinaryPayload(docs, "text"), "payload", "doc_id")
-      val bv = Exec.materializeForSelfJoin(
-        hashed.select(col("doc_id"), col("phash"),
-            explode(expr("sequence(0, 3)")).as("bi"))
-          .withColumn("bval",
-            expr("shiftrightunsigned(phash, bi * 16) & 65535")))
-      val l = bv.select(col("bi"), col("bval"), col("doc_id").as("id1"),
-        col("phash").as("h1"))
-      val r = bv.select(col("bi"), col("bval"), col("doc_id").as("id2"),
-        col("phash").as("h2"))
-      val candVis = l.join(r, Seq("bi", "bval")).where(col("id1") < col("id2"))
-        .select("id1", "id2", "h1", "h2").distinct()
+      val candVis = phashBandPairs(hashed)
       val agree = candVis.join(candText, Seq("id1", "id2"))
       val sets = Exec.materializeLarge(
         docs.select(col("doc_id"), DedupOps.tokens(col("text")).as("_t"))

@@ -21,17 +21,17 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   // Every stage is an existing operator (TextOps.qualityScore,
   // DedupOps.exactDedup/minhashCandidates/connectedComponents) composed;
   // the oracle rebuilds the same fixpoint relationally.
-  private val dp01 = Q("dp01_curation_pipeline", Some("""
+  private val dp01 = Q("dp01_curation_pipeline", Some(s"""
     WITH RECURSIVE eligible AS (
       SELECT doc_id, text FROM (
         SELECT doc_id, text,
           0.5 * least(length(text) / 512.0, 1.0)
             + 0.25 * (CASE WHEN (CASE WHEN length(trim(text)) = 0 THEN 0
-                       ELSE len(regexp_split_to_array(trim(text), '\s+')) END) = 0 THEN 0.0
-                      ELSE cast(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+                       ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) = 0 THEN 0.0
+                      ELSE cast(len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
                              x -> list_contains(['a','an','the','and','or','of','in','to','is'], lower(x)))) as double)
                            / (CASE WHEN length(trim(text)) = 0 THEN 0
-                              ELSE len(regexp_split_to_array(trim(text), '\s+')) END) END)
+                              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) END)
             + 0.25 * (1.0 - least((length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))) * 16.0 / length(text), 1.0))
           AS quality
         FROM documents) q
@@ -40,33 +40,9 @@ private[queries] trait CatalogPipeline extends CatalogShared {
       SELECT min(doc_id) AS doc_id FROM eligible GROUP BY md5(text)),
     docs2 AS (
       SELECT e.doc_id, e.text FROM eligible e JOIN exact_kept k ON k.doc_id = e.doc_id),
-    sh AS (
-      SELECT doc_id,
-        CASE WHEN len(regexp_split_to_array(trim(text), '\s+')) >= 3 THEN
-          list_transform(
-            generate_series(1, len(regexp_split_to_array(trim(text), '\s+')) - 2),
-            i -> regexp_split_to_array(trim(text), '\s+')[i] || ' ' ||
-                 regexp_split_to_array(trim(text), '\s+')[i+1] || ' ' ||
-                 regexp_split_to_array(trim(text), '\s+')[i+2])
-        ELSE [array_to_string(regexp_split_to_array(trim(text), '\s+'), ' ')] END AS shingles
-      FROM docs2),
-    sig AS (
-      SELECT doc_id,
-        list_transform(generate_series(0, 15),
-          seed -> list_aggregate(
-            list_transform(shingles, x -> md5(cast(seed as varchar) || ':' || x)),
-            'min')) AS sig
-      FROM sh),
-    bands AS (
-      SELECT doc_id, b.band_id,
-        md5(sig[b.band_id*4+1] || '|' || sig[b.band_id*4+2] || '|' ||
-            sig[b.band_id*4+3] || '|' || sig[b.band_id*4+4]) AS band_key
-      FROM sig, (SELECT unnest(generate_series(0, 3)) AS band_id) b),
+    ${minhashCtesOn("docs2")},
     pairs AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band_id = r.band_id AND l.band_key = r.band_key
-      WHERE l.doc_id < r.doc_id),
+      $bandPairSql),
     edges AS (SELECT id1 AS src, id2 AS dst FROM pairs
               UNION ALL SELECT id2, id1 FROM pairs),
     reach(id, lab) AS (
@@ -227,16 +203,8 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   // uncheckable across engines. 256 power-of-two bins make the float
   // binning IEEE-exact on both engines; everything after the first
   // aggregation runs on the <= 5x256-row bin table.
-  private val dp10 = Q("dp10_quality_threshold", Some("""
-    WITH f AS (
-      SELECT lang,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS tok_cnt,
-        length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS punct_cnt,
-        len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-          x -> list_contains(['a','an','the','and','or','of','in','to','is'], lower(x)))) AS stop_cnt,
-        length(text) AS n_len
-      FROM documents),
+  private val dp10 = Q("dp10_quality_threshold", Some(s"""
+    WITH ${qualityFeatureCte("lang")},
     q AS (
       SELECT lang,
         0.5 * least(n_len / 512.0, 1.0)
@@ -261,21 +229,9 @@ private[queries] trait CatalogPipeline extends CatalogShared {
       thr_bin / 256.0 AS threshold, cast(n_kept as bigint) AS n_kept
     FROM t ORDER BY lang"""),
     (s, d) => {
-      val toks = split(trim(col("text")), "\\s+")
-      val stops = Seq("a", "an", "the", "and", "or", "of", "in", "to", "is")
       // tx02's quality expression, staged then combined — same IEEE ops
-      val feats = T(s, d, "documents")
-        .select(col("lang"),
-          TextOps.tokenCount(col("text")).as("tok_cnt"),
-          TextOps.punctCount(col("text")).as("punct_cnt"),
-          size(filter(toks, x => lower(x).isInCollection(stops))).as("stop_cnt"),
-          length(col("text")).as("n_len"))
-      val scored = feats.select(col("lang"),
-        (lit(0.5) * least(col("n_len") / 512.0, lit(1.0))
-          + lit(0.25) * when(col("tok_cnt") === 0, 0.0)
-              .otherwise(col("stop_cnt").cast("double") / col("tok_cnt"))
-          + lit(0.25) * (lit(1.0) - least(col("punct_cnt") * 16.0 / col("n_len"), lit(1.0))))
-          .as("quality"))
+      val scored = qualityFeatures(T(s, d, "documents"), "lang")
+        .select(col("lang"), featureQuality)
       QuantileOps.histogramThreshold(scored, Seq("lang"), col("quality"),
           lo = 0.0, hi = 1.0, bins = 256, num = 9, den = 10)
         .select(col("lang"), col("n").as("n_docs"), col("thr_bin"),
@@ -350,10 +306,7 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   private val dp12 = Q("dp12_split_leakage", Some(s"""
     WITH $minhashCtes,
     pairs AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band_id = r.band_id AND l.band_key = r.band_key
-      WHERE l.doc_id < r.doc_id),
+      $bandPairSql),
     sp AS (
       SELECT doc_id,
         CASE WHEN frac < 0.8 THEN 'train' WHEN frac < 0.9 THEN 'val'
@@ -555,10 +508,7 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   private val dp14 = Q("dp14_leakage_quarantine", Some(s"""
     WITH $minhashCtes,
     pairs AS (
-      SELECT DISTINCT l.doc_id AS id1, r.doc_id AS id2
-      FROM bands l JOIN bands r
-        ON l.band_id = r.band_id AND l.band_key = r.band_key
-      WHERE l.doc_id < r.doc_id),
+      $bandPairSql),
     sp AS (
       SELECT doc_id, lang, n_chars,
         CASE WHEN frac < 0.8 THEN 'train' WHEN frac < 0.9 THEN 'val'
@@ -679,13 +629,7 @@ private[queries] trait CatalogPipeline extends CatalogShared {
     FROM old o FULL OUTER JOIN new n ON o.c_custkey = n.c_custkey
     GROUP BY 1 ORDER BY status"""),
     (s, d) => {
-      val cust = T(s, d, "customer")
-      val oldSnap = cust.where(col("c_custkey") % 7 =!= 0)
-        .select("c_custkey", "c_name", "c_acctbal")
-      val newSnap = cust.where(col("c_custkey") % 11 =!= 0)
-        .select(col("c_custkey"), col("c_name"),
-          when(col("c_custkey") % 5 === 0, col("c_acctbal") * 2)
-            .otherwise(col("c_acctbal")).as("c_acctbal"))
+      val (oldSnap, newSnap) = customerSnapshots(s, d)
       SnapshotOps.snapshotDiff(oldSnap, newSnap,
           keys = Seq("c_custkey"), compareCols = Seq("c_name", "c_acctbal"))
         .groupBy("status")
@@ -918,20 +862,8 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   // ascending merge — languages evenly spread, never blocked. Everything
   // integer; per-source ranks and the global position both run as
   // two-phase prefix sums (no single-reducer sort, the dp17 discipline).
-  private val dp20 = Q("dp20_mixture_interleave", Some("""
-    WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-    w AS (SELECT lang, cast(floor(sqrt(n)) as bigint) AS w,
-            cast(row_number() OVER (ORDER BY lang) - 1 as bigint) AS src_idx
-          FROM c),
-    tot AS (SELECT cast(sum(w) as bigint) AS wt FROM w),
-    r AS (SELECT doc_id, lang,
-            cast(row_number() OVER (PARTITION BY lang ORDER BY doc_id)
-              as bigint) AS src_rank
-          FROM documents),
-    v AS (SELECT r.doc_id, r.lang, r.src_rank,
-            cast(((r.src_rank - 1) * tot.wt) // w.w as bigint) AS vtime,
-            w.src_idx
-          FROM r JOIN w USING (lang) CROSS JOIN tot)
+  private val dp20 = Q("dp20_mixture_interleave", Some(s"""
+    $interleaveCtes
     SELECT doc_id, lang, src_rank, vtime,
       cast(row_number() OVER (ORDER BY vtime, src_idx) as bigint)
         AS global_pos
@@ -940,11 +872,7 @@ private[queries] trait CatalogPipeline extends CatalogShared {
       val docs = T(s, d, "documents").select("doc_id", "lang")
       // per-language weights: one row per language (tiny) — the
       // unpartitioned window is over the <= languages aggregate, not data
-      val w = docs.groupBy("lang").agg(count(lit(1)).as("_n"))
-        .withColumn("w", floor(sqrt(col("_n"))).cast("long"))
-        .withColumn("src_idx",
-          (row_number().over(Window.orderBy("lang")) - 1).cast("long"))
-        .select("lang", "w", "src_idx")
+      val w = interleaveWeights(docs)
       PrefixSumOps.mixtureInterleave(docs, "lang", "doc_id", w)
         .select("doc_id", "lang", "src_rank", "vtime", "global_pos")
         .orderBy("global_pos")
@@ -959,16 +887,10 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   // positives); survivors are size-weighted sampled. Per-language
   // tallies of each path make the gate's behavior itself the checked
   // value.
-  private val dp08 = Q("dp08_ingest_gate", Some("""
+  private val dp08 = Q("dp08_ingest_gate", Some(s"""
     WITH hist AS (SELECT text FROM documents WHERE doc_id < 400),
     batch AS (SELECT doc_id, lang, n_chars, text FROM documents WHERE doc_id >= 400),
-    ks AS (SELECT unnest([0, 1, 2, 3]) AS i),
-    bits AS (
-      SELECT DISTINCT ('0x' || substr(md5(h.text), 1 + 4*k.i, 4))::BIGINT % 4096 AS bit
-      FROM hist h CROSS JOIN ks k),
-    probe AS (
-      SELECT b.doc_id, ('0x' || substr(md5(b.text), 1 + 4*k.i, 4))::BIGINT % 4096 AS bit
-      FROM batch b CROSS JOIN ks k),
+    $bloomProbeCtes,
     gate AS (
       SELECT doc_id,
         count(*) FILTER (WHERE bit IN (SELECT bit FROM bits)) = 4 AS maybe_dup
@@ -1149,48 +1071,14 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   // shard file. The hash's collect_list is budget-bounded per shard,
   // never corpus-bounded. ShardExportSpec drives the actual
   // one-file-per-shard write and round-trips it against this manifest.
-  private val dp24 = Q("dp24_shard_manifest", Some("""
-    WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-    w AS (SELECT lang, cast(floor(sqrt(n)) as bigint) AS w,
-            cast(row_number() OVER (ORDER BY lang) - 1 as bigint) AS src_idx
-          FROM c),
-    tot AS (SELECT cast(sum(w) as bigint) AS wt FROM w),
-    r AS (SELECT doc_id, lang,
-            cast(row_number() OVER (PARTITION BY lang ORDER BY doc_id)
-              as bigint) AS src_rank
-          FROM documents),
-    v AS (SELECT r.doc_id, r.lang, r.src_rank,
-            cast(((r.src_rank - 1) * tot.wt) // w.w as bigint) AS vtime,
-            w.src_idx
-          FROM r JOIN w USING (lang) CROSS JOIN tot),
-    g AS (SELECT doc_id,
-            cast(row_number() OVER (ORDER BY vtime, src_idx) as bigint)
-              AS global_pos
-          FROM v),
-    tk AS (SELECT doc_id,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS tok
-           FROM documents),
-    o AS (SELECT g.doc_id, g.global_pos, tk.tok FROM g JOIN tk USING (doc_id)),
-    rr AS (SELECT doc_id, global_pos, tok,
-             sum(tok) OVER (ORDER BY global_pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok AS cum_excl
-           FROM o),
+  private val dp24 = Q("dp24_shard_manifest", Some(s"""
+    $shardCumCtes,
     sa AS (SELECT doc_id, global_pos, tok, cum_excl // 4096 AS shard FROM rr)
-    SELECT cast(shard as bigint) AS shard, cast(count(*) as bigint) AS n_docs,
-      cast(sum(tok) as bigint) AS n_tokens,
-      cast(min(global_pos) as bigint) AS first_pos,
-      cast(max(global_pos) as bigint) AS last_pos,
-      md5(string_agg(cast(doc_id as varchar), ',' ORDER BY global_pos)) AS content_md5
-    FROM sa GROUP BY shard ORDER BY shard"""),
+    $shardManifestSql"""),
     (s, d) => {
       val docs = T(s, d, "documents")
         .select(col("doc_id"), col("lang"), TextOps.tokenCount(col("text")).as("tok"))
-      val w = docs.groupBy("lang").agg(count(lit(1)).as("_n"))
-        .withColumn("w", floor(sqrt(col("_n"))).cast("long"))
-        .withColumn("src_idx",
-          (row_number().over(Window.orderBy("lang")) - 1).cast("long"))
-        .select("lang", "w", "src_idx")
+      val w = interleaveWeights(docs)
       val inter = PrefixSumOps.mixtureInterleave(docs, "lang", "doc_id", w)
       val assigned = graft.sinks.ShardExport.assignShards(
         inter.select(col("doc_id"), col("global_pos"), col("tok")),
@@ -1210,50 +1098,16 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   // the batch suffix, so a hash match PROVES appends never re-cut
   // existing shards (floor((offset + batch_cumsum)/budget) = the full
   // run's cut for every batch row, by the dp03 overflow-pack rule).
-  private val dp25 = Q("dp25_incremental_shards", Some("""
-    WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-    w AS (SELECT lang, cast(floor(sqrt(n)) as bigint) AS w,
-            cast(row_number() OVER (ORDER BY lang) - 1 as bigint) AS src_idx
-          FROM c),
-    tot AS (SELECT cast(sum(w) as bigint) AS wt FROM w),
-    r AS (SELECT doc_id, lang,
-            cast(row_number() OVER (PARTITION BY lang ORDER BY doc_id)
-              as bigint) AS src_rank
-          FROM documents),
-    v AS (SELECT r.doc_id, r.lang, r.src_rank,
-            cast(((r.src_rank - 1) * tot.wt) // w.w as bigint) AS vtime,
-            w.src_idx
-          FROM r JOIN w USING (lang) CROSS JOIN tot),
-    g AS (SELECT doc_id,
-            cast(row_number() OVER (ORDER BY vtime, src_idx) as bigint)
-              AS global_pos
-          FROM v),
-    tk AS (SELECT doc_id,
-             CASE WHEN length(trim(text)) = 0 THEN 0
-                  ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS tok
-           FROM documents),
-    o AS (SELECT g.doc_id, g.global_pos, tk.tok FROM g JOIN tk USING (doc_id)),
-    rr AS (SELECT doc_id, global_pos, tok,
-             sum(tok) OVER (ORDER BY global_pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tok AS cum_excl
-           FROM o),
+  private val dp25 = Q("dp25_incremental_shards", Some(s"""
+    $shardCumCtes,
     hb AS (SELECT cast(count(*) * 3 // 5 as bigint) AS h FROM documents),
     sa AS (SELECT doc_id, global_pos, tok, cum_excl // 4096 AS shard
            FROM rr WHERE global_pos > (SELECT h FROM hb))
-    SELECT cast(shard as bigint) AS shard, cast(count(*) as bigint) AS n_docs,
-      cast(sum(tok) as bigint) AS n_tokens,
-      cast(min(global_pos) as bigint) AS first_pos,
-      cast(max(global_pos) as bigint) AS last_pos,
-      md5(string_agg(cast(doc_id as varchar), ',' ORDER BY global_pos)) AS content_md5
-    FROM sa GROUP BY shard ORDER BY shard"""),
+    $shardManifestSql"""),
     (s, d) => {
       val docs = T(s, d, "documents")
         .select(col("doc_id"), col("lang"), TextOps.tokenCount(col("text")).as("tok"))
-      val w = docs.groupBy("lang").agg(count(lit(1)).as("_n"))
-        .withColumn("w", floor(sqrt(col("_n"))).cast("long"))
-        .withColumn("src_idx",
-          (row_number().over(Window.orderBy("lang")) - 1).cast("long"))
-        .select("lang", "w", "src_idx")
+      val w = interleaveWeights(docs)
       val inter = graft.operators.Exec.materializeForSelfJoin(
         PrefixSumOps.mixtureInterleave(docs, "lang", "doc_id", w)
           .select(col("doc_id"), col("global_pos"), col("tok")))
@@ -1398,7 +1252,7 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   // contract: per ProfileOps.profile's scaladoc, the exact ndv is the
   // GRADING arm only — a 100 TB run keeps just the k-bounded KMV arm,
   // as the streaming monitor q96 already does.
-  private val dp28 = Q("dp28_column_profile", Some("""
+  private val dp28 = Q("dp28_column_profile", Some(s"""
     WITH src AS (
       SELECT 'l_orderkey' AS c, cast(l_orderkey as varchar) AS v FROM lineitem
       UNION ALL SELECT 'l_partkey', cast(l_partkey as varchar) FROM lineitem
@@ -1410,15 +1264,7 @@ private[queries] trait CatalogPipeline extends CatalogShared {
       SELECT c, count(*) AS n_rows, count(*) - count(v) AS n_null,
         count(DISTINCT v) AS ndv, min(v) AS min_val, max(v) AS max_val
       FROM src GROUP BY c),
-    h AS (SELECT DISTINCT c, ('0x' || substr(md5(v), 1, 15))::BIGINT AS h
-          FROM src WHERE v IS NOT NULL),
-    r AS (SELECT c, h, row_number() OVER (PARTITION BY c ORDER BY h) AS rn,
-            count(*) OVER (PARTITION BY c) AS nd FROM h),
-    kmv AS (SELECT c,
-        cast(CASE WHEN nd < 64 THEN cast(nd as double)
-                  ELSE floor(63.0 * 1152921504606846976.0 / cast(h as double)) END
-          as bigint) AS ndv_kmv
-      FROM r WHERE rn = least(nd, 64)),
+    $kmvNdvCtes,
     vc AS (SELECT c, v, count(*) AS cnt FROM src WHERE v IS NOT NULL GROUP BY c, v),
     mx AS (SELECT c, max(cnt) AS top_cnt FROM vc GROUP BY c),
     top AS (SELECT vc.c, cast(mx.top_cnt as bigint) AS top_cnt, min(vc.v) AS top_val
@@ -1609,32 +1455,7 @@ private[queries] trait CatalogPipeline extends CatalogShared {
   // no segmentable word (empty / all words > 16 chars) are outside the
   // candidate universe by definition.
   private val dp32 = Q("dp32_piece_budget", Some(s"""
-    WITH w AS MATERIALIZED (SELECT w, count(*) AS freq FROM (
-        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 AND length(w) <= 16 GROUP BY w),
-    sub0 AS MATERIALIZED (
-      SELECT q.c.sub AS piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-        SELECT freq, unnest(flatten(list_transform(generate_series(1, length(w)), sx ->
-          list_transform(generate_series(sx, least(length(w), sx + 3)), ex ->
-            {'s': sx, 'e': ex, 'sub': substr(w, sx, ex - sx + 1)})))) AS c
-        FROM w) q
-      GROUP BY q.c.sub),
-    seed AS MATERIALIZED (SELECT piece, cnt FROM sub0 WHERE length(piece) = 1 OR cnt >= 2),
-    t0 AS MATERIALIZED (SELECT sum(cnt) AS t, count(*) AS p FROM seed),
-    p0 AS MATERIALIZED (SELECT piece, cnt,
-      CAST(round(ln((CAST(cnt + 1 AS DOUBLE)) / CAST(t + p AS DOUBLE))
-        * 1000000000.0) AS BIGINT) AS lp FROM seed, t0),
-    ${unigramRoundCtes(1)},
-    ${unigramRoundCtes(2)},
-    ${viterbiCtes(3)},
-    np AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS n_pieces FROM (
-        ${(1 to 16).map(i => s"SELECT w FROM ch3_$i").mkString(" UNION ALL ")}) u
-      GROUP BY w),
-    dt AS MATERIALIZED (SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 AND length(w) <= 16),
+    ${unigramPieceCtes("doc_id")},
     dpieces AS (SELECT dt.doc_id, CAST(sum(np.n_pieces) AS BIGINT) AS n_pieces
                 FROM dt JOIN np USING (w) GROUP BY dt.doc_id),
     h AS (SELECT p.doc_id, d.lang, p.n_pieces,
@@ -1652,11 +1473,7 @@ private[queries] trait CatalogPipeline extends CatalogShared {
     ORDER BY doc_id"""),
     (s, d) => {
       val docs = T(s, d, "documents")
-      val st = graft.operators.UnigramOps.encodeStats(
-        docs, "text", "doc_id",
-        vocab = SharedArtifacts.unigramVocab16(s, d),
-        maxLen = 4, maxWordLen = 16,
-        tokenTable = Some(SharedArtifacts.docTokens(s, d)))
+      val st = unigramEncodeStats(s, d, docs)
       val h = st.select(col("doc_id"), col("n_pieces"))
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
         .withColumn("hk",

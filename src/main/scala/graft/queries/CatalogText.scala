@@ -41,50 +41,22 @@ private[queries] trait CatalogText extends CatalogShared {
   // Per-doc quality features. All per-row double math mirrors the oracle
   // op-for-op (power-of-two weights, same order) -> bit-identical, no
   // rounding needed.
-  private val tx02 = Q("tx02_quality", Some("""
-    WITH f AS (
-      SELECT doc_id,
-        CASE WHEN length(trim(text)) = 0 THEN 0
-             ELSE len(regexp_split_to_array(trim(text), '\s+')) END AS tok_cnt,
-        length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS punct_cnt,
-        len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-          x -> list_contains(['a','an','the','and','or','of','in','to','is'], lower(x)))) AS stop_cnt,
-        length(text) AS n_len
-      FROM documents)
+  private val tx02 = Q("tx02_quality", Some(s"""
+    WITH ${qualityFeatureCte("doc_id")}
     SELECT doc_id, tok_cnt, punct_cnt, stop_cnt,
       0.5 * least(n_len / 512.0, 1.0)
         + 0.25 * (CASE WHEN tok_cnt = 0 THEN 0.0
                        ELSE cast(stop_cnt as double) / tok_cnt END)
         + 0.25 * (1.0 - least(punct_cnt * 16.0 / n_len, 1.0)) AS quality
     FROM f ORDER BY doc_id"""),
-    (s, d) => {
-      val toks = split(trim(col("text")), "\\s+")
-      val stops = Seq("a", "an", "the", "and", "or", "of", "in", "to", "is")
-      T(s, d, "documents")
-        .select(col("doc_id"),
-          TextOps.tokenCount(col("text")).as("tok_cnt"),
-          TextOps.punctCount(col("text")).as("punct_cnt"),
-          size(filter(toks, x => lower(x).isInCollection(stops))).as("stop_cnt"),
-          length(col("text")).as("n_len"))
-        .select(col("doc_id"), col("tok_cnt"), col("punct_cnt"), col("stop_cnt"),
-          (lit(0.5) * least(col("n_len") / 512.0, lit(1.0))
-            + lit(0.25) * when(col("tok_cnt") === 0, 0.0)
-                .otherwise(col("stop_cnt").cast("double") / col("tok_cnt"))
-            + lit(0.25) * (lit(1.0) - least(col("punct_cnt") * 16.0 / col("n_len"), lit(1.0))))
-            .as("quality"))
-        .orderBy("doc_id")
-    })
+    (s, d) => qualityFeatures(T(s, d, "documents"), "doc_id")
+      .select(col("doc_id"), col("tok_cnt"), col("punct_cnt"), col("stop_cnt"),
+        featureQuality)
+      .orderBy("doc_id"))
 
 
-  private val tx03 = Q("tx03_langid", Some("""
-    WITH scored AS (
-      SELECT lang,
-        len(regexp_extract_all(text, '(?i)\ble\b|(?i)\bla\b|(?i)\bles\b|(?i)\bet\b|(?i)\best\b|(?i)\bune\b')) AS s_fr,
-        len(regexp_extract_all(text, '(?i)\bel\b|(?i)\blos\b|(?i)\blas\b|(?i)\bes\b|(?i)\buna\b')) AS s_es,
-        len(regexp_extract_all(text, '(?i)\bder\b|(?i)\bdie\b|(?i)\bdas\b|(?i)\bund\b|(?i)\bist\b')) AS s_de,
-        len(regexp_extract_all(text, '(?i)\bthe\b|(?i)\band\b|(?i)\bis\b|(?i)\bof\b|(?i)\bthat\b')) AS s_en,
-        regexp_matches(text, '[\x{4e00}-\x{9fff}]') AS has_cjk
-      FROM documents)
+  private val tx03 = Q("tx03_langid", Some(s"""
+    WITH $langScoreCte
     SELECT lang,
       CASE WHEN has_cjk THEN 'zh'
            WHEN s_fr > s_en AND s_fr >= s_es AND s_fr >= s_de THEN 'fr'
@@ -112,15 +84,8 @@ private[queries] trait CatalogText extends CatalogShared {
   // exact integers, nano-rounded; a class never predicted gets
   // precision 0 by the guarded CASE on both engines identically. F1
   // computes from the RAW ratios, rounded once at the end.
-  private val tx23 = Q("tx23_langid_eval", Some("""
-    WITH scored AS (
-      SELECT lang,
-        len(regexp_extract_all(text, '(?i)\ble\b|(?i)\bla\b|(?i)\bles\b|(?i)\bet\b|(?i)\best\b|(?i)\bune\b')) AS s_fr,
-        len(regexp_extract_all(text, '(?i)\bel\b|(?i)\blos\b|(?i)\blas\b|(?i)\bes\b|(?i)\buna\b')) AS s_es,
-        len(regexp_extract_all(text, '(?i)\bder\b|(?i)\bdie\b|(?i)\bdas\b|(?i)\bund\b|(?i)\bist\b')) AS s_de,
-        len(regexp_extract_all(text, '(?i)\bthe\b|(?i)\band\b|(?i)\bis\b|(?i)\bof\b|(?i)\bthat\b')) AS s_en,
-        regexp_matches(text, '[\x{4e00}-\x{9fff}]') AS has_cjk
-      FROM documents),
+  private val tx23 = Q("tx23_langid_eval", Some(s"""
+    WITH $langScoreCte,
     pred AS (
       SELECT lang,
         CASE WHEN has_cjk THEN 'zh'
@@ -374,17 +339,11 @@ private[queries] trait CatalogText extends CatalogShared {
   // set is mostly duplicates get filtered before training. Narrow
   // per-row compute over the same shingle kernel dd04 uses; the ratio is
   // one double division + subtraction, mirrored op-for-op.
-  private val tx09 = Q("tx09_repetition", Some("""
+  private val tx09 = Q("tx09_repetition", Some(s"""
     WITH toks AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
       FROM documents WHERE length(trim(text)) > 0),
-    sh AS (
-      SELECT doc_id,
-        CASE WHEN len(t) >= 3 THEN
-          list_transform(generate_series(1, len(t) - 2),
-            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        ELSE [array_to_string(t, ' ')] END AS shingles
-      FROM toks),
+    $wordShingleCte,
     c AS (
       SELECT doc_id, cast(len(shingles) as bigint) AS n_shingles,
         cast(len(list_distinct(shingles)) as bigint) AS n_distinct
@@ -445,16 +404,8 @@ private[queries] trait CatalogText extends CatalogShared {
   // SHARED positional index (SharedArtifacts.posShingles8 — the kernel
   // dd12/dd16/dd19 ride): zero new corpus scans; per-doc occurrence
   // counts and first positions fall out of one hash agg.
-  private val tx25 = Q("tx25_phrase_search", Some("""
-    WITH t AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-      FROM documents WHERE length(trim(text)) > 0),
-    sh AS (
-      SELECT doc_id,
-        unnest(generate_series(1, len(tk) - 7)) AS p,
-        unnest(list_transform(generate_series(1, len(tk) - 7),
-          i -> substr(md5(array_to_string(list_slice(tk, i, i + 7), ' ')), 1, 16))) AS h
-      FROM t WHERE len(tk) >= 8),
+  private val tx25 = Q("tx25_phrase_search", Some(s"""
+    $posShingle8Ctes,
     q AS (
       SELECT h, row_number() OVER (ORDER BY nd DESC, h) AS phrase_rank
       FROM (SELECT h, count(DISTINCT doc_id) AS nd FROM sh GROUP BY h)
@@ -611,23 +562,11 @@ private[queries] trait CatalogText extends CatalogShared {
   // float step and the output rounds to 4 decimals so both engines' libm
   // agree (the dd05 precedent). Linear: no self-join, model tables are
   // hash aggregates the occurrence table equi-joins back against.
-  private val tx14 = Q("tx14_bigram_lm", Some("""
+  private val tx14 = Q("tx14_bigram_lm", Some(s"""
     WITH t AS (
-      SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
+      SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS tk
       FROM documents WHERE length(trim(text)) > 0),
-    bg AS (
-      SELECT doc_id,
-        unnest(list_transform(generate_series(1, len(tk) - 1),
-          i -> struct_pack(h2 := substr(md5(tk[i] || ' ' || tk[i+1]), 1, 16),
-                           h1 := substr(md5(tk[i]), 1, 16)))) AS s
-      FROM t WHERE len(tk) >= 2),
-    o AS (
-      SELECT doc_id, s.h2 AS h2, s.h1 AS h1, count(*) AS cnt
-      FROM bg GROUP BY 1, 2, 3),
-    c2 AS (SELECT h2, sum(cnt) AS c2 FROM o GROUP BY 1),
-    c1 AS (SELECT h1, sum(cnt) AS c1 FROM o GROUP BY 1),
-    v AS (SELECT count(DISTINCT u) AS v
-          FROM (SELECT unnest(tk) AS u FROM t))
+    $bigramLmCtes
     SELECT o.doc_id,
       cast(sum(cnt) as bigint) AS n_bigrams,
       round(sum(cnt * (ln(c2 + 1.0) - ln(c1 + v))) / sum(cnt), 4)
@@ -647,36 +586,7 @@ private[queries] trait CatalogText extends CatalogShared {
   // move), so the cross-vocab sum is an exact long under any
   // aggregation order; `ln` is the one float step, per-term and
   // mirrored. Batch = doc_id >= 400 (the dd08 convention).
-  private val tx15 = Q("tx15_batch_drift", Some("""
-    WITH t AS (
-      SELECT lang, doc_id, regexp_split_to_array(trim(text), '\s+') AS tk
-      FROM documents WHERE length(trim(text)) > 0),
-    tok AS (
-      SELECT lang, is_batch, substr(md5(u), 1, 16) AS h FROM (
-        SELECT lang, doc_id >= 400 AS is_batch, unnest(tk) AS u FROM t)),
-    per AS (
-      SELECT lang, h,
-        sum(CASE WHEN is_batch THEN 1 ELSE 0 END) AS b,
-        sum(CASE WHEN is_batch THEN 0 ELSE 1 END) AS hc
-      FROM tok GROUP BY 1, 2),
-    tot AS (SELECT lang, sum(b) AS bt, sum(hc) AS ht, count(*) AS v
-            FROM per GROUP BY 1),
-    terms AS (
-      SELECT per.lang, per.b, per.hc,
-        (per.b + 1.0) / (tot.bt + tot.v) AS pb,
-        (per.hc + 1.0) / (tot.ht + tot.v) AS ph
-      FROM per JOIN tot USING (lang)),
-    agg AS (
-      SELECT lang,
-        cast(sum(cast(round(pb * ln(pb / ph) * 1000000000.0) as bigint))
-          as bigint) AS kl_nano,
-        cast(sum(CASE WHEN hc = 0 THEN b ELSE 0 END) as bigint) AS oov_occ
-      FROM terms GROUP BY 1)
-    SELECT a.lang, cast(t.bt as bigint) AS batch_tok,
-      cast(t.ht as bigint) AS hist_tok, cast(t.v as bigint) AS vocab,
-      cast(a.oov_occ as double) / t.bt AS oov_rate, a.kl_nano
-    FROM agg a JOIN tot t USING (lang)
-    WHERE t.bt > 0 ORDER BY a.lang"""),
+  private val tx15 = Q("tx15_batch_drift", Some(driftSql),
     (s, d) => TextOps.distributionDrift(T(s, d, "documents"), "text",
         "lang", col("doc_id") >= 400)
       .orderBy("lang"))
@@ -692,23 +602,11 @@ private[queries] trait CatalogText extends CatalogShared {
   // bin-granular so no tiebreak ordering is needed. The oracle replays
   // the tx14 LM CTEs, the IEEE-exact binning, and the cumulative-count
   // cutoff rule (cum·den ≥ n·num) verbatim.
-  private val tx16 = Q("tx16_perplexity_buckets", Some("""
+  private val tx16 = Q("tx16_perplexity_buckets", Some(s"""
     WITH t AS (
-      SELECT doc_id, lang, regexp_split_to_array(trim(text), '\s+') AS tk
+      SELECT doc_id, lang, regexp_split_to_array(trim(text), '\\s+') AS tk
       FROM documents WHERE length(trim(text)) > 0),
-    bg AS (
-      SELECT doc_id,
-        unnest(list_transform(generate_series(1, len(tk) - 1),
-          i -> struct_pack(h2 := substr(md5(tk[i] || ' ' || tk[i+1]), 1, 16),
-                           h1 := substr(md5(tk[i]), 1, 16)))) AS s
-      FROM t WHERE len(tk) >= 2),
-    o AS (
-      SELECT doc_id, s.h2 AS h2, s.h1 AS h1, count(*) AS cnt
-      FROM bg GROUP BY 1, 2, 3),
-    c2 AS (SELECT h2, sum(cnt) AS c2 FROM o GROUP BY 1),
-    c1 AS (SELECT h1, sum(cnt) AS c1 FROM o GROUP BY 1),
-    v AS (SELECT count(DISTINCT u) AS v
-          FROM (SELECT unnest(tk) AS u FROM t)),
+    $bigramLmCtes,
     sc AS (
       SELECT o.doc_id,
         round(sum(cnt * (ln(c2 + 1.0) - ln(c1 + v))) / sum(cnt), 4) AS s
@@ -1052,16 +950,7 @@ private[queries] trait CatalogText extends CatalogShared {
   // [aa, a]). Ties break (cnt desc, l, r) — binary string order on both
   // engines.
   private val tx19 = Q("tx19_bpe_merges", Some(s"""
-    WITH w AS (SELECT w, count(*) AS freq FROM (
-        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 GROUP BY w),
-    s0 AS (SELECT w, freq,
-        array_to_string(list_transform(generate_series(1, length(w)),
-          i -> substr(w, i, 1)), chr(31)) AS seq
-      FROM w),
-    ${bpeRoundCtes(1, withMerge = true)},
-    ${bpeRoundCtes(2, withMerge = true)},
+    $bpeTwoRoundCtes,
     ${bpeRoundCtes(3, withMerge = false)}
     SELECT 1 AS round, l AS left_sym, r AS right_sym,
       cast(cnt as bigint) AS pair_count FROM m1
@@ -1082,16 +971,7 @@ private[queries] trait CatalogText extends CatalogShared {
   // equi-join distributes the counts back to documents. Docs with no
   // non-empty tokens are absent (inner join, mirrored).
   private val tx20 = Q("tx20_bpe_encode", Some(s"""
-    WITH w AS (SELECT w, count(*) AS freq FROM (
-        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 GROUP BY w),
-    s0 AS (SELECT w, freq,
-        array_to_string(list_transform(generate_series(1, length(w)),
-          i -> substr(w, i, 1)), chr(31)) AS seq
-      FROM w),
-    ${bpeRoundCtes(1, withMerge = true)},
-    ${bpeRoundCtes(2, withMerge = true)},
+    $bpeTwoRoundCtes,
     ${bpeRoundCtes(3, withMerge = true)},
     vb AS (SELECT w, len(string_split(seq, chr(31))) AS n_bpe FROM s3),
     tok AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
@@ -1125,24 +1005,7 @@ private[queries] trait CatalogText extends CatalogShared {
   // maxWordLen = 16 on both engines — the SentencePiece-style length
   // cap that also bounds the oracle's unroll depth.
   private val tx26 = Q("tx26_unigram_lm", Some(s"""
-    WITH w AS MATERIALIZED (SELECT w, count(*) AS freq FROM (
-        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 AND length(w) <= 16 GROUP BY w),
-    sub0 AS MATERIALIZED (
-      SELECT q.c.sub AS piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-        SELECT freq, unnest(flatten(list_transform(generate_series(1, length(w)), sx ->
-          list_transform(generate_series(sx, least(length(w), sx + 3)), ex ->
-            {'s': sx, 'e': ex, 'sub': substr(w, sx, ex - sx + 1)})))) AS c
-        FROM w) q
-      GROUP BY q.c.sub),
-    seed AS MATERIALIZED (SELECT piece, cnt FROM sub0 WHERE length(piece) = 1 OR cnt >= 2),
-    t0 AS MATERIALIZED (SELECT sum(cnt) AS t, count(*) AS p FROM seed),
-    p0 AS MATERIALIZED (SELECT piece, cnt,
-      CAST(round(ln((CAST(cnt + 1 AS DOUBLE)) / CAST(t + p AS DOUBLE))
-        * 1000000000.0) AS BIGINT) AS lp FROM seed, t0),
-    ${unigramRoundCtes(1)},
-    ${unigramRoundCtes(2)}
+    $unigramVocabCtes
     SELECT piece, cnt, lp AS lp_nano FROM p2 ORDER BY piece"""),
     (s, d) => graft.operators.UnigramOps.unigramFit(
         T(s, d, "documents"), "text", maxLen = 4, minCount = 2, rounds = 2,
@@ -1166,32 +1029,7 @@ private[queries] trait CatalogText extends CatalogShared {
   // Viterbi pass under the final vocabulary — ch3_i backtrack rows ARE
   // the chosen pieces, so n_pieces(w) is a COUNT over their union.
   private val tx27 = Q("tx27_unigram_encode", Some(s"""
-    WITH w AS MATERIALIZED (SELECT w, count(*) AS freq FROM (
-        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 AND length(w) <= 16 GROUP BY w),
-    sub0 AS MATERIALIZED (
-      SELECT q.c.sub AS piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-        SELECT freq, unnest(flatten(list_transform(generate_series(1, length(w)), sx ->
-          list_transform(generate_series(sx, least(length(w), sx + 3)), ex ->
-            {'s': sx, 'e': ex, 'sub': substr(w, sx, ex - sx + 1)})))) AS c
-        FROM w) q
-      GROUP BY q.c.sub),
-    seed AS MATERIALIZED (SELECT piece, cnt FROM sub0 WHERE length(piece) = 1 OR cnt >= 2),
-    t0 AS MATERIALIZED (SELECT sum(cnt) AS t, count(*) AS p FROM seed),
-    p0 AS MATERIALIZED (SELECT piece, cnt,
-      CAST(round(ln((CAST(cnt + 1 AS DOUBLE)) / CAST(t + p AS DOUBLE))
-        * 1000000000.0) AS BIGINT) AS lp FROM seed, t0),
-    ${unigramRoundCtes(1)},
-    ${unigramRoundCtes(2)},
-    ${viterbiCtes(3)},
-    np AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS n_pieces FROM (
-        ${(1 to 16).map(i => s"SELECT w FROM ch3_$i").mkString(" UNION ALL ")}) u
-      GROUP BY w),
-    dt AS MATERIALIZED (SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 AND length(w) <= 16)
+    ${unigramPieceCtes("doc_id")}
     SELECT dt.doc_id, CAST(count(*) AS BIGINT) AS n_words,
       CAST(sum(length(dt.w)) AS BIGINT) AS n_chars,
       CAST(sum(np.n_pieces) AS BIGINT) AS n_pieces,
@@ -1550,24 +1388,7 @@ private[queries] trait CatalogText extends CatalogShared {
   // proof (the q105 trick). Multi-byte fallback (emoji/CJK/control
   // chars) is pinned by UnigramSpec on a synthetic vocab.
   private val tx37 = Q("tx37_unigram_roundtrip", Some(s"""
-    WITH w AS MATERIALIZED (SELECT w, count(*) AS freq FROM (
-        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 AND length(w) <= 16 GROUP BY w),
-    sub0 AS MATERIALIZED (
-      SELECT q.c.sub AS piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-        SELECT freq, unnest(flatten(list_transform(generate_series(1, length(w)), sx ->
-          list_transform(generate_series(sx, least(length(w), sx + 3)), ex ->
-            {'s': sx, 'e': ex, 'sub': substr(w, sx, ex - sx + 1)})))) AS c
-        FROM w) q
-      GROUP BY q.c.sub),
-    seed AS MATERIALIZED (SELECT piece, cnt FROM sub0 WHERE length(piece) = 1 OR cnt >= 2),
-    t0 AS MATERIALIZED (SELECT sum(cnt) AS t, count(*) AS p FROM seed),
-    p0 AS MATERIALIZED (SELECT piece, cnt,
-      CAST(round(ln((CAST(cnt + 1 AS DOUBLE)) / CAST(t + p AS DOUBLE))
-        * 1000000000.0) AS BIGINT) AS lp FROM seed, t0),
-    ${unigramRoundCtes(1)},
-    ${unigramRoundCtes(2)},
+    $unigramVocabCtes,
     kv AS MATERIALIZED (SELECT piece, lp FROM p2
       WHERE piece NOT LIKE '%w%' AND piece NOT LIKE '%j%'),
     fb AS MATERIALIZED (
@@ -1613,16 +1434,7 @@ private[queries] trait CatalogText extends CatalogShared {
   // vocab is bounded by |alphabet| + rounds, so its rank window is
   // alphabet-scale, never corpus-scale.
   private val tx38 = Q("tx38_bpe_roundtrip", Some(s"""
-    WITH w AS (SELECT w, count(*) AS freq FROM (
-        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 GROUP BY w),
-    s0 AS (SELECT w, freq,
-        array_to_string(list_transform(generate_series(1, length(w)),
-          i -> substr(w, i, 1)), chr(31)) AS seq
-      FROM w),
-    ${bpeRoundCtes(1, withMerge = true)},
-    ${bpeRoundCtes(2, withMerge = true)},
+    $bpeTwoRoundCtes,
     ${bpeRoundCtes(3, withMerge = true)},
     sy AS (SELECT w, unnest(generate_series(1, len(syms))) AS i, syms
            FROM (SELECT w, string_split(seq, chr(31)) AS syms FROM s3) t),
@@ -1689,32 +1501,7 @@ private[queries] trait CatalogText extends CatalogShared {
   // still never sees the corpus — the rollup adds one join to the
   // doc-lang table and one |langs|-row aggregate.
   private val tx35 = Q("tx35_tokenizer_fertility", Some(s"""
-    WITH w AS MATERIALIZED (SELECT w, count(*) AS freq FROM (
-        SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 AND length(w) <= 16 GROUP BY w),
-    sub0 AS MATERIALIZED (
-      SELECT q.c.sub AS piece, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-        SELECT freq, unnest(flatten(list_transform(generate_series(1, length(w)), sx ->
-          list_transform(generate_series(sx, least(length(w), sx + 3)), ex ->
-            {'s': sx, 'e': ex, 'sub': substr(w, sx, ex - sx + 1)})))) AS c
-        FROM w) q
-      GROUP BY q.c.sub),
-    seed AS MATERIALIZED (SELECT piece, cnt FROM sub0 WHERE length(piece) = 1 OR cnt >= 2),
-    t0 AS MATERIALIZED (SELECT sum(cnt) AS t, count(*) AS p FROM seed),
-    p0 AS MATERIALIZED (SELECT piece, cnt,
-      CAST(round(ln((CAST(cnt + 1 AS DOUBLE)) / CAST(t + p AS DOUBLE))
-        * 1000000000.0) AS BIGINT) AS lp FROM seed, t0),
-    ${unigramRoundCtes(1)},
-    ${unigramRoundCtes(2)},
-    ${viterbiCtes(3)},
-    np AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS n_pieces FROM (
-        ${(1 to 16).map(i => s"SELECT w FROM ch3_$i").mkString(" UNION ALL ")}) u
-      GROUP BY w),
-    dt AS MATERIALIZED (SELECT lang, w FROM (
-        SELECT lang, unnest(regexp_split_to_array(trim(text), '\\s+')) AS w
-        FROM documents WHERE length(trim(text)) > 0) t
-      WHERE length(w) > 0 AND length(w) <= 16)
+    ${unigramPieceCtes("lang")}
     SELECT dt.lang, CAST(count(*) AS BIGINT) AS n_words,
       CAST(sum(length(dt.w)) AS BIGINT) AS n_chars,
       CAST(sum(np.n_pieces) AS BIGINT) AS n_pieces,
@@ -1726,11 +1513,7 @@ private[queries] trait CatalogText extends CatalogShared {
     GROUP BY dt.lang ORDER BY dt.lang"""),
     (s, d) => {
       val docs = T(s, d, "documents")
-      val st = graft.operators.UnigramOps.encodeStats(
-        docs, "text", "doc_id",
-        vocab = SharedArtifacts.unigramVocab16(s, d),
-        maxLen = 4, maxWordLen = 16,
-        tokenTable = Some(SharedArtifacts.docTokens(s, d)))
+      val st = unigramEncodeStats(s, d, docs)
       st.join(docs.select(col("doc_id"), col("lang")), "doc_id")
         .groupBy("lang")
         .agg(sum("n_words").cast("long").as("n_words"),

@@ -220,6 +220,13 @@ object SharedArtifacts {
           DedupOps.shinglesFromTokens(col("_tk"), 3))).as("sh")), col("sh"))
     }
 
+  /** The 16-dim embedding prefix `(vec_id, v16)` that the IVF-16 index
+    * trains on and every emb16-family query assigns, searches or grades.
+    */
+  def emb16(s: SparkSession, d: String): DataFrame =
+    Tables.table(s, d, "embeddings")
+      .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
+
   /** The 16-dim trained IVF centroid table every emb16-family query
     * assigns against (dd13/dd15 semantic dedup, ann14 graph build,
     * ann15 filtered search, ann16–ann18 graph serving): kmeansFit on the
@@ -228,13 +235,11 @@ object SharedArtifacts {
     */
   def centroids16(s: SparkSession, d: String): DataFrame =
     cached(s, "cent16", d, "embeddings", "cell", 4) {
-      val emb16 = Tables.table(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
       val k = SimilarityOps.scaledCellCount(
         Tables.parquetRowCount(s, s"$d/embeddings.parquet"), targetCell = 64)
       Exec.materializeForSelfJoin(
         SimilarityOps.centroidVectors(
-          SimilarityOps.kmeansFit(emb16, "vec_id", "v16", k = k,
+          SimilarityOps.kmeansFit(emb16(s, d), "vec_id", "v16", k = k,
             iters = 2, samplePerCell = 16), Seq("cell"), "cvec"))
     }
 
@@ -260,10 +265,8 @@ object SharedArtifacts {
     */
   def knnGraph16(s: SparkSession, d: String): DataFrame =
     cached(s, "knng16", d, "embeddings", "query_id", 8) {
-      val emb16 = Tables.table(s, d, "embeddings")
-        .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
       Exec.materializeForSelfJoin(
-        SimilarityOps.knnGraph(emb16, "vec_id", "v16", centroids16(s, d),
+        SimilarityOps.knnGraph(emb16(s, d), "vec_id", "v16", centroids16(s, d),
           k = 5, nProbe = 2, roundSim = 6))
     }
 

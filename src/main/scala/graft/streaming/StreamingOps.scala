@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Structured Streaming surface.
   *
@@ -52,6 +52,20 @@ object StreamingOps {
       try body finally spark.conf.set(key, prev)
   }
 
+  /** Start `writer` as query `queryName` with its checkpoint at `ckpt`
+    * and block until its `AvailableNow` micro-batches have drained the
+    * bounded source, with the state partition count `statePartitions`.
+    */
+  private def runAvailableNow(spark: SparkSession, writer: DataStreamWriter[Row],
+      ckpt: String, queryName: String, statePartitions: Option[Int]): Unit =
+    withStatePartitions(spark, statePartitions) {
+      writer.option("checkpointLocation", ckpt)
+        .queryName(queryName)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
+
   /** Run a streaming DataFrame to completion (`AvailableNow`) through a
     * DISTRIBUTED parquet sink and read the result back. A memory sink
     * would collect every result row into driver RAM — O(result) driver
@@ -93,14 +107,7 @@ object StreamingOps {
               .write.mode("append").parquet(out)
           }
     }
-    withStatePartitions(spark, statePartitions) {
-      val q = writer
-        .option("checkpointLocation", ckpt)
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runAvailableNow(spark, writer, ckpt, queryName, statePartitions)
     val result = spark.read.parquet(out)
     if (mode == "update") {
       import org.apache.spark.sql.expressions.Window
@@ -253,7 +260,7 @@ object StreamingOps {
     // generation is this run's in-memory cursor (a durable variant would
     // persist it like streamingLatestPerKey's _bucket_gen.tsv)
     @volatile var lastGen = -1L
-    val q = stream.writeStream
+    val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val counts = hashedCounts(batch, "_b")
         val prev =
@@ -265,12 +272,7 @@ object StreamingOps {
         lastGen = id
         diagnostics.foreach(_ += id)
       }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-    withStatePartitions(spark, statePartitions) {
-      q.start().awaitTermination()
-    }
+    runAvailableNow(spark, writer, base.resolve("ckpt").toString, queryName, statePartitions)
     require(lastGen >= 0, "no micro-batch ran")
     val per = spark.read.parquet(s"$genRoot/g$lastGen")
       .join(hashedCounts(history, "_hc"), Seq("lang", "_h"), "full_outer")
@@ -366,7 +368,7 @@ object StreamingOps {
       Files.move(tmp, metaFile, StandardCopyOption.REPLACE_EXISTING,
         StandardCopyOption.ATOMIC_MOVE)
     }
-    val q = stream.writeStream
+    val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         // touched buckets in ONE stage (per-partition dedup of <=numBuckets
         // ints, no exchange) — this is the metadata pass every pruning
@@ -398,12 +400,7 @@ object StreamingOps {
         commitMeta()
         diagnostics.foreach(_ += BatchMerge(id, touched, prevPaths))
       }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-    withStatePartitions(spark, statePartitions) {
-      q.start().awaitTermination()
-    }
+    runAvailableNow(spark, writer, base.resolve("ckpt").toString, queryName, statePartitions)
     require(bucketGen.nonEmpty, "no micro-batch ran")
     // final state = union of every bucket's latest generation files
     val latest = bucketGen.toSeq.sortBy(_._1).map { case (b, g) => bucketPath(g, b) }
@@ -441,7 +438,7 @@ object StreamingOps {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)
     val out = base.resolve("scored").toString
-    val q = stream.writeStream
+    val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (!batch.isEmpty) {
           MultimodalOps.batchScore(
@@ -451,12 +448,7 @@ object StreamingOps {
           diagnostics.foreach(_ += id)
         }
       }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-    withStatePartitions(spark, statePartitions) {
-      q.start().awaitTermination()
-    }
+    runAvailableNow(spark, writer, base.resolve("ckpt").toString, queryName, statePartitions)
     spark.read.parquet(out)
   }
 
@@ -621,7 +613,7 @@ object StreamingOps {
       }
     @volatile var lastGen = -1L
     val kmv = SketchOps.kmvUdaf(64)
-    val q = stream.writeStream
+    val writer = stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val daily = SketchOps.dailyUserSketches(batch)
         val prev =
@@ -638,12 +630,7 @@ object StreamingOps {
         lastGen = id
         diagnostics.foreach(_ += id)
       }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-    withStatePartitions(spark, statePartitions) {
-      q.start().awaitTermination()
-    }
+    runAvailableNow(spark, writer, base.resolve("ckpt").toString, queryName, statePartitions)
     require(lastGen >= 0, "no micro-batch ran")
     // the stream is complete: the re-split source copy and checkpoint are
     // dead; only the final generation backs the returned (lazy) frame
@@ -698,7 +685,7 @@ object StreamingOps {
     val asg = base.resolve("assigned")
     val wLoc = Window.partitionBy("bucket").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val q = spark.readStream.schema(schema)
+    val writer = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -709,12 +696,7 @@ object StreamingOps {
           diagnostics.foreach(_ += id)
         }
       }
-      .option("checkpointLocation", base.resolve("ckpt").toString)
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-    withStatePartitions(spark, statePartitions) {
-      q.start().awaitTermination()
-    }
+    runAvailableNow(spark, writer, base.resolve("ckpt").toString, queryName, statePartitions)
     val assigned = spark.read.parquet(asg.toString)
     // the totals table is one row per input split — the window runs over
     // #splits rows, not data

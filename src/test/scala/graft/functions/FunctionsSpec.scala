@@ -66,6 +66,20 @@ class FunctionsSpec extends AnyFunSuite {
     assert(v == 23L)
   }
 
+  test("composed long dot reads its own arguments and matches the native form") {
+    val rows = Seq(
+      (Seq(3L, -1L, 4L, 127L), Seq(2L, 5L, -6L, 127L)),
+      (Seq(1L << 20, -(1L << 20)), Seq(1L << 20, 7L)),
+      (Seq.empty[Long], Seq.empty[Long]))
+      .toDF("left_codes", "right_codes")
+    val r = rows.select(
+      SimilarityOps.longDotComposed(col("left_codes"), col("right_codes")).as("composed"),
+      LongDotProduct.dotNative(spark, col("left_codes"), col("right_codes")).as("native"))
+      .as[(Long, Long)].collect()
+    assert(r.toSeq == Seq((16106L, 16106L),
+      ((1L << 40) - (7L << 20), (1L << 40) - (7L << 20)), (0L, 0L)))
+  }
+
   test("TopKAggregator keeps k best with (score desc, id asc) order") {
     val agg = new TopKAggregator(3)
     val items = Seq(

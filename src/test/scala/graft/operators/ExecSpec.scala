@@ -237,10 +237,15 @@ class ExecSpec extends AnyFunSuite {
       "graphAnnSearchByDepth" -> pinnedBy(1)(
         SimilarityOps.graphAnnSearchByDepth(corpus, "id", "vec", cents, knn,
           col("id") === 0, k = 3, nProbe = 1, maxRounds = 2)),
-      "bpeMerges" -> pinnedBy(2)(
-        BpeOps.bpeMerges(Seq("aab aab aab ab ab").toDF("text"), "text", rounds = 2)))
+      "bpeMerges" -> pinnedBy(1)(
+        BpeOps.bpeMerges(Seq("aab aab aab ab ab").toDF("text"), "text", rounds = 2)),
+      "encodedTokenCounts" -> pinnedBy(1)(
+        BpeOps.encodedTokenCounts(docs, "doc_id", "text", rounds = 2)),
+      "encodeRoundTrip" -> pinnedBy(1)(
+        BpeOps.encodeRoundTrip(docs, "text", rounds = 2)))
     assert(counts == Map("hits" -> 2, "kCenterCoreset" -> 1, "unigramFit" -> 1,
-      "graphAnnSearchByDepth" -> 1, "bpeMerges" -> 2),
+      "graphAnnSearchByDepth" -> 1, "bpeMerges" -> 1, "encodedTokenCounts" -> 1,
+      "encodeRoundTrip" -> 1),
       s"pinned handles per operator: $counts")
   }
 
